@@ -86,21 +86,31 @@ def lineage_n_batches(spark: SparkSession, out_dir: str) -> set[int]:
     return {r.n_batches for r in rows if r.n_batches is not None}
 
 
+def write_batch(df: DataFrame, out_dir: str, batch_id: int, salt_threshold: int) -> None:
+    """Extract one batch of (doc_id, spans) and overwrite its
+    ``data/batch_id=<b>`` and ``quarantine/batch_id=<b>`` dirs.
+
+    Overwrite keyed by batch id makes a replayed batch idempotent, so
+    the batch job (which commits in lineage afterwards) and the
+    streaming job (whose foreachBatch is at-least-once) share it."""
+    good, bad = split_quarantine(extract(df, salt_threshold=salt_threshold))
+    good.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
+        f"{out_dir}/data/batch_id={batch_id}"
+    )
+    bad.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
+        f"{out_dir}/quarantine/batch_id={batch_id}"
+    )
+
+
 def run_extraction(
     spark: SparkSession,
     input_df: DataFrame,
     out_dir: str,
     run_id: str = "run-0",
     n_batches: int = 8,
-    max_batches: int | None = None,
     salt_threshold: int = spec.SALT_SPAN_THRESHOLD,
-    mode: str = "map",
 ) -> dict:
-    """Run (or resume) checkpointed extraction.  Returns a summary dict.
-
-    max_batches: stop after N batches this invocation (used by the
-    resume tests to simulate a killed run; production leaves it None).
-    """
+    """Run (or resume) checkpointed extraction.  Returns a summary dict."""
     prior_nb = lineage_n_batches(spark, out_dir)
     if prior_nb and prior_nb != {n_batches}:
         # the batch dirs are keyed by pmod(hash, n_batches): a different
@@ -132,22 +142,12 @@ def run_extraction(
     todo = sorted(
         r.batch_id for r in batched.select("batch_id").distinct().collect()
     )
-    ran = 0
     summary = {"run_id": run_id, "batches_run": 0, "n_docs": 0, "n_spans": 0, "n_errors": 0}
     for b in todo:
-        if max_batches is not None and ran >= max_batches:
-            break
         t0 = time.monotonic()
         batch_df = batched.filter(F.col("batch_id") == b).select("doc_id", "spans")
-        extracted = extract(batch_df, salt_threshold=salt_threshold, mode=mode)
-        good, bad = split_quarantine(extracted)
         # data write first; lineage append second (= the commit point)
-        good.withColumn("batch_id", F.lit(b)).write.mode("overwrite").parquet(
-            f"{out_dir}/data/batch_id={b}"
-        )
-        bad.withColumn("batch_id", F.lit(b)).write.mode("overwrite").parquet(
-            f"{out_dir}/quarantine/batch_id={b}"
-        )
+        write_batch(batch_df, out_dir, b, salt_threshold)
         stats = (
             spark.read.parquet(f"{out_dir}/data/batch_id={b}")
             .agg(
@@ -179,8 +179,7 @@ def run_extraction(
         spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode("append").parquet(
             f"{out_dir}/lineage"
         )
-        ran += 1
-        summary["batches_run"] = ran
+        summary["batches_run"] += 1
         summary["n_docs"] += stats.nd
         summary["n_spans"] += int(stats.ns)
         summary["n_errors"] += n_err

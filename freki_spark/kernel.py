@@ -1,5 +1,5 @@
 """Vectorized numpy kernel for FrekiSpec v1 — the implementation that
-runs inside the Spark pandas UDFs (``freki_spark.pipeline``).
+runs inside the Spark Python UDFs (``freki_spark.pipeline``).
 
 Coded independently from ``freki_spark.oracle`` (two-implementation
 consistency check, SURVEY.md §5.2): both share only ``spec`` constants
@@ -13,7 +13,7 @@ The kernel has two entry surfaces:
 
 - ``extract_document_rows`` — whole document in, final output span
   rows out (the unsalted fast path; one call per input row inside
-  ``mapInPandas`` / ``applyInPandas``).
+  ``mapInArrow``).
 - ``split_pages`` + ``extract_group_records`` — the salted mega-doc
   path (S7): stage 1 splits raw XML into per-page pieces by regex,
   stage 2 lays out each page shard and emits *structured* span records

@@ -3,7 +3,7 @@
 Dataflow (north-star lifecycle, SURVEY.md §3.2):
 
     scan (doc_id, spans)                      -- columnar, pruned
-      ├─ size(spans) <= τ : mapInPandas(extract)        -- NO shuffle
+      ├─ size(spans) <= τ : mapInArrow(extract)         -- NO shuffle
       └─ size(spans) >  τ : salted mega-doc path (S7)
            stage 1  mapInPandas: regex page-split + media anchoring
            stage 2  groupBy(doc_id, salt).applyInPandas: per-page
@@ -16,11 +16,10 @@ Dataflow (north-star lifecycle, SURVEY.md §3.2):
 Design notes for 100 TB / 10^12-doc scale:
 
 - The input table stores one row per document, so the common path is a
-  *narrow* transformation: ``mapInPandas`` runs the numpy kernel
+  *narrow* transformation: ``mapInArrow`` runs the numpy kernel
   directly on Arrow batches with zero shuffles and zero driver
-  involvement.  ``applyInPandas over doc_id`` (mode='group') is kept
-  for exploded inputs; it computes the same thing with one hash
-  shuffle.
+  involvement.  Exploded span-per-row inputs are regrouped to one row
+  per doc at read time (``sources.jsonl_docs.read_span_jsonl``).
 - Catalyst cannot split a skewed group inside applyInPandas (AQE skew
   handling does not apply there), so mega-documents are salted
   *explicitly*: pages are sharded into at most SALT_MAX_GROUPS groups
@@ -110,23 +109,6 @@ _STAGE2_SCHEMA = T.StructType(
 # --------------------------------------------------------------------------
 
 
-def _extract_docs_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out_spans: list[list[dict]] = []
-        errors: list[str | None] = []
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            rows, err = kernel.extract_document_rows(doc_id, list(spans))
-            out_spans.append(rows)
-            errors.append(err)
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "spans": out_spans, "error": errors}
-        )
-
-
-def _extract_docs_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    return next(_extract_docs_batch(iter([pdf])))
-
-
 def _extract_docs_arrow(batches):
     """mapInArrow fast path: assemble the output span column as Arrow
     List<Struct> arrays directly — ~200 spans/doc as python dicts per
@@ -167,31 +149,10 @@ def _extract_docs_arrow(batches):
         )
 
 
-def extract_simple(df: DataFrame, mode: str = "map") -> DataFrame:
-    """Unsalted whole-document extraction.
-
-    mode='map'  : mapInPandas — narrow, zero-shuffle (input already has
-                  one row per doc_id).
-    mode='group': applyInPandas over doc_id partitions — for inputs
-                  where a doc's spans may be split across rows.
-    """
-    if mode == "map":
-        return df.mapInArrow(_extract_docs_arrow, EXTRACTED_SCHEMA)
-    if mode == "map_pandas":
-        return df.mapInPandas(_extract_docs_batch, EXTRACTED_SCHEMA)
-    if mode == "group":
-        exploded = df.select("doc_id", F.explode("spans").alias("s")).select(
-            "doc_id", "s.*"
-        )
-        regrouped = exploded.groupBy("doc_id").agg(
-            F.collect_list(F.struct("kind", "text", "media_ref", "offset")).alias(
-                "spans"
-            )
-        )
-        return regrouped.groupBy("doc_id").applyInPandas(
-            _extract_docs_group, EXTRACTED_SCHEMA
-        )
-    raise ValueError(f"unknown mode {mode!r}")
+def extract_simple(df: DataFrame) -> DataFrame:
+    """Unsalted whole-document extraction: one ``mapInArrow`` over the
+    input, narrow and shuffle-free (the input has one row per doc_id)."""
+    return df.mapInArrow(_extract_docs_arrow, EXTRACTED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -366,7 +327,12 @@ def extract_salted(df: DataFrame) -> DataFrame:
     """
     st1 = df.mapInPandas(_stage1_split, _STAGE1_SCHEMA)
     st2 = st1.groupBy("doc_id", "salt").applyInPandas(_stage2_layout, _STAGE2_SCHEMA)
-    st2 = st2.persist()
+    # stage 2 feeds both the meta fold and the records join: checkpoint
+    # it so the Python layout runs once per shard, without registering a
+    # dataset in the session cache that nothing would ever release.
+    # Local checkpoint blocks have no lineage to recompute from: losing
+    # the executor that holds them fails the job instead.
+    st2 = st2.localCheckpoint(eager=False)
 
     # one row per (doc, salt): fonts in first-appearance order + sizes
     meta = (
@@ -538,11 +504,7 @@ def extract_salted(df: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def extract(
-    df: DataFrame,
-    salt_threshold: int = spec.SALT_SPAN_THRESHOLD,
-    mode: str = "map",
-) -> DataFrame:
+def extract(df: DataFrame, salt_threshold: int = spec.SALT_SPAN_THRESHOLD) -> DataFrame:
     """Full pipeline: route each doc by input-span count (P13), extract,
     union.  Returns (doc_id, spans, error).
 
@@ -563,6 +525,10 @@ def extract(
       page structure to shard, while the narrow ``mapInArrow`` path is
       already shuffle-free — one web page per task item is the right
       unit of parallelism at 10^12 docs (html_kernel docstring).
+
+    Calling ``extract`` runs one Spark job: planning the salted path's
+    stage-2 checkpoint makes AQE materialize stage 1's shuffle, even
+    when no doc is routed there.
     """
     n = F.coalesce(F.size("spans"), F.lit(0))
     has_html = F.coalesce(
@@ -590,7 +556,7 @@ def extract(
     risky = F.coalesce(F.exists(xml_chunks, _pi_or_markup_decl), F.lit(False))
     small = df.filter((n <= salt_threshold) | risky | has_html)
     mega = df.filter((n > salt_threshold) & ~risky & ~has_html)
-    return extract_simple(small, mode=mode).unionByName(extract_salted(mega))
+    return extract_simple(small).unionByName(extract_salted(mega))
 
 
 def split_quarantine(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .. import spec
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -129,33 +131,31 @@ def stream_sessionize(spark: SparkSession, sf_dir: str, sink: str) -> DataFrame:
 
 
 def stream_extract(
-    spark: SparkSession, input_dir: str, out_dir: str, salt_threshold: int | None = None
+    spark: SparkSession,
+    input_dir: str,
+    out_dir: str,
+    salt_threshold: int = spec.SALT_SPAN_THRESHOLD,
 ) -> None:
     """Incremental extraction: the streaming analogue of the batch
     checkpoint path.  ``readStream`` over the (doc_id, spans) table;
-    every micro-batch runs the SAME ``extract`` dataflow (fast path +
-    salted mega-doc path) and appends to the data/quarantine sinks.
+    every micro-batch goes through the SAME ``checkpoint.write_batch``
+    as a batch-job batch (fast path + salted mega-doc path, then the
+    data/quarantine writes).
     Source-offset tracking in the streaming checkpoint gives resumable,
     no-reprocessing progress over an ever-growing input directory —
     at production scale this is how newly-landed documents are
     extracted continuously without re-planning the full table.
     """
-    from .. import spec
-    from ..pipeline import DOC_SCHEMA, extract, split_quarantine
-
-    tau = salt_threshold if salt_threshold is not None else spec.SALT_SPAN_THRESHOLD
+    from ..checkpoint import write_batch
+    from ..pipeline import DOC_SCHEMA
 
     def process_batch(df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: a crash between the data write
         # and the streaming-offset commit replays the micro-batch, so
-        # plain append would duplicate every doc.  Writing each batch
-        # to its own batch_id-keyed dir with overwrite makes the replay
-        # idempotent (same rule as checkpoint.py's batch dirs).
-        good, bad = split_quarantine(extract(df, salt_threshold=tau))
-        good.write.mode("overwrite").parquet(f"{out_dir}/data/batch_id={batch_id}")
-        bad.write.mode("overwrite").parquet(
-            f"{out_dir}/quarantine/batch_id={batch_id}"
-        )
+        # plain append would duplicate every doc.  write_batch
+        # overwrites the micro-batch's own batch_id-keyed dirs, which
+        # makes the replay idempotent.
+        write_batch(df, out_dir, batch_id, salt_threshold)
 
     q = (
         spark.readStream.schema(DOC_SCHEMA)

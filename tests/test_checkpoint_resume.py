@@ -6,6 +6,7 @@ side): different parallelism must yield identical spans."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from freki_spark import fixtures
 from freki_spark.checkpoint import (
@@ -21,6 +22,17 @@ from freki_spark.pipeline import extract
 @pytest.fixture(scope="module")
 def docs():
     return fixtures.random_docs(60, seed=11, prefix="ck")
+
+
+def _batch_id(n_batches: int):
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)).cast("int")
+
+
+def _killed_run(spark, df, out, run_id, n_batches, batch_ids):
+    """A run killed after committing only ``batch_ids``: the same call
+    over the input restricted to those batches."""
+    partial = df.filter(_batch_id(n_batches).isin(batch_ids))
+    return run_extraction(spark, partial, str(out), run_id=run_id, n_batches=n_batches)
 
 
 def _spans_map(df):
@@ -39,7 +51,7 @@ def test_resume_no_duplicates_and_identical(spark, docs, tmp_path):
     assert s1["batches_run"] == 6
 
     # killed run: only 2 of 6 batches commit
-    s2 = run_extraction(spark, df, str(resumed), run_id="r2a", n_batches=6, max_batches=2)
+    s2 = _killed_run(spark, df, resumed, "r2a", 6, [0, 1])
     assert s2["batches_run"] == 2
     assert committed_batches(spark, str(resumed)) != set(range(6))
 
@@ -127,21 +139,17 @@ def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
     batch dir.  Resume must not count those docs as done (they would be
     skipped while the overwrite destroys the partial data — data loss);
     it must re-run the whole batch and converge to the one-shot output."""
-    from pyspark.sql import functions as F
-
     df = docs_to_df(spark, docs)
     out = tmp_path / "partial"
 
-    s1 = run_extraction(spark, df, str(out), run_id="p1", n_batches=6, max_batches=2)
+    s1 = _killed_run(spark, df, out, "p1", 6, [0, 1])
     assert s1["batches_run"] == 2
     done = committed_batches(spark, str(out))
     victim = min(set(range(6)) - done)
 
     # simulate the kill: half of the victim batch's docs already written
     # to its data dir, with NO lineage row
-    batched = df.withColumn(
-        "batch_id", F.pmod(F.xxhash64("doc_id"), F.lit(6)).cast("int")
-    )
+    batched = df.withColumn("batch_id", _batch_id(6))
     partial = (
         extract(batched.filter(F.col("batch_id") == victim).select("doc_id", "spans"))
         .filter(F.col("error").isNull())
@@ -164,9 +172,29 @@ def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
 def test_resume_rejects_changed_n_batches(spark, docs, tmp_path):
     df = docs_to_df(spark, docs)
     out = tmp_path / "nb"
-    run_extraction(spark, df, str(out), run_id="n1", n_batches=4, max_batches=1)
+    _killed_run(spark, df, out, "n1", 4, [0])
     with pytest.raises(ValueError, match="n_batches"):
         run_extraction(spark, df, str(out), run_id="n2", n_batches=8)
+
+
+def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path):
+    """Long runs leak no cached datasets: the batch and the streaming
+    job both take the salted path here (threshold 1), and neither
+    leaves anything in the session's cache manager."""
+    from freki_spark.streaming.jobs import stream_extract
+
+    def cache_empty() -> bool:
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    df = docs_to_df(spark, docs)
+    spark.catalog.clearCache()
+    run_extraction(spark, df, str(tmp_path / "batch"), n_batches=2, salt_threshold=1)
+    assert cache_empty()
+
+    src = str(tmp_path / "in")
+    df.repartition(2).write.parquet(src)
+    stream_extract(spark, src, str(tmp_path / "stream"), salt_threshold=1)
+    assert cache_empty()
 
 
 # ---------------------------------------------------------------------------
@@ -252,8 +280,6 @@ def test_xxh64_recompute_matches_spark(spark):
     """The python XXH64 must equal Spark's xxhash64 across the length
     regimes (empty, <4, <8, 4-byte tail, 8-byte lanes, 31/32 stripe
     boundary, long) — otherwise the lineage pin below proves nothing."""
-    from pyspark.sql import functions as F
-
     vals = ["", "a", "abc", "hell", "hello123", "x" * 31, "y" * 32, "z" * 100,
             "lin-0000007"]
     df = spark.createDataFrame([(v,) for v in vals], "s string")

@@ -1,7 +1,7 @@
 """End-to-end Spark pipeline tests: distributed output must equal the
-single-node oracle goldens span-for-span — unsalted, salted, and
-applyInPandas-mode paths all converge to identical bytes
-(BASELINE.json equality invariant)."""
+single-node oracle goldens span-for-span — the unsalted (mapInArrow)
+and salted (S7) paths both converge to identical bytes (BASELINE.json
+equality invariant)."""
 
 from __future__ import annotations
 
@@ -55,11 +55,6 @@ def test_extract_salted_matches_goldens(spark, matrix_df, golden):
     # force (nearly) every doc down the salted page-parallel path;
     # output must be byte-identical to the unsalted/golden spans (S7)
     got = _collect_spans(extract(matrix_df, salt_threshold=1))
-    _assert_matches_golden(got, golden)
-
-
-def test_extract_group_mode_matches_goldens(spark, matrix_df, golden):
-    got = _collect_spans(extract_simple(matrix_df, mode="group"))
     _assert_matches_golden(got, golden)
 
 
@@ -279,7 +274,7 @@ def test_extract_fast_path_is_narrow(spark, matrix_df):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        extract_simple(matrix_df, mode="map").explain("formatted")
+        extract_simple(matrix_df).explain("formatted")
     plan = buf.getvalue()
     assert "Exchange" not in plan, plan
     assert "PythonMapInArrow" in plan or "MapInArrow" in plan, plan

@@ -67,7 +67,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from freki_spark.pipeline import extract_simple
     from freki_spark.queries import QUERIES
 
     failures: list[str] = []
@@ -130,14 +129,6 @@ def main() -> int:
         "isFinalPlan=true" in final and n_stars >= 2,
         f"codegen'd operators x{n_stars} in final adaptive plan",
     )
-
-    # 4. extraction fast path is narrow: no Exchange anywhere
-    from freki_spark import fixtures
-    from freki_spark.io import docs_to_df
-
-    docs = docs_to_df(spark, fixtures.fixture_matrix()[:4])
-    p = plan_of(extract_simple(docs, mode="map"))
-    check("narrow", "Exchange" not in p, "no Exchange in extract fast path")
 
     # 5. top-k compiles to TakeOrderedAndProject, not a global sort
     p = plan_of(QUERIES["q_sort_limit_topk"](spark, sf_dir))
