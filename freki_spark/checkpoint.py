@@ -1,20 +1,17 @@
-"""Per-partition checkpoint / lineage / resume (P12, north rule).
+"""Per-batch checkpoint / lineage / resume (P12, north rule).
 
 The checkpoint unit is a *batch*: a deterministic hash-bucket of
 doc_ids (``pmod(xxhash64(doc_id), n_batches)``) — locally a parquet
 partition directory, in production an Iceberg partition whose append
-commit is the atomic boundary.  A batch is committed iff its lineage
-row says so; data writes happen *before* the lineage append, so a
-crash mid-batch leaves an uncommitted (and overwritable) partition.
+commit is the atomic boundary.  Each batch filters the cached input
+and is extracted once by ``write_batch``, which writes ``data/`` and
+``quarantine/`` from the cached result and observes the lineage counts
+on those writes; the lineage append that follows is the commit point.
+A crash before it leaves an uncommitted (overwritable) batch.
 
-Resume = two guards, cheapest first:
-
-1. partition prune: committed batch ids are skipped outright
-   (deterministic assignment — no data read needed);
-2. ``input.join(done_docs, 'doc_id', 'left_anti')`` against the
-   outputs of COMMITTED batches only — uncommitted batch dirs may hold
-   partial files from a killed run, and trusting them would both skip
-   their docs and destroy the partial data on the re-run's overwrite.
+Resume skips committed batch ids outright (deterministic assignment,
+no data read).  Uncommitted batch dirs may hold partial files from a
+killed run; they are never trusted, only overwritten by the re-run.
 
 ``n_batches`` is recorded in lineage and pinned: the batch dirs are
 keyed by ``pmod(hash, n_batches)``, so resuming with a different value
@@ -27,12 +24,13 @@ Lineage schema follows FIXTURES.md §5.
 from __future__ import annotations
 
 import datetime as _dt
-
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import spec
 from .pipeline import extract, split_quarantine
@@ -53,6 +51,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("committed_at", T.TimestampType()),
     ]
 )
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -86,20 +85,36 @@ def lineage_n_batches(spark: SparkSession, out_dir: str) -> set[int]:
     return {r.n_batches for r in rows if r.n_batches is not None}
 
 
-def write_batch(df: DataFrame, out_dir: str, batch_id: int, salt_threshold: int) -> None:
-    """Extract one batch of (doc_id, spans) and overwrite its
-    ``data/batch_id=<b>`` and ``quarantine/batch_id=<b>`` dirs.
+def write_batch(df: DataFrame, out_dir: str, batch_id: int, salt_threshold: int) -> dict:
+    """Extract one batch of (doc_id, spans) once and overwrite its
+    ``data/batch_id=<b>`` and ``quarantine/batch_id=<b>`` dirs from the
+    cached result (Spark's write-to-several-locations pattern).  Returns
+    the batch's lineage counts by column name (``doc_id_min``,
+    ``doc_id_max``, ``n_docs``, ``n_spans``, ``n_errors``), observed on
+    the two writes themselves.
 
     Overwrite keyed by batch id makes a replayed batch idempotent, so
     the batch job (which commits in lineage afterwards) and the
     streaming job (whose foreachBatch is at-least-once) share it."""
-    good, bad = split_quarantine(extract(df, salt_threshold=salt_threshold))
-    good.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-        f"{out_dir}/data/batch_id={batch_id}"
+    extracted = extract(df, salt_threshold=salt_threshold).persist()
+    good_obs, bad_obs = Observation(), Observation()
+    good, bad = split_quarantine(extracted)
+    good = good.observe(
+        good_obs,
+        F.min("doc_id").alias("doc_id_min"),
+        F.max("doc_id").alias("doc_id_max"),
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("n_spans"),
     )
-    bad.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-        f"{out_dir}/quarantine/batch_id={batch_id}"
-    )
+    bad = bad.observe(bad_obs, F.count(F.lit(1)).alias("n_errors"))
+    try:
+        for part, sub in ((good, "data"), (bad, "quarantine")):
+            part.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
+                f"{out_dir}/{sub}/batch_id={batch_id}"
+            )
+        return {**good_obs.get, **bad_obs.get}
+    finally:
+        extracted.unpersist()
 
 
 def run_extraction(
@@ -147,42 +162,27 @@ def run_extraction(
         t0 = time.monotonic()
         batch_df = batched.filter(F.col("batch_id") == b).select("doc_id", "spans")
         # data write first; lineage append second (= the commit point)
-        write_batch(batch_df, out_dir, b, salt_threshold)
-        stats = (
-            spark.read.parquet(f"{out_dir}/data/batch_id={b}")
-            .agg(
-                F.count("*").alias("nd"),
-                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("ns"),
-                F.min("doc_id").alias("dmin"),
-                F.max("doc_id").alias("dmax"),
-            )
-            .collect()[0]
-        )
-        n_err = spark.read.parquet(f"{out_dir}/quarantine/batch_id={b}").count()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        row = [
-            (
-                run_id,
-                b,
-                n_batches,
-                b,
-                stats.dmin,
-                stats.dmax,
-                stats.nd,
-                stats.ns,
-                n_err,
-                wall_ms,
-                "committed",
-                _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-            )
-        ]
-        spark.createDataFrame(row, LINEAGE_SCHEMA).write.mode("append").parquet(
+        counts = write_batch(batch_df, out_dir, b, salt_threshold)
+        row = {
+            "run_id": run_id,
+            "batch_id": b,
+            "n_batches": n_batches,
+            "partition_id": b,
+            **counts,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
+            "status": "committed",
+            "committed_at": _dt.datetime.now(_dt.timezone.utc),
+        }
+        # an Arrow table plans a LocalRelation (a Python list plans an
+        # RDD scan) and stores the aware timestamp as its UTC instant
+        lineage = pa.Table.from_pylist([row], schema=_LINEAGE_ARROW)
+        spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
             f"{out_dir}/lineage"
         )
         summary["batches_run"] += 1
-        summary["n_docs"] += stats.nd
-        summary["n_spans"] += int(stats.ns)
-        summary["n_errors"] += n_err
+        summary["n_docs"] += counts["n_docs"]
+        summary["n_spans"] += counts["n_spans"]
+        summary["n_errors"] += counts["n_errors"]
     batched.unpersist()
     return summary
 

@@ -139,8 +139,8 @@ def stream_extract(
     """Incremental extraction: the streaming analogue of the batch
     checkpoint path.  ``readStream`` over the (doc_id, spans) table;
     every micro-batch goes through the SAME ``checkpoint.write_batch``
-    as a batch-job batch (fast path + salted mega-doc path, then the
-    data/quarantine writes).
+    as a batch-job batch (one extraction, fast path + salted mega-doc
+    path, then the data/quarantine writes from its cached result).
     Source-offset tracking in the streaming checkpoint gives resumable,
     no-reprocessing progress over an ever-growing input directory —
     at production scale this is how newly-landed documents are

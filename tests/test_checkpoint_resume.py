@@ -5,6 +5,9 @@ side): different parallelism must yield identical spans."""
 
 from __future__ import annotations
 
+import time
+from datetime import datetime, timezone
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -195,6 +198,122 @@ def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path):
     df.repartition(2).write.parquet(src)
     stream_extract(spark, src, str(tmp_path / "stream"), salt_threshold=1)
     assert cache_empty()
+
+
+def _status_store(spark):
+    """The session's SQL status store, after every queued listener
+    event has reached it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _executions(store) -> set:
+    ex = store.executionsList()
+    return {ex.apply(i).executionId() for i in range(ex.size())}
+
+
+def _map_in_arrow_rows(store, since: set) -> int:
+    """Rows out of every MapInArrow node (the narrow kernel) over the
+    SQL executions not in ``since``: each doc extracted once counts
+    once."""
+    total = 0
+    for e in _executions(store) - since:
+        values = store.executionMetrics(e)
+        nodes = store.planGraph(e).allNodes()
+        for node in (nodes.apply(i) for i in range(nodes.size())):
+            if node.name() != "MapInArrow":
+                continue
+            ms = node.metrics()
+            for m in (ms.apply(j) for j in range(ms.size())):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total += int(v.get().replace(",", ""))
+    return total
+
+
+def test_commit_extracts_each_doc_once(spark, tmp_path):
+    """One batch commit runs the kernel once per doc: the data and the
+    quarantine writes share one extraction."""
+    docs = fixtures.random_docs(20, seed=3, prefix="once")
+    docs.append(fixtures.make_doc("once-corrupt", 3, "corrupt"))
+    df = docs_to_df(spark, docs)
+    before = _executions(_status_store(spark))
+    s = run_extraction(spark, df, str(tmp_path / "once"), n_batches=3)
+    assert s["n_docs"] + s["n_errors"] == len(docs) and s["n_errors"] == 1
+    assert _map_in_arrow_rows(_status_store(spark), before) == len(docs)
+
+
+_COUNTS = ("doc_id_min", "doc_id_max", "n_docs", "n_spans", "n_errors")
+
+
+def _recomputed_lineage(spark, out: str, b: int) -> dict:
+    """The lineage counts of batch ``b`` by column name, re-read from
+    what its writes left on disk."""
+    s = spark.read.parquet(f"{out}/data/batch_id={b}").agg(
+        F.min("doc_id"),
+        F.max("doc_id"),
+        F.count("*"),
+        F.coalesce(F.sum(F.size("spans")), F.lit(0)),
+    ).first()
+    n_errors = spark.read.parquet(f"{out}/quarantine/batch_id={b}").count()
+    return dict(zip(_COUNTS, (*s, n_errors)))
+
+
+@pytest.mark.parametrize(
+    "profile, n_good, n_bad",
+    [("clean", 6, 0), ("all_corrupt", 0, 3)],
+)
+def test_observed_lineage_equals_recompute(spark, tmp_path, profile, n_good, n_bad):
+    """Lineage counts observed on the writes equal a re-read of the
+    written dirs, also when one side of the split is empty (an empty
+    good side gives null doc_id bounds and 0 spans)."""
+    docs = fixtures.random_docs(n_good, seed=4, prefix=profile)
+    docs += [fixtures.make_doc(f"{profile}-bad-{i}", 4, "corrupt") for i in range(n_bad)]
+    out = str(tmp_path / profile)
+    run_extraction(spark, docs_to_df(spark, docs), out, n_batches=1)
+    (row,) = spark.read.parquet(f"{out}/lineage").collect()
+    got = {k: row[k] for k in _COUNTS}
+    assert got == _recomputed_lineage(spark, out, 0)
+    assert (got["n_docs"], got["n_errors"]) == (n_good, n_bad)
+    if not n_good:
+        assert [got[k] for k in _COUNTS[:4]] == [None, None, 0, 0]
+
+
+def test_stream_micro_batch_observes_its_writes(spark, docs, tmp_path, monkeypatch):
+    """Inside foreachBatch the observations resolve too: every
+    micro-batch's returned counts equal a re-read of its dirs."""
+    from freki_spark import checkpoint
+    from freki_spark.streaming.jobs import stream_extract
+
+    seen, original = {}, checkpoint.write_batch
+
+    def recording(df, out_dir, batch_id, salt_threshold):
+        seen[batch_id] = original(df, out_dir, batch_id, salt_threshold)
+        return seen[batch_id]
+
+    monkeypatch.setattr(checkpoint, "write_batch", recording)
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    docs_to_df(spark, docs).repartition(8).write.parquet(src)  # two micro-batches
+    stream_extract(spark, src, out)
+    assert len(seen) == 2 and sum(v["n_docs"] + v["n_errors"] for v in seen.values()) == len(docs)
+    for b, got in seen.items():
+        assert got == _recomputed_lineage(spark, out, b)
+
+
+def test_committed_at_is_the_utc_instant_on_a_non_utc_host(spark, tmp_path, monkeypatch):
+    """``committed_at`` records the commit's instant whatever the driver
+    host's local zone is."""
+    docs = fixtures.random_docs(3, seed=6, prefix="tz")
+    out = str(tmp_path / "tz")
+    monkeypatch.setenv("TZ", "IST-5:30")  # POSIX form of UTC+05:30
+    time.tzset()
+    try:
+        run_extraction(spark, docs_to_df(spark, docs), out, n_batches=1)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    (at,) = spark.read.parquet(f"{out}/lineage").select(F.col("committed_at").cast("long")).first()
+    assert abs(at - datetime.now(timezone.utc).timestamp()) < 60
 
 
 # ---------------------------------------------------------------------------

@@ -78,6 +78,10 @@ def test_detector_fires_on_injected_regressions(con):
     # — just as unhashable to the driver's sort as LIST
     arr = con.sql("SELECT array_value(1, 2, 3) AS a")
     assert driver_unsafe_types(arr.types)
+    # a decimal literal binds as DECIMAL(2,1): fetch_df floats it while
+    # Spark's toPandas yields decimal.Decimal, so the hashes differ
+    dec = con.sql("SELECT 0.5 AS d")
+    assert driver_unsafe_types(dec.types) == ["DECIMAL(2,1)"]
     # and the fixed shapes must NOT be flagged
     ok = con.sql(
         "SELECT CAST(sum(o_orderkey) AS BIGINT) AS s, "
@@ -92,7 +96,8 @@ def test_registry_wide_oracle_dtype_sweep(con, oracles):
     offenders = oracle_dtype_offenders(con, oracles)
     assert offenders == {}, (
         f"driver-unsafe oracle output types (pandas canon floats "
-        f"HUGEINT / crashes on nested): {offenders}"
+        f"HUGEINT/DECIMAL / crashes on nested — CAST sums to BIGINT, "
+        f"decimal ratios to DOUBLE): {offenders}"
     )
 
 

@@ -14,8 +14,8 @@ reds in r4): the DRIVER canonicalizes result sets through pandas
 The old gate fetched DuckDB via ``fetchall()`` (python ints, no crash)
 and so PASSED all six ops the driver rejected.  This gate now rejects
 any oracle whose DECLARED DuckDB result type would skew or crash the
-driver's pandas path (HUGEINT / UHUGEINT / LIST / STRUCT / MAP /
-UNION), before the value comparison even runs — the engine-level
+driver's pandas path (HUGEINT / UHUGEINT / DECIMAL / LIST / STRUCT /
+MAP / UNION), before the value comparison even runs — the engine-level
 equivalent of canonicalizing through ``fetch_df()``, with no pandas
 date/NaT representation churn on the 246 already-green entries."""
 
@@ -34,9 +34,11 @@ TABLES = (
 
 def driver_unsafe_types(types) -> list:
     """DuckDB result types the driver's pandas canon mishandles:
-    HUGEINT family floats (loses integer exactness in the hash), and
-    nested types crash ``sort_values`` (unhashable).  ``types`` is the
-    relation's ``.types``; returns the offending type strings."""
+    HUGEINT family floats (loses integer exactness in the hash),
+    DECIMAL floats too (fetch_df gives float64 where Spark's toPandas
+    gives decimal.Decimal), and nested types crash ``sort_values``
+    (unhashable).  ``types`` is the relation's ``.types``; returns the
+    offending type strings."""
     bad = []
     for t in types:
         s = str(t).upper()
@@ -46,7 +48,7 @@ def driver_unsafe_types(types) -> list:
             # which fetch_df renders as numpy arrays — just as
             # unhashable to the driver's sort as LIST
             or "[" in s
-            or s.startswith(("STRUCT", "MAP", "LIST", "UNION"))
+            or s.startswith(("STRUCT", "MAP", "LIST", "UNION", "DECIMAL"))
         ):
             bad.append(s)
     return bad
@@ -151,8 +153,9 @@ def main() -> int:
                 # noise — report the type problem alone
                 print(
                     f"FAIL  {name}: driver-unsafe oracle dtypes {bad} "
-                    "(pandas canon floats HUGEINT / crashes on nested "
-                    "— CAST sums to BIGINT, scalarize arrays)"
+                    "(pandas canon floats HUGEINT/DECIMAL / crashes on "
+                    "nested — CAST sums to BIGINT, decimal ratios to "
+                    "DOUBLE, scalarize arrays)"
                 )
                 n_fail += 1
                 continue
