@@ -3,8 +3,10 @@
 Dataflow (north-star lifecycle, SURVEY.md §3.2):
 
     scan (doc_id, spans)                      -- columnar, pruned
-      ├─ size(spans) <= τ : mapInArrow(extract)         -- NO shuffle
-      └─ size(spans) >  τ : salted mega-doc path (S7)
+    route: salted = size(spans) > τ, no risky markup, no html span
+      ├─ not salted : mapInArrow(extract)               -- NO shuffle
+      └─ salted     : salted mega-doc path (S7), planned only when
+                      the routing check finds a salted doc
            stage 1  mapInPandas: regex page-split + media anchoring
            stage 2  groupBy(doc_id, salt).applyInPandas: per-page
                     layout with group-local numbering   -- 1 shuffle
@@ -526,37 +528,59 @@ def extract(df: DataFrame, salt_threshold: int = spec.SALT_SPAN_THRESHOLD) -> Da
       already shuffle-free — one web page per task item is the right
       unit of parallelism at 10^12 docs (html_kernel docstring).
 
-    Calling ``extract`` runs one Spark job: planning the salted path's
-    stage-2 checkpoint makes AQE materialize stage 1's shuffle, even
-    when no doc is routed there.
+    Calling ``extract`` runs the routing check: ``isEmpty`` on the
+    salted side, a ``limit(1)`` query that stops at the first salted
+    doc and reads every row only when there is none.  S7 is planned
+    only when the check finds one (planning its stage-2 checkpoint
+    makes AQE run stage 1 and its shuffle).  Otherwise every doc is
+    routed unsalted, and ``extract_simple`` takes the whole input.  The
+    input must be a static snapshot: a cached batch, a streaming
+    micro-batch or files.
     """
     n = F.coalesce(F.size("spans"), F.lit(0))
     has_html = F.coalesce(
         F.exists("spans", lambda s: s["kind"] == F.lit(spec.KIND_HTML)),
         F.lit(False),
     )
-    xml_chunks = F.filter("spans", lambda s: s["kind"].isin(*spec.XML_KINDS))
-    minoff = F.array_min(F.transform(xml_chunks, lambda s: s["offset"]))
+    salted = (n > salt_threshold) & ~_risky_markup("spans") & ~has_html
+    mega = df.filter(salted)
+    if mega.isEmpty():
+        return extract_simple(df)
+    return extract_simple(df.filter(~salted)).unionByName(extract_salted(mega))
 
-    def _pi_or_markup_decl(s: Column) -> Column:
+
+def _risky_markup(spans: str) -> Column:
+    """True when a doc's XML chunks may hold a comment, CDATA, DTD or PI.
+
+    Every lambda reads only its own element, so the check is O(spans)
+    per doc: a lambda that reads a per-doc aggregate (such as the head
+    chunk's offset) re-evaluates it for every element."""
+    xml_chunks = F.filter(spans, lambda s: s["kind"].isin(*spec.XML_KINDS))
+
+    def _decl(s: Column) -> Column:
         # the only exempt '<?' is a true XML declaration: '<?xml' +
         # whitespace at byte 0 of the first XML chunk ('xml' is a
         # forbidden PI target, so this prefix is unambiguous); a
         # document-leading PI like '<?pi <Page ?>' must still flag
-        head_pi = F.when(
-            (s["offset"] == minoff)
-            & s["text"].rlike(r"^<\?xml[ \t\r\n]"),
-            F.locate("<?", s["text"], 2) > 0,
-        ).otherwise(F.locate("<?", s["text"], 1) > 0)
+        return F.substring(s["text"], 1, 6).isin("<?xml ", "<?xml\t", "<?xml\r", "<?xml\n")
+
+    def _markup(s: Column) -> Column:
+        pi = F.when(_decl(s), F.locate("<?", s["text"], 2) > 0).otherwise(
+            F.locate("<?", s["text"], 1) > 0
+        )
         # a chunk ending in '<' may complete to '<!'/'<?' in the NEXT
         # chunk (chunk boundaries are arbitrary byte splits) — the
         # per-chunk contains() can't see across, so flag it risky too
-        return s["text"].contains("<!") | head_pi | s["text"].endswith("<")
+        return s["text"].contains("<!") | pi | s["text"].endswith("<")
 
-    risky = F.coalesce(F.exists(xml_chunks, _pi_or_markup_decl), F.lit(False))
-    small = df.filter((n <= salt_threshold) | risky | has_html)
-    mega = df.filter((n > salt_threshold) & ~risky & ~has_html)
-    return extract_simple(small).unionByName(extract_salted(mega))
+    # a declaration is exempt only in a head chunk (the lowest offset):
+    # one at a null or higher offset flags
+    decl_offsets = F.transform(F.filter(xml_chunks, _decl), lambda s: s["offset"])
+    head = F.array_min(F.transform(xml_chunks, lambda s: s["offset"]))
+    late_decl = F.exists(decl_offsets, lambda o: o.isNull()) | (
+        F.array_max(decl_offsets) > head
+    )
+    return F.coalesce(F.exists(xml_chunks, _markup) | late_decl, F.lit(False))
 
 
 def split_quarantine(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -11,7 +11,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from freki_spark import fixtures
+from freki_spark import fixtures, spec
 from freki_spark.checkpoint import (
     committed_batches,
     metrics,
@@ -20,6 +20,7 @@ from freki_spark.checkpoint import (
 )
 from freki_spark.io import docs_to_df
 from freki_spark.pipeline import extract
+from sql_plans import executions, node_names_run_by, plan_nodes, status_store
 
 
 @pytest.fixture(scope="module")
@@ -200,34 +201,20 @@ def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path):
     assert cache_empty()
 
 
-def _status_store(spark):
-    """The session's SQL status store, after every queued listener
-    event has reached it."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return spark._jsparkSession.sharedState().statusStore()
-
-
-def _executions(store) -> set:
-    ex = store.executionsList()
-    return {ex.apply(i).executionId() for i in range(ex.size())}
-
-
 def _map_in_arrow_rows(store, since: set) -> int:
     """Rows out of every MapInArrow node (the narrow kernel) over the
     SQL executions not in ``since``: each doc extracted once counts
     once."""
     total = 0
-    for e in _executions(store) - since:
+    for e, node in plan_nodes(store, since):
+        if node.name() != "MapInArrow":
+            continue
         values = store.executionMetrics(e)
-        nodes = store.planGraph(e).allNodes()
-        for node in (nodes.apply(i) for i in range(nodes.size())):
-            if node.name() != "MapInArrow":
-                continue
-            ms = node.metrics()
-            for m in (ms.apply(j) for j in range(ms.size())):
-                v = values.get(m.accumulatorId())
-                if m.name() == "number of output rows" and v.isDefined():
-                    total += int(v.get().replace(",", ""))
+        ms = node.metrics()
+        for m in (ms.apply(j) for j in range(ms.size())):
+            v = values.get(m.accumulatorId())
+            if m.name() == "number of output rows" and v.isDefined():
+                total += int(v.get().replace(",", ""))
     return total
 
 
@@ -237,10 +224,22 @@ def test_commit_extracts_each_doc_once(spark, tmp_path):
     docs = fixtures.random_docs(20, seed=3, prefix="once")
     docs.append(fixtures.make_doc("once-corrupt", 3, "corrupt"))
     df = docs_to_df(spark, docs)
-    before = _executions(_status_store(spark))
+    before = executions(status_store(spark))
     s = run_extraction(spark, df, str(tmp_path / "once"), n_batches=3)
     assert s["n_docs"] + s["n_errors"] == len(docs) and s["n_errors"] == 1
-    assert _map_in_arrow_rows(_status_store(spark), before) == len(docs)
+    assert _map_in_arrow_rows(status_store(spark), before) == len(docs)
+
+
+def test_commit_without_mega_doc_plans_no_salted_path(spark, docs, tmp_path):
+    """With no doc above the salting threshold, a run plans only the
+    narrow kernel: no S7 stage runs, not even over empty input."""
+    assert max(len(d["spans"]) for d in docs) <= spec.SALT_SPAN_THRESHOLD
+    df = docs_to_df(spark, docs)
+    ran = node_names_run_by(
+        spark, lambda: run_extraction(spark, df, str(tmp_path / "narrow"), n_batches=2)
+    )
+    assert "MapInArrow" in ran
+    assert not ran & {"MapInPandas", "FlatMapGroupsInPandas"}, ran
 
 
 _COUNTS = ("doc_id_min", "doc_id_max", "n_docs", "n_spans", "n_errors")

@@ -30,6 +30,7 @@ sys.path.insert(
     ),
 )
 
+from driver_sim import frame_canon  # noqa: E402
 from verify_queries import (  # noqa: E402
     create_views,
     driver_unsafe_types,
@@ -88,6 +89,19 @@ def test_detector_fires_on_injected_regressions(con):
         "array_to_string([1, 2], ',') AS ids_csv FROM orders"
     )
     assert driver_unsafe_types(ok.types) == []
+
+
+def test_driver_sim_canonicalizes_temporal_cells_alike(spark, con):
+    """A DATE reaches pandas as datetime.date from Spark's toPandas but
+    as a midnight Timestamp from DuckDB's .df(); the simulator's canon
+    must render both the same, and keep a timestamp's time of day."""
+    sql = "SELECT DATE '2026-08-21' AS d, TIMESTAMP '2026-08-21 13:05:00.5' AS t"
+    sp = spark.sql(sql).toPandas()
+    du = con.sql(sql).df()
+    assert frame_canon(sp) == frame_canon(du) == (
+        ["d", "t"],
+        [("2026-08-21", "2026-08-21T13:05:00.500000")],
+    )
 
 
 def test_registry_wide_oracle_dtype_sweep(con, oracles):

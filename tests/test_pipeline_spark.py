@@ -9,10 +9,13 @@ import json
 import os
 
 import pytest
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from freki_spark import fixtures
 from freki_spark.io import docs_to_df
 from freki_spark.pipeline import extract, extract_simple, split_quarantine
+from sql_plans import node_names_run_by
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "fixture_goldens.json")
 
@@ -278,6 +281,92 @@ def test_extract_fast_path_is_narrow(spark, matrix_df):
     plan = buf.getvalue()
     assert "Exchange" not in plan, plan
     assert "PythonMapInArrow" in plan or "MapInArrow" in plan, plan
+
+
+def test_extract_without_mega_doc_plans_no_salted_path(spark, matrix_df):
+    """At the production threshold no fixture doc is salted, so the
+    call and its output plan no S7 stage and no shuffle."""
+    ran = node_names_run_by(spark, lambda: extract(matrix_df).collect())
+    assert "MapInArrow" in ran
+    assert not ran & {"MapInPandas", "FlatMapGroupsInPandas", "Exchange"}, ran
+
+
+def test_extract_with_mega_doc_plans_salted_path(spark, matrix_df):
+    """The salted golden test really runs S7: at threshold 1 stage 2's
+    grouped map is planned."""
+    ran = node_names_run_by(spark, lambda: extract(matrix_df, salt_threshold=1).collect())
+    assert "FlatMapGroupsInPandas" in ran
+
+
+def _risky_reference(spans: str) -> Column:
+    """The risky-markup check in its direct form: the lambda compares
+    each chunk's offset with the head offset, an aggregate over every
+    chunk, so it costs O(chunks x spans) per doc."""
+    from freki_spark import spec
+
+    xml_chunks = F.filter(spans, lambda s: s["kind"].isin(*spec.XML_KINDS))
+    minoff = F.array_min(F.transform(xml_chunks, lambda s: s["offset"]))
+
+    def _pi_or_markup_decl(s):
+        head_pi = F.when(
+            (s["offset"] == minoff) & s["text"].rlike(r"^<\?xml[ \t\r\n]"),
+            F.locate("<?", s["text"], 2) > 0,
+        ).otherwise(F.locate("<?", s["text"], 1) > 0)
+        return s["text"].contains("<!") | head_pi | s["text"].endswith("<")
+
+    return F.coalesce(F.exists(xml_chunks, _pi_or_markup_decl), F.lit(False))
+
+
+def test_risky_markup_matches_reference_form(spark):
+    """The O(spans) router check flags exactly the docs the direct form
+    flags: the fixture matrix plus hand-made edge docs."""
+    from freki_spark.pipeline import DOC_SCHEMA, _risky_markup
+
+    decl = '<?xml version="1.0"?>\n'
+
+    def doc(want, doc_id, *chunks, kind="tetml"):
+        spans = [
+            {"kind": kind, "text": t, "media_ref": "", "offset": o} for t, o in chunks
+        ]
+        return want, (doc_id, spans)
+
+    media = {"kind": "media", "text": "fig", "media_ref": "m:0", "offset": 0}
+    want, edges = zip(
+        doc(False, "decl-head", (decl + "<TET>", 0), ("<Page/></TET>", 1)),
+        doc(False, "decl-head-cr", ('<?xml\rversion="1.0"?><TET>', 0), ("</TET>", 1)),
+        doc(False, "decl-head-unsorted", ("<Page/></TET>", 3), (decl + "<TET>", 1)),
+        doc(False, "decl-head-twice", (decl + "<TET>", 0), (decl + "</TET>", 0)),
+        doc(True, "decl-head-then-pi", (decl + "<?pi x?><TET>", 0), ("</TET>", 1)),
+        doc(True, "decl-late", ("<TET>", 0), (decl + "</TET>", 1)),
+        doc(True, "decl-late-listed-first", (decl + "</TET>", 5), ("<TET>", 2)),
+        doc(True, "decl-null-offset", ("<TET>", 0), (decl + "</TET>", None)),
+        doc(True, "stylesheet-pi", ('<?xml-stylesheet href="a"?><TET>', 0), ("</TET>", 1)),
+        doc(True, "leading-pi", ('<?pi <Page number="9"> ?><TET>', 0), ("</TET>", 1)),
+        doc(True, "ends-in-lt", ("<TET><", 0), ("Page/></TET>", 1)),
+        doc(True, "split-bang", ("<TET><Page/><", 0), ("!-- <Page/> --></TET>", 1)),
+        doc(True, "comment", ("<TET><!-- c -->", 0), ("</TET>", 1)),
+        doc(False, "null-text", (None, 0), ("<TET></TET>", 1)),
+        doc(False, "html-only", ("<!DOCTYPE html><p>x</p>", 0), kind="html"),
+        (False, ("media-only", [media])),
+        (False, ("empty", [])),
+        (False, ("null", None)),
+    )
+    matrix = [(d["doc_id"], d["spans"]) for d in fixtures.fixture_matrix()]
+    df = spark.createDataFrame([*matrix, *edges], DOC_SCHEMA)
+    got = {
+        r.doc_id: (r.new, r.ref)
+        for r in df.select(
+            "doc_id",
+            _risky_markup("spans").alias("new"),
+            _risky_reference("spans").alias("ref"),
+        ).collect()
+    }
+    assert all(new == ref for new, ref in got.values()), {
+        k: v for k, v in got.items() if v[0] != v[1]
+    }
+    assert [got[doc_id][0] for doc_id, _ in edges] == list(want)
+    # the matrix holds both outcomes, so the comparison has teeth
+    assert {got[doc_id][0] for doc_id, _ in matrix} == {True, False}
 
 
 def test_html_dialect_through_pipeline(spark):

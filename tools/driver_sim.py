@@ -11,7 +11,8 @@ gate passed them.  This tool closes the remaining representation gap:
 Spark results go through ``toPandas()``, oracle results through
 ``.df()``, every cell is canonicalized from its PANDAS representation
 (numpy scalars unwrapped, floats by exact repr — the BM25 1-ulp
-lesson says bit-equality is the bar — NaN/None/NaT as NULL), columns
+lesson says bit-equality is the bar — NaN/None/NaT as NULL, dates and
+timestamps by isoformat with a naive midnight as its date), columns
 aligned by sorted name, rows sorted, then compared.
 
 Usage: python tools/driver_sim.py [sf_dir] [n_window] [name ...]
@@ -24,6 +25,7 @@ argument is treated as the first name).
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 import os
 import sys
@@ -53,6 +55,14 @@ def cell(v):
         return repr(v + 0.0)
     if isinstance(v, bool):
         return str(int(v))
+    if isinstance(v, dt.date):  # datetime and pd.Timestamp included
+        # a DATE column reaches pandas as datetime.date from Spark's
+        # toPandas but as a midnight Timestamp from DuckDB's .df(), so
+        # a naive midnight renders as its date
+        if isinstance(v, dt.datetime) and v.tzinfo is None:
+            if v == dt.datetime.combine(v.date(), dt.time()):
+                v = v.date()
+        return v.isoformat()
     return str(v)
 
 
