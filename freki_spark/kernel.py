@@ -17,8 +17,9 @@ The kernel has two entry surfaces:
 - ``split_pages`` + ``extract_group_records`` — the salted mega-doc
   path (S7): stage 1 splits raw XML into per-page pieces by regex,
   stage 2 lays out each page shard and emits *structured* span records
-  with group-local numbering; global renumbering happens back in Spark
-  (see pipeline.py).
+  with group-local numbering; stage 3 shifts them to doc-global
+  numbering and renders them with ``finalize_records``, the serializer
+  the unsalted path uses too (see pipeline.py).
 
 Reference parity targets (pvk444/freki [U], mount empty at build time):
 freki/analyzers/{tetml,pdfminer}.py (S1), analyzers/base.py (S2/S3),
@@ -512,7 +513,7 @@ def segment_blocks(
 
 
 # --------------------------------------------------------------------------
-# structured span records (shared by unsalted finalize and salted stage 2)
+# structured span records (layout and finalize_records, shared by both paths)
 # --------------------------------------------------------------------------
 
 
@@ -583,8 +584,10 @@ def layout_page(page: PageTokens, records: list, line_no: int, seq: int, doc_fon
 
 def finalize_records(doc_id: str, records: list, doc_fonts: dict) -> list[dict]:
     """Render structured records into final (kind,text,media_ref,offset)
-    spans — the unsalted path's serializer (global numbering is already
-    group-local == doc-local here)."""
+    spans — the serializer of both paths.  ``records`` carry doc-global
+    line numbers in doc order (the salted path renumbers its shards
+    first), so each span's offset is its position; ``doc_fonts`` keys
+    are the doc's fonts in first-appearance order."""
     fid = {fk: i for i, fk in enumerate(doc_fonts)}
     out = []
     for off, r in enumerate(records):

@@ -10,9 +10,9 @@ Dataflow (north-star lifecycle, SURVEY.md §3.2):
            stage 1  mapInPandas: regex page-split + media anchoring
            stage 2  groupBy(doc_id, salt).applyInPandas: per-page
                     layout with group-local numbering   -- 1 shuffle
-           stage 3  pure Spark: per-doc meta fold (bases + font ids
-                    from one __meta__ row per shard) + JVM-side
-                    string rendering + per-doc reassembly
+           stage 3  groupBy(doc_id).applyInPandas: renumber the
+                    shards from their __meta__ rows and render them
+                    with kernel.finalize_records        -- 1 shuffle
     union → (doc_id, spans, error)
 
 Design notes for 100 TB / 10^12-doc scale:
@@ -25,9 +25,9 @@ Design notes for 100 TB / 10^12-doc scale:
 - Catalyst cannot split a skewed group inside applyInPandas (AQE skew
   handling does not apply there), so mega-documents are salted
   *explicitly*: pages are sharded into at most SALT_MAX_GROUPS groups
-  per doc and renumbered afterwards with broadcast-joined window bases
-  — all rendering in stage 3 is JVM-side concat (whole-stage codegen),
-  no Python.
+  per doc and laid out in parallel; one cheap per-doc pass then shifts
+  each shard's line numbers by the lines of the shards before it and
+  renders the spans through the narrow path's own serializer.
 - Corrupt XML never fails a task: quarantined docs come back with
   spans=[] and a non-null error column (split with
   ``split_quarantine``).
@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
+from itertools import accumulate
 
 import pandas as pd
 
@@ -79,7 +80,7 @@ _STAGE1_SCHEMA = T.StructType(
         T.StructField("salt", T.IntegerType()),
         T.StructField("page_pos", T.IntegerType()),
         T.StructField("rank", T.IntegerType()),
-        T.StructField("item_type", T.StringType()),  # page | media | error
+        T.StructField("item_type", T.StringType()),  # page | media | error | empty
         T.StructField("payload", T.StringType()),
         T.StructField("media_ref", T.StringType()),
         T.StructField("dialect", T.StringType()),
@@ -91,7 +92,7 @@ _STAGE2_SCHEMA = T.StructType(
         T.StructField("doc_id", T.StringType()),
         T.StructField("salt", T.IntegerType()),
         T.StructField("seq_l", T.LongType()),
-        T.StructField("kind", T.StringType()),  # block|line|media|__font__|__error__
+        T.StructField("kind", T.StringType()),  # block|line|media|__meta__
         T.StructField("page", T.IntegerType()),
         T.StructField("block_k", T.IntegerType()),
         T.StructField("line_start_l", T.LongType()),
@@ -162,72 +163,69 @@ def extract_simple(df: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per mega-doc: well-formedness check (same expat parser the
-    kernel's acceptance uses — the salted path must quarantine exactly
-    the docs the unsalted path quarantines), then regex page split +
-    media→page anchoring (no tree parse of the whole doc)."""
+def _split_doc(doc_id: str, spans) -> list[tuple]:
+    """Stage-1 rows of one mega-doc: well-formedness check (same expat
+    parser the kernel's acceptance uses — the salted path must
+    quarantine exactly the docs the unsalted path quarantines), then
+    regex page split + media→page anchoring (no tree parse of the whole
+    doc)."""
     import xml.etree.ElementTree as ET
 
     from . import fastparse
 
+    spans = sorted(list(spans), key=lambda s: s["offset"])
+    chunks = [s for s in spans if s["kind"] in spec.XML_KINDS]
+    media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
+    if not chunks:
+        return [
+            (doc_id, 0, -1, j, "media", m["text"], m["media_ref"], "") for j, m in enumerate(media)
+        ]
+    dialect = chunks[0]["kind"]
+    xml = "".join(c["text"] for c in chunks)
+    try:
+        fastparse.validate(xml)
+    except ET.ParseError as e:
+        return [(doc_id, 0, 0, 0, "error", f"xml-parse-error: {e}", "", dialect)]
+    pieces, starts = kernel.split_pages(xml, dialect)
+    if not pieces:
+        # valid XML with zero page elements: the kernel emits just the
+        # media spans (all anchored to the prologue) — mirror that,
+        # never quarantine
+        return [
+            (doc_id, 0, -1, j, "media", m["text"], m["media_ref"], dialect)
+            for j, m in enumerate(media)
+        ]
+    n_groups = min(spec.SALT_MAX_GROUPS, len(pieces))
+    per_group = math.ceil(len(pieces) / n_groups)
+    mpos = kernel.media_page_positions(
+        [c["offset"] for c in chunks],
+        [len(c["text"]) for c in chunks],
+        starts,
+        [m["offset"] for m in media],
+    )
+    decls = kernel.collect_xmlns(xml[: starts[0]])
+    rows = []
+    for p, piece in enumerate(pieces):
+        piece = kernel.repair_page_piece(piece, dialect, decls)
+        rows.append((doc_id, p // per_group, p, 0, "page", piece, "", dialect))
+    ranks: dict[int, int] = {}
+    for m, p in zip(media, mpos):
+        salt = 0 if p < 0 else min(p, len(pieces) - 1) // per_group
+        r = ranks.get(p, 0) + 1
+        ranks[p] = r
+        rows.append((doc_id, salt, p, r, "media", m["text"], m["media_ref"], dialect))
+    return rows
+
+
+def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Per mega-doc: ``_split_doc``.  A doc that yields no item (no page
+    and no media) still emits one ``empty`` marker row, which stage 2
+    turns into a bare ``__meta__`` row, so the doc reaches stage 3 and
+    comes out as (doc_id, [], null) like on the unsalted path."""
     for pdf in it:
         rows: list[tuple] = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            spans = sorted(list(spans), key=lambda s: s["offset"])
-            chunks = [s for s in spans if s["kind"] in spec.XML_KINDS]
-            media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
-            if not chunks:
-                for j, m in enumerate(media):
-                    rows.append((doc_id, 0, -1, j, "media", m["text"], m["media_ref"], ""))
-                continue
-            dialect = chunks[0]["kind"]
-            xml = "".join(c["text"] for c in chunks)
-            try:
-                fastparse.validate(xml)
-            except ET.ParseError as e:
-                rows.append(
-                    (doc_id, 0, 0, 0, "error", f"xml-parse-error: {e}", "", dialect)
-                )
-                continue
-            pieces, starts = kernel.split_pages(xml, dialect)
-            if not pieces:
-                # valid XML with zero page elements: the kernel emits
-                # just the media spans (all anchored to the prologue) —
-                # mirror that, never quarantine
-                for j, m in enumerate(media):
-                    rows.append(
-                        (doc_id, 0, -1, j, "media", m["text"], m["media_ref"], dialect)
-                    )
-                continue
-            n_groups = min(spec.SALT_MAX_GROUPS, len(pieces))
-            per_group = math.ceil(len(pieces) / n_groups)
-            mpos = kernel.media_page_positions(
-                [c["offset"] for c in chunks],
-                [len(c["text"]) for c in chunks],
-                starts,
-                [m["offset"] for m in media],
-            )
-            decls = kernel.collect_xmlns(xml[: starts[0]])
-            for p, piece in enumerate(pieces):
-                rows.append(
-                    (
-                        doc_id,
-                        p // per_group,
-                        p,
-                        0,
-                        "page",
-                        kernel.repair_page_piece(piece, dialect, decls),
-                        "",
-                        dialect,
-                    )
-                )
-            ranks: dict[int, int] = {}
-            for m, p in zip(media, mpos):
-                salt = 0 if p < 0 else min(p, len(pieces) - 1) // per_group
-                r = ranks.get(p, 0) + 1
-                ranks[p] = r
-                rows.append((doc_id, salt, p, r, "media", m["text"], m["media_ref"], dialect))
+            rows += _split_doc(doc_id, spans) or [(doc_id, 0, -1, 0, "empty", "", "", "")]
         yield pd.DataFrame(rows, columns=[f.name for f in _STAGE1_SCHEMA.fields])
 
 
@@ -264,6 +262,7 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
         for it, pl, mr, pp, rk in zip(
             pdf["item_type"], pdf["payload"], pdf["media_ref"], pdf["page_pos"], pdf["rank"]
         )
+        if it != "empty"
     ]
     records, doc_fonts, n_lines, n_spans, err = kernel.extract_group_records(
         doc_id, items, dialect
@@ -296,209 +295,57 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=cols)
 
 
-def _font_label_col(font_map: Column, key: Column) -> Column:
-    """JVM-side equivalent of grammar.font_label."""
-    return F.concat(
-        F.lit("F"),
-        F.element_at(font_map, key).cast("string"),
-        F.lit("-"),
-        F.substring_index(key, spec.FONT_KEY_SEP, -1),
-    )
+def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per doc: renumber the stage-2 shards and render them.
+
+    A shard's lines are numbered from 1 and its records' ``seq`` runs
+    0..n_spans-1, so in salt order each shard's lines shift by the
+    lines of the shards before it and the offsets are the records'
+    positions.  The doc's font ids follow the shards' first-appearance
+    lists concatenated in salt order, first occurrences kept: shards are
+    disjoint, ordered slices of the doc.  Rendering is the narrow path's
+    ``kernel.finalize_records``.  Rows arrive in no particular order."""
+    doc_id = pdf["doc_id"].iloc[0]
+    is_meta = pdf["kind"] == "__meta__"
+    meta = pdf[is_meta].sort_values("salt")
+    errors = [e for e in meta["body"] if e]
+    if errors:
+        return pd.DataFrame([[doc_id, [], errors[0]]], columns=EXTRACTED_SCHEMA.names)
+    line_base = dict(zip(meta["salt"].tolist(), accumulate(meta["n_lines"].tolist(), initial=0)))
+    doc_fonts = dict.fromkeys(k for keys in meta["fonts_keys"] for k in keys)
+    recs = pdf[~is_meta].sort_values(["salt", "seq_l"])
+    base = recs["salt"].map(line_base)
+    # only the fields finalize_records reads: every record's dict is
+    # held at once, so each extra key costs memory on a mega-doc
+    records = recs[["kind", "page", "block_k", "fonts_keys", "body", "media_ref"]].assign(
+        line_start=recs["line_start_l"] + base,
+        line_end=recs["line_end_l"] + base,
+        line_no=recs["line_no_l"] + base,
+    ).to_dict("records")
+    spans = kernel.finalize_records(doc_id, records, doc_fonts)
+    return pd.DataFrame([[doc_id, spans, None]], columns=EXTRACTED_SCHEMA.names)
 
 
 def extract_salted(df: DataFrame) -> DataFrame:
-    """Mega-document path: page-parallel layout + distributed renumber.
+    """Mega-document path: page-parallel layout, then a per-doc renumber.
 
-    Plan shape (3 shuffles total, all over per-doc metadata or rendered
+    Plan shape (2 shuffles, over page pieces and then over layout
     records — never raw XML bytes twice):
 
-      1. ``groupBy(doc_id, salt).applyInPandas`` — the page-shard layout;
-      2. ``groupBy(doc_id)`` over the one ``__meta__`` row per shard —
-         builds each doc's salt→(line_base, span_base) map, global
-         font-id map (first-appearance order = per-shard order
-         concatenated in salt order), and quarantine error, all with
-         JVM array expressions (no window functions);
-      3. records ⋈ meta on doc_id (AQE picks broadcast vs shuffle — the
-         meta side grows with the number of mega-docs, so it must NOT
-         be force-broadcast at 10^12-doc scale) + the final per-doc
-         assembly, which reuses the same hash partitioning.
-
-    All line/header rendering stays JVM-side (whole-stage codegen) so
-    the per-span work fans out with executors; Python only ever touches
-    a page shard.
+      1. ``mapInPandas`` — page split + media anchoring per doc;
+      2. ``groupBy(doc_id, salt).applyInPandas`` — the page-shard layout,
+         the work that fans out over executors;
+      3. ``groupBy(doc_id).applyInPandas`` — one task per doc renumbers
+         its shards and renders the spans; a doc whose shards hold no
+         record, or carry an error, comes out of the same group.
     """
-    st1 = df.mapInPandas(_stage1_split, _STAGE1_SCHEMA)
-    st2 = st1.groupBy("doc_id", "salt").applyInPandas(_stage2_layout, _STAGE2_SCHEMA)
-    # stage 2 feeds both the meta fold and the records join: checkpoint
-    # it so the Python layout runs once per shard, without registering a
-    # dataset in the session cache that nothing would ever release.
-    # Local checkpoint blocks have no lineage to recompute from: losing
-    # the executor that holds them fails the job instead.
-    st2 = st2.localCheckpoint(eager=False)
-
-    # one row per (doc, salt): fonts in first-appearance order + sizes
-    meta = (
-        st2.filter(F.col("kind") == "__meta__")
+    return (
+        df.mapInPandas(_stage1_split, _STAGE1_SCHEMA)
+        .groupBy("doc_id", "salt")
+        .applyInPandas(_stage2_layout, _STAGE2_SCHEMA)
         .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("salt").alias("salt"),
-                        F.col("n_lines").alias("nl"),
-                        F.col("n_spans").alias("ns"),
-                        F.col("fonts_keys").alias("fks"),
-                        F.col("body").alias("err"),
-                    )
-                )
-            ).alias("ms")
-        )
+        .applyInPandas(_stage3_assemble, EXTRACTED_SCHEMA)
     )
-
-    # exclusive running (line, span) bases per salt, via one array fold
-    zero = F.struct(
-        F.expr(
-            "cast(array() as array<struct<salt:int,lb:bigint,sb:bigint>>)"
-        ).alias("arr"),
-        F.lit(0).cast("long").alias("l"),
-        F.lit(0).cast("long").alias("s"),
-    )
-
-    def _acc_bases(acc: Column, m: Column) -> Column:
-        return F.struct(
-            F.concat(
-                acc["arr"],
-                F.array(
-                    F.struct(
-                        m["salt"].alias("salt"),
-                        acc["l"].alias("lb"),
-                        acc["s"].alias("sb"),
-                    )
-                ),
-            ).alias("arr"),
-            (acc["l"] + m["nl"]).alias("l"),
-            (acc["s"] + m["ns"]).alias("s"),
-        )
-
-    bases_map = F.map_from_entries(
-        F.transform(
-            F.aggregate("ms", zero, _acc_bases)["arr"],
-            lambda x: F.struct(
-                x["salt"].alias("key"),
-                F.struct(x["lb"].alias("lb"), x["sb"].alias("sb")).alias("value"),
-            ),
-        )
-    )
-    # global font ids: shards are disjoint, ordered slices of the doc,
-    # so concatenating per-shard first-appearance lists in salt order
-    # and keeping first occurrences IS global first-appearance order
-    fonts_arr = F.array_distinct(F.flatten(F.transform("ms", lambda m: m["fks"])))
-    font_map = F.map_from_entries(
-        F.transform(fonts_arr, lambda k, i: F.struct(k.alias("key"), i.alias("value")))
-    )
-    errs_arr = F.filter("ms", lambda m: m["err"] != F.lit(""))
-    error = F.when(F.size(errs_arr) > 0, F.element_at(errs_arr, 1)["err"])
-
-    meta_doc = meta.select(
-        "doc_id",
-        error.alias("error"),
-        bases_map.alias("bases_map"),
-        font_map.alias("font_map"),
-    )
-
-    sp = (
-        st2.filter(F.col("kind").isin(spec.KIND_BLOCK, spec.KIND_LINE, spec.KIND_MEDIA))
-        .join(meta_doc, "doc_id")
-        .filter(F.col("error").isNull())
-        .withColumn("base", F.element_at(F.col("bases_map"), F.col("salt")))
-        .withColumn("line_base", F.col("base")["lb"])
-        .withColumn("span_base", F.col("base")["sb"])
-    )
-    line_no = (F.col("line_no_l") + F.col("line_base")).cast("long")
-    text = (
-        F.when(
-            F.col("kind") == spec.KIND_LINE,
-            F.concat(
-                F.lit("line="),
-                line_no.cast("string"),
-                F.lit(" fonts="),
-                F.array_join(
-                    F.transform(
-                        "fonts_keys", lambda k: _font_label_col(F.col("font_map"), k)
-                    ),
-                    ",",
-                ),
-                F.lit(":"),
-                F.col("body"),
-            ),
-        )
-        .when(
-            F.col("kind") == spec.KIND_BLOCK,
-            F.concat(
-                F.lit("doc_id="),
-                F.col("doc_id"),
-                F.lit(" page="),
-                F.col("page").cast("string"),
-                F.lit(" block_id="),
-                F.col("page").cast("string"),
-                F.lit("-"),
-                F.col("block_k").cast("string"),
-                F.lit(" bbox="),
-                F.col("body"),
-                F.lit(" "),
-                (F.col("line_start_l") + F.col("line_base")).cast("long").cast("string"),
-                F.lit(" "),
-                (F.col("line_end_l") + F.col("line_base")).cast("long").cast("string"),
-            ),
-        )
-        .otherwise(F.col("body"))
-    )
-    offset = (F.col("span_base") + F.col("seq_l")).cast("int")
-
-    assembled = (
-        sp.select(
-            "doc_id",
-            F.struct(
-                offset.alias("offset"),
-                F.col("kind").alias("kind"),
-                text.alias("text"),
-                F.col("media_ref").alias("media_ref"),
-            ).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list("s")),
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).alias("spans")
-        )
-        .withColumn("error", F.lit(None).cast("string"))
-    )
-    quarantined = meta_doc.filter(F.col("error").isNotNull()).select(
-        "doc_id",
-        F.lit([]).cast(T.ArrayType(SPAN_STRUCT)).alias("spans"),
-        "error",
-    )
-    # docs whose shards produced zero span records (all-empty pages,
-    # media-less docs with no page matches) have a null-error meta row
-    # but no rows in `sp` — without this anti-join they would vanish,
-    # while the unsalted path emits (doc_id, [], null) for them.  The
-    # join runs over per-mega-doc metadata only (tiny).
-    empty_ok = (
-        meta_doc.filter(F.col("error").isNull())
-        .join(assembled.select("doc_id"), "doc_id", "left_anti")
-        .select(
-            "doc_id",
-            F.lit([]).cast(T.ArrayType(SPAN_STRUCT)).alias("spans"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    return assembled.unionByName(empty_ok).unionByName(quarantined)
 
 
 # --------------------------------------------------------------------------
@@ -531,9 +378,9 @@ def extract(df: DataFrame, salt_threshold: int = spec.SALT_SPAN_THRESHOLD) -> Da
     Calling ``extract`` runs the routing check: ``isEmpty`` on the
     salted side, a ``limit(1)`` query that stops at the first salted
     doc and reads every row only when there is none.  S7 is planned
-    only when the check finds one (planning its stage-2 checkpoint
-    makes AQE run stage 1 and its shuffle).  Otherwise every doc is
-    routed unsalted, and ``extract_simple`` takes the whole input.  The
+    only when the check finds one: its Python stages and shuffles would
+    otherwise run, over empty input, in every job.  Otherwise every doc
+    is routed unsalted, and ``extract_simple`` takes the whole input.  The
     input must be a static snapshot: a cached batch, a streaming
     micro-batch or files.
     """

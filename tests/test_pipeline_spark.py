@@ -296,6 +296,10 @@ def test_extract_with_mega_doc_plans_salted_path(spark, matrix_df):
     grouped map is planned."""
     ran = node_names_run_by(spark, lambda: extract(matrix_df, salt_threshold=1).collect())
     assert "FlatMapGroupsInPandas" in ran
+    # stage 3 renumbers each doc in one grouped map: no join of records
+    # with per-doc metadata
+    joins = {"BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin", "BroadcastExchange"}
+    assert not ran & joins, ran
 
 
 def _risky_reference(spans: str) -> Column:
@@ -446,19 +450,54 @@ def test_chunk_boundary_split_comment_routes_unsalted(spark):
     assert got == want and out["split-bang"].error == ref_err
 
 
-def test_salted_zero_record_doc_survives(spark):
-    """A doc whose shards emit zero span records (all-empty pages, no
-    media) must still appear as (doc_id, [], null) — same as unsalted."""
-    spans = [
-        {"kind": "tetml", "text": "<TET><Page number='1'/>", "media_ref": "", "offset": 0},
-        {"kind": "tetml", "text": "<Page number='2'/></TET>", "media_ref": "", "offset": 1},
-    ]
-    df = docs_to_df(spark, [{"doc_id": "empty-mega", "spans": spans}])
-    salted = {r.doc_id: r for r in extract(df, salt_threshold=1).collect()}
-    unsalted = {r.doc_id: r for r in extract(df, salt_threshold=100).collect()}
-    assert "empty-mega" in salted, "doc vanished on the salted path"
-    assert salted["empty-mega"].error is None
-    assert list(salted["empty-mega"].spans) == list(unsalted["empty-mega"].spans) == []
+def test_salted_zero_record_doc_survives(spark, tmp_path):
+    """A salted doc that yields no span record must still appear as
+    (doc_id, [], null), same as unsalted, and count in the lineage:
+    all-empty pages, valid XML without a page element, or only
+    non-chunk, non-media spans (stage 1 splits nothing from the last
+    two)."""
+    from freki_spark.checkpoint import run_extraction
+
+    def span(kind, text, offset):
+        return {"kind": kind, "text": text, "media_ref": "", "offset": offset}
+
+    docs = {
+        "empty-mega": [
+            span("tetml", "<TET><Page number='1'/>", 0),
+            span("tetml", "<Page number='2'/></TET>", 1),
+        ],
+        "no-page": [span("tetml", "<TET><Doc>", 0), span("tetml", "</Doc></TET>", 1)],
+        "other-kinds": [span("block", "b", 0), span("line", "l", 1)],
+    }
+    df = docs_to_df(spark, [{"doc_id": d, "spans": s} for d, s in docs.items()])
+    for thr in (1, 100):
+        got = {r.doc_id: (r.spans, r.error) for r in extract(df, salt_threshold=thr).collect()}
+        assert got == {d: ([], None) for d in docs}, f"threshold {thr}: {got}"
+    s = run_extraction(spark, df, str(tmp_path / "out"), n_batches=1, salt_threshold=1)
+    assert (s["n_docs"], s["n_errors"]) == (len(docs), 0)
+
+
+def test_stage3_assembles_shuffled_shards_in_doc_order():
+    """Stage 3 receives a doc's stage-2 rows in no guaranteed order:
+    shuffled, they still assemble to the narrow kernel's spans.  The doc
+    has 12 page shards, later shards bring fonts the first one lacks,
+    and it carries media."""
+    import pandas as pd
+
+    from freki_spark import kernel
+    from freki_spark.pipeline import _stage1_split, _stage2_layout, _stage3_assemble
+
+    doc = fixtures.make_doc("ord-7", 42, "mega")
+    st1 = pd.concat(list(_stage1_split(iter([pd.DataFrame([doc])]))))
+    st2 = pd.concat([_stage2_layout(shard) for _, shard in st1.groupby(["doc_id", "salt"])])
+    fonts = st2[st2["kind"] == "__meta__"].sort_values("salt")["fonts_keys"].tolist()
+    assert len(fonts) >= 3 and any(set(f) - set(fonts[0]) for f in fonts[1:])
+    assert (st2["kind"] == "media").any()
+
+    out = _stage3_assemble(st2.sample(frac=1, random_state=7))
+    want, err = kernel.extract_document_rows(doc["doc_id"], doc["spans"])
+    assert err is None and out["error"].tolist() == [None]
+    assert out["spans"].tolist() == [want]
 
 
 def test_selfclosing_final_page_salted_parity(spark):
