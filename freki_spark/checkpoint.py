@@ -152,38 +152,41 @@ def run_extraction(
         # (or Iceberg snapshot), never by mutating a half-done run's
         # input.
         batched = batched.filter(~F.col("batch_id").isin(sorted(done)))
-    batched = batched.persist()
-
-    todo = sorted(
-        r.batch_id for r in batched.select("batch_id").distinct().collect()
-    )
     summary = {"run_id": run_id, "batches_run": 0, "n_docs": 0, "n_spans": 0, "n_errors": 0}
-    for b in todo:
-        t0 = time.monotonic()
-        batch_df = batched.filter(F.col("batch_id") == b).select("doc_id", "spans")
-        # data write first; lineage append second (= the commit point)
-        counts = write_batch(batch_df, out_dir, b, salt_threshold)
-        row = {
-            "run_id": run_id,
-            "batch_id": b,
-            "n_batches": n_batches,
-            "partition_id": b,
-            **counts,
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-            "status": "committed",
-            "committed_at": _dt.datetime.now(_dt.timezone.utc),
-        }
-        # an Arrow table plans a LocalRelation (a Python list plans an
-        # RDD scan) and stores the aware timestamp as its UTC instant
-        lineage = pa.Table.from_pylist([row], schema=_LINEAGE_ARROW)
-        spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
-            f"{out_dir}/lineage"
+    batched = batched.persist()
+    try:
+        todo = sorted(
+            r.batch_id for r in batched.select("batch_id").distinct().collect()
         )
-        summary["batches_run"] += 1
-        summary["n_docs"] += counts["n_docs"]
-        summary["n_spans"] += counts["n_spans"]
-        summary["n_errors"] += counts["n_errors"]
-    batched.unpersist()
+        for b in todo:
+            t0 = time.monotonic()
+            batch_df = batched.filter(F.col("batch_id") == b).select("doc_id", "spans")
+            # data write first; lineage append second (= the commit point)
+            counts = write_batch(batch_df, out_dir, b, salt_threshold)
+            row = {
+                "run_id": run_id,
+                "batch_id": b,
+                "n_batches": n_batches,
+                "partition_id": b,
+                **counts,
+                "wall_ms": int((time.monotonic() - t0) * 1000),
+                "status": "committed",
+                "committed_at": _dt.datetime.now(_dt.timezone.utc),
+            }
+            # an Arrow table plans a LocalRelation (a Python list plans an
+            # RDD scan) and stores the aware timestamp as its UTC instant
+            lineage = pa.Table.from_pylist([row], schema=_LINEAGE_ARROW)
+            spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
+                f"{out_dir}/lineage"
+            )
+            summary["batches_run"] += 1
+            summary["n_docs"] += counts["n_docs"]
+            summary["n_spans"] += counts["n_spans"]
+            summary["n_errors"] += counts["n_errors"]
+    finally:
+        # released on every way out: a failed batch must not leave the
+        # whole input cached in a long-lived session
+        batched.unpersist()
     return summary
 
 

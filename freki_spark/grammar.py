@@ -82,7 +82,7 @@ def render_block_header(
     match ``\\S+`` (whitespace would break every parser of the header
     grammar); anything else raises rather than emitting silent data
     loss."""
-    lab = ""
+    bbox = render_bbox(llx, lly, urx, ury)
     if label:
         if not _LABEL_RE.fullmatch(label):
             raise ValueError(
@@ -90,15 +90,13 @@ def render_block_header(
                 "block-header grammar (must match \\S+): the reader "
                 "would fail to parse the whole header"
             )
-        lab = f"label={label} "
-    return (
-        f"doc_id={doc_id} page={page} block_id={page}-{block_k} "
-        f"bbox={llx:.1f},{lly:.1f},{urx:.1f},{ury:.1f} {lab}{start_line} {end_line}"
-    )
+        bbox += f" label={label}"
+    return render_block_header_from_parts(doc_id, page, block_k, bbox, start_line, end_line)
 
 
 def render_bbox(llx: float, lly: float, urx: float, ury: float) -> str:
-    """Just the bbox part, for the salted path's pre-rendered payloads."""
+    """Just the bbox part of a block header, for both renderers: the
+    kernel renders it at layout time, before the line range is known."""
     return f"{llx:.1f},{lly:.1f},{urx:.1f},{ury:.1f}"
 
 

@@ -9,17 +9,18 @@ greedy scans (line clustering, block walking) over per-page arrays —
 XML parsing (stdlib iterparse; no lxml offline) dominates runtime
 regardless.
 
-The kernel has two entry surfaces:
+The kernel has two entry surfaces, which build span records through
+one ``layout_records`` (S2–S5 per page, media spans in reading order)
+and render them through one ``finalize_records``:
 
 - ``extract_document_rows`` — whole document in, final output span
   rows out (the unsalted fast path; one call per input row inside
   ``mapInArrow``).
 - ``split_pages`` + ``extract_group_records`` — the salted mega-doc
   path (S7): stage 1 splits raw XML into per-page pieces by regex,
-  stage 2 lays out each page shard and emits *structured* span records
-  with group-local numbering; stage 3 shifts them to doc-global
-  numbering and renders them with ``finalize_records``, the serializer
-  the unsalted path uses too (see pipeline.py).
+  stage 2 lays out each page shard into span records with group-local
+  line numbers; stage 3 shifts them to doc-global numbering and
+  renders them (see pipeline.py).
 
 Reference parity targets (pvk444/freki [U], mount empty at build time):
 freki/analyzers/{tetml,pdfminer}.py (S1), analyzers/base.py (S2/S3),
@@ -196,6 +197,17 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
 
 
 _PARSERS = {spec.KIND_TETML: parse_tetml, spec.KIND_PDFMINER: parse_pdfminer}
+
+
+def _parse(dialect: str, xml: str) -> tuple[list[PageTokens], str | None]:
+    """S1 for both paths: (pages, None), or ([], quarantine error) when
+    the XML is malformed or one of its values is not a number."""
+    try:
+        return _PARSERS[dialect](xml), None
+    except ET.ParseError as e:
+        return [], f"xml-parse-error: {e}"
+    except (ValueError, TypeError, IndexError) as e:
+        return [], f"xml-content-error: {e}"
 
 
 # --------------------------------------------------------------------------
@@ -513,18 +525,19 @@ def segment_blocks(
 
 
 # --------------------------------------------------------------------------
-# structured span records (layout and finalize_records, shared by both paths)
+# span records: built by layout_records, rendered by finalize_records
+# (both shared by the two paths)
 # --------------------------------------------------------------------------
 
 
-def layout_page(page: PageTokens, records: list, line_no: int, seq: int, doc_fonts):
-    """Run S2–S5 on one page and append structured records.
+def layout_page(page: PageTokens, records: list, line_no: int, doc_fonts: dict) -> int:
+    """Run S2–S5 on one page and append its block and line records.
 
-    records: list of dicts with keys kind/page/block_k/line_start/
-    line_end/line_no/fonts_keys/body/media_ref/seq (group-local
-    numbering).  doc_fonts: ordered dict fkey -> None tracking first
-    appearance (insertion order = (seq, within-line position)).
-    Returns updated (line_no, seq).
+    records: dicts with keys kind/page/block_k/line_start/line_end/
+    line_no/fonts_keys/body/media_ref; lines are numbered on from
+    ``line_no``.  doc_fonts: insertion-ordered key set (dict keys)
+    gaining each font key at its first appearance.  Returns the last
+    line number.
     """
     lines = cluster_lines(page)
     segments = detect_columns(page, lines)
@@ -549,10 +562,8 @@ def layout_page(page: PageTokens, records: list, line_no: int, seq: int, doc_fon
                 "fonts_keys": [],
                 "body": bbox,
                 "media_ref": "",
-                "seq": seq,
             }
         )
-        seq += 1
         for idx in blines:
             line_no += 1
             fkeys: list[str] = []
@@ -562,8 +573,7 @@ def layout_page(page: PageTokens, records: list, line_no: int, seq: int, doc_fon
                 if fk not in seen:
                     seen.add(fk)
                     fkeys.append(fk)
-                if fk not in doc_fonts:
-                    doc_fonts[fk] = (seq, len(fkeys) - 1)
+                    doc_fonts.setdefault(fk)
             records.append(
                 {
                     "kind": spec.KIND_LINE,
@@ -575,11 +585,38 @@ def layout_page(page: PageTokens, records: list, line_no: int, seq: int, doc_fon
                     "fonts_keys": fkeys,
                     "body": render_spacing(page, idx),
                     "media_ref": "",
-                    "seq": seq,
                 }
             )
-            seq += 1
-    return line_no, seq
+    return line_no
+
+
+def layout_records(items: list) -> tuple[list[dict], dict[str, None], int]:
+    """Span records of content in reading order: ``items`` holds parsed
+    pages (``PageTokens``, laid out by ``layout_page``) and media spans
+    (dicts with ``text``/``media_ref``).  Returns (records, doc_fonts,
+    n_lines): the doc's font keys in first-appearance order and the
+    number of lines, numbered from 1."""
+    records: list[dict] = []
+    doc_fonts: dict[str, None] = {}
+    line_no = 0
+    for it in items:
+        if isinstance(it, PageTokens):
+            line_no = layout_page(it, records, line_no, doc_fonts)
+        else:
+            records.append(
+                {
+                    "kind": spec.KIND_MEDIA,
+                    "page": 0,
+                    "block_k": 0,
+                    "line_start": 0,
+                    "line_end": 0,
+                    "line_no": 0,
+                    "fonts_keys": [],
+                    "body": it["text"],
+                    "media_ref": it["media_ref"],
+                }
+            )
+    return records, doc_fonts, line_no
 
 
 def finalize_records(doc_id: str, records: list, doc_fonts: dict) -> list[dict]:
@@ -667,27 +704,13 @@ def extract_document_rows(
     media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
 
     if not chunks:
-        return (
-            [
-                {
-                    "kind": spec.KIND_MEDIA,
-                    "text": m["text"],
-                    "media_ref": m["media_ref"],
-                    "offset": i,
-                }
-                for i, m in enumerate(media)
-            ],
-            None,
-        )
+        return finalize_records(doc_id, layout_records(media)[0], {}), None
 
     dialect = chunks[0]["kind"]
     xml = "".join(c["text"] for c in chunks)
-    try:
-        pages = _PARSERS[dialect](xml)
-    except ET.ParseError as e:
-        return [], f"xml-parse-error: {e}"
-    except (ValueError, TypeError, IndexError) as e:
-        return [], f"xml-content-error: {e}"
+    pages, err = _parse(dialect, xml)
+    if err is not None:
+        return [], err
 
     starts = [m.start() for m in PAGE_START_RE[dialect].finditer(xml)]
     mpos = media_page_positions(
@@ -703,43 +726,10 @@ def extract_document_rows(
         # yields; media spans must never vanish
         media_by_page.setdefault(min(p, len(pages) - 1), []).append(m)
 
-    records: list[dict] = []
-    doc_fonts: dict[str, tuple[int, int]] = {}
-    line_no = seq = 0
-    for m in media_by_page.get(-1, []):
-        records.append(
-            {
-                "kind": spec.KIND_MEDIA,
-                "page": 0,
-                "block_k": 0,
-                "line_start": 0,
-                "line_end": 0,
-                "line_no": 0,
-                "fonts_keys": [],
-                "body": m["text"],
-                "media_ref": m["media_ref"],
-                "seq": seq,
-            }
-        )
-        seq += 1
+    items: list = list(media_by_page.get(-1, []))
     for pidx, page in enumerate(pages):
-        line_no, seq = layout_page(page, records, line_no, seq, doc_fonts)
-        for m in media_by_page.get(pidx, []):
-            records.append(
-                {
-                    "kind": spec.KIND_MEDIA,
-                    "page": page.number,
-                    "block_k": 0,
-                    "line_start": 0,
-                    "line_end": 0,
-                    "line_no": 0,
-                    "fonts_keys": [],
-                    "body": m["text"],
-                    "media_ref": m["media_ref"],
-                    "seq": seq,
-                }
-            )
-            seq += 1
+        items += [page, *media_by_page.get(pidx, [])]
+    records, doc_fonts, _ = layout_records(items)
     return finalize_records(doc_id, records, doc_fonts), None
 
 
@@ -804,40 +794,21 @@ def extract_group_records(
     doc_id: str,
     items: list[dict],
     dialect: str,
-) -> tuple[list[dict], dict, int, int, str | None]:
+) -> tuple[list[dict], dict[str, None], int, str | None]:
     """Stage 2 of the salted path: lay out one salted page-group.
 
-    items: [{'item_type': 'page'|'media', 'payload', 'media_ref',
-    'page_pos', 'rank'}] sorted by (page_pos, rank).  Returns
-    (records with group-local numbering, doc_fonts first-appearance
-    dict, n_lines, n_spans, error)."""
-    records: list[dict] = []
-    doc_fonts: dict[str, tuple[int, int]] = {}
-    line_no = seq = 0
+    items: [{'item_type': 'page'|'media', 'payload', 'media_ref'}] in
+    (page_pos, rank) order; a page payload is a piece repaired in
+    stage 1.  Returns ``layout_records``' (records, doc_fonts, n_lines)
+    with group-local line numbers, then the error: ``None``, or the
+    first failing page's parse error with no records."""
+    content: list = []
     for it in items:
         if it["item_type"] == "media":
-            records.append(
-                {
-                    "kind": spec.KIND_MEDIA,
-                    "page": 0,
-                    "block_k": 0,
-                    "line_start": 0,
-                    "line_end": 0,
-                    "line_no": 0,
-                    "fonts_keys": [],
-                    "body": it["payload"],
-                    "media_ref": it["media_ref"],
-                    "seq": seq,
-                }
-            )
-            seq += 1
+            content.append({"text": it["payload"], "media_ref": it["media_ref"]})
             continue
-        try:
-            pages = _PARSERS[dialect](it["payload"])  # repaired in stage 1
-        except ET.ParseError as e:
-            return [], {}, 0, 0, f"xml-parse-error: {e}"
-        except (ValueError, TypeError, IndexError) as e:
-            return [], {}, 0, 0, f"xml-content-error: {e}"
-        for page in pages:
-            line_no, seq = layout_page(page, records, line_no, seq, doc_fonts)
-    return records, doc_fonts, line_no, seq, None
+        pages, err = _parse(dialect, it["payload"])
+        if err is not None:
+            return [], {}, 0, err
+        content += pages
+    return (*layout_records(content), None)

@@ -43,10 +43,12 @@ from collections.abc import Iterator
 from itertools import accumulate
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from . import kernel, spec
 
@@ -102,7 +104,6 @@ _STAGE2_SCHEMA = T.StructType(
         T.StructField("body", T.StringType()),
         T.StructField("media_ref", T.StringType()),
         T.StructField("n_lines", T.LongType()),
-        T.StructField("n_spans", T.LongType()),
     ]
 )
 
@@ -112,42 +113,26 @@ _STAGE2_SCHEMA = T.StructType(
 # --------------------------------------------------------------------------
 
 
-def _extract_docs_arrow(batches):
-    """mapInArrow fast path: assemble the output span column as Arrow
-    List<Struct> arrays directly — ~200 spans/doc as python dicts per
-    row is the dominant serialization cost in the pandas path."""
-    import pyarrow as pa
+_SPANS_ARROW = to_arrow_type(DOC_SCHEMA["spans"].dataType)
 
+
+def _extract_docs_arrow(batches):
+    """mapInArrow fast path: the kernel's span dicts of a whole batch
+    cross into Arrow in one ``pa.array`` conversion per column."""
     for rb in batches:
         doc_ids = rb.column("doc_id").to_pylist()
-        spans_in = rb.column("spans").to_pylist()
-        kinds: list[str] = []
-        texts: list[str] = []
-        refs: list[str] = []
-        offs: list[int] = []
-        list_offsets = [0]
+        spans_out: list[list[dict]] = []
         errors: list[str | None] = []
-        for doc_id, spans in zip(doc_ids, spans_in):
+        for doc_id, spans in zip(doc_ids, rb.column("spans").to_pylist()):
             rows, err = kernel.extract_document_rows(doc_id, spans or [])
-            for r in rows:
-                kinds.append(r["kind"])
-                texts.append(r["text"])
-                refs.append(r["media_ref"])
-                offs.append(r["offset"])
-            list_offsets.append(len(kinds))
+            spans_out.append(rows)
             errors.append(err)
-        struct = pa.StructArray.from_arrays(
-            [
-                pa.array(kinds, pa.string()),
-                pa.array(texts, pa.string()),
-                pa.array(refs, pa.string()),
-                pa.array(offs, pa.int32()),
-            ],
-            names=["kind", "text", "media_ref", "offset"],
-        )
-        spans_out = pa.ListArray.from_arrays(pa.array(list_offsets, pa.int32()), struct)
         yield pa.RecordBatch.from_arrays(
-            [pa.array(doc_ids, pa.string()), spans_out, pa.array(errors, pa.string())],
+            [
+                pa.array(doc_ids, pa.string()),
+                pa.array(spans_out, _SPANS_ARROW),
+                pa.array(errors, pa.string()),
+            ],
             names=["doc_id", "spans", "error"],
         )
 
@@ -231,9 +216,10 @@ def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per (doc_id, salt) group: lay out the page shard with group-local
-    numbering.  Emits the block/line/media records plus exactly one
-    ``__meta__`` row carrying (fonts in first-appearance order, n_lines,
-    n_spans, error-or-'') — everything stage 3 needs to renumber."""
+    numbering.  Emits the block/line/media records, numbered by
+    ``seq_l`` in shard order, plus exactly one ``__meta__`` row carrying
+    (fonts in first-appearance order, n_lines, error-or-'') — everything
+    stage 3 needs to renumber."""
     pdf = pdf.sort_values(["page_pos", "rank"], kind="stable")
     doc_id = pdf["doc_id"].iloc[0]
     salt = int(pdf["salt"].iloc[0])
@@ -241,7 +227,7 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
 
     def meta_only(err: str) -> pd.DataFrame:
         return pd.DataFrame(
-            [[doc_id, salt, 0, "__meta__", 0, 0, 0, 0, 0, [], err, "", 0, 0]],
+            [[doc_id, salt, 0, "__meta__", 0, 0, 0, 0, 0, [], err, "", 0]],
             columns=cols,
         )
 
@@ -252,28 +238,18 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
     dialects = [d for d in pdf["dialect"] if d]
     dialect = dialects[0] if dialects else spec.KIND_TETML
     items = [
-        {
-            "item_type": it,
-            "payload": pl,
-            "media_ref": mr,
-            "page_pos": pp,
-            "rank": rk,
-        }
-        for it, pl, mr, pp, rk in zip(
-            pdf["item_type"], pdf["payload"], pdf["media_ref"], pdf["page_pos"], pdf["rank"]
-        )
+        {"item_type": it, "payload": pl, "media_ref": mr}
+        for it, pl, mr in zip(pdf["item_type"], pdf["payload"], pdf["media_ref"])
         if it != "empty"
     ]
-    records, doc_fonts, n_lines, n_spans, err = kernel.extract_group_records(
-        doc_id, items, dialect
-    )
+    records, doc_fonts, n_lines, err = kernel.extract_group_records(doc_id, items, dialect)
     if err is not None:
         return meta_only(err)
     rows = [
         [
             doc_id,
             salt,
-            r["seq"],
+            seq,
             r["kind"],
             r["page"],
             r["block_k"],
@@ -284,24 +260,20 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
             r["body"],
             r["media_ref"],
             0,
-            0,
         ]
-        for r in records
+        for seq, r in enumerate(records)
     ]
-    fonts_order = [k for k, _ in sorted(doc_fonts.items(), key=lambda kv: kv[1])]
-    rows.append(
-        [doc_id, salt, 0, "__meta__", 0, 0, 0, 0, 0, fonts_order, "", "", n_lines, n_spans]
-    )
+    rows.append([doc_id, salt, 0, "__meta__", 0, 0, 0, 0, 0, list(doc_fonts), "", "", n_lines])
     return pd.DataFrame(rows, columns=cols)
 
 
 def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per doc: renumber the stage-2 shards and render them.
 
-    A shard's lines are numbered from 1 and its records' ``seq`` runs
-    0..n_spans-1, so in salt order each shard's lines shift by the
-    lines of the shards before it and the offsets are the records'
-    positions.  The doc's font ids follow the shards' first-appearance
+    A shard's lines are numbered from 1 and its records' ``seq_l`` runs
+    0, 1, ... in shard order, so in salt order each shard's lines shift
+    by the lines of the shards before it and the offsets are the
+    records' positions.  The doc's font ids follow the shards' first-appearance
     lists concatenated in salt order, first occurrences kept: shards are
     disjoint, ordered slices of the doc.  Rendering is the narrow path's
     ``kernel.finalize_records``.  Rows arrive in no particular order."""

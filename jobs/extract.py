@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import argparse
 
+from freki_spark import spec
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -26,12 +28,11 @@ def main() -> None:
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--n-batches", type=int, default=256)
     ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
-    ap.add_argument("--salt-threshold", type=int, default=None)
+    ap.add_argument("--salt-threshold", type=int, default=spec.SALT_SPAN_THRESHOLD)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
-    from freki_spark import spec
     from freki_spark.checkpoint import metrics, run_extraction
     from freki_spark.io import read_docs
 
@@ -69,11 +70,7 @@ def main() -> None:
         args.output,
         run_id=args.run_id,
         n_batches=args.n_batches,
-        salt_threshold=(
-            spec.SALT_SPAN_THRESHOLD
-            if args.salt_threshold is None
-            else args.salt_threshold
-        ),
+        salt_threshold=args.salt_threshold,
     )
     print(summary)
     metrics(spark, args.output).show(truncate=False)

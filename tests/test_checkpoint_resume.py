@@ -181,10 +181,12 @@ def test_resume_rejects_changed_n_batches(spark, docs, tmp_path):
         run_extraction(spark, df, str(out), run_id="n2", n_batches=8)
 
 
-def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path):
+def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path, monkeypatch):
     """Long runs leak no cached datasets: the batch and the streaming
     job both take the salted path here (threshold 1), and neither
-    leaves anything in the session's cache manager."""
+    leaves anything in the session's cache manager, nor does a batch
+    run whose write fails."""
+    from freki_spark import checkpoint
     from freki_spark.streaming.jobs import stream_extract
 
     def cache_empty() -> bool:
@@ -193,6 +195,15 @@ def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path):
     df = docs_to_df(spark, docs)
     spark.catalog.clearCache()
     run_extraction(spark, df, str(tmp_path / "batch"), n_batches=2, salt_threshold=1)
+    assert cache_empty()
+
+    def failing_write(*args):
+        raise RuntimeError("write failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "write_batch", failing_write)
+        with pytest.raises(RuntimeError, match="write failed"):
+            run_extraction(spark, df, str(tmp_path / "failed"), n_batches=2)
     assert cache_empty()
 
     src = str(tmp_path / "in")

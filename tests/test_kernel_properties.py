@@ -83,7 +83,7 @@ def test_layout_page_block_ranges_cover_lines(page):
 
     records: list = []
     fonts: dict = {}
-    n_lines, seq = layout_page(page, records, 0, 0, fonts)
+    n_lines = layout_page(page, records, 0, fonts)
     line_recs = [r for r in records if r["kind"] == "line"]
     block_recs = [r for r in records if r["kind"] == "block"]
     assert len(line_recs) == n_lines

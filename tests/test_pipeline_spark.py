@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from freki_spark import fixtures
 from freki_spark.io import docs_to_df
-from freki_spark.pipeline import extract, extract_simple, split_quarantine
+from freki_spark.pipeline import extract, extract_salted, extract_simple, split_quarantine
 from sql_plans import node_names_run_by
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "fixture_goldens.json")
@@ -260,13 +260,30 @@ def test_media_only_doc_salted_parity(spark):
 
 def test_salted_quarantine_error_text_parity(spark):
     """The salted path must quarantine with the SAME error text as the
-    unsalted path (both report the whole-document parse error)."""
-    docs = [fixtures.make_doc("fx-corrupt-00", 42, "corrupt")]
+    unsalted path: both report the whole-document parse error of a
+    truncated doc, and the content error of a mega doc (pdfminer, 12
+    pages) whose page 7 bbox is not a number, as the oracle does."""
+    from freki_spark import oracle
+
+    bad = fixtures.make_doc("fx-mega-01", 42, "mega")
+    page7 = '<page id="7" bbox="0.000,0.000,612.000,792.000"'
+    assert sum(s["text"].count(page7) for s in bad["spans"]) == 1
+    for s in bad["spans"]:
+        s["text"] = s["text"].replace(page7, '<page id="7" bbox="0,0,x,792"')
+    content_error = ([], "xml-content-error: could not convert string to float: 'x'")
+    assert oracle.extract_document(bad["doc_id"], bad["spans"]) == content_error
+
+    docs = [fixtures.make_doc("fx-corrupt-00", 42, "corrupt"), bad]
     df = docs_to_df(spark, docs)
-    unsalted = extract(df).collect()[0]
-    salted = extract(df, salt_threshold=1).collect()[0]
-    assert unsalted.error is not None
-    assert salted.error == unsalted.error
+    unsalted = {r.doc_id: r for r in extract(df, salt_threshold=10_000).collect()}
+    salted = {r.doc_id: r for r in extract(df, salt_threshold=1).collect()}
+    # fx-mega-01 has chunks ending in '<', so the router keeps it narrow
+    # at any threshold: S7 itself must be called to see its error
+    s7 = {r.doc_id: r for r in extract_salted(df).collect()}
+    assert unsalted["fx-corrupt-00"].error is not None
+    for got in (unsalted, salted, s7):
+        assert got["fx-corrupt-00"].error == unsalted["fx-corrupt-00"].error
+        assert (list(got["fx-mega-01"].spans), got["fx-mega-01"].error) == content_error
 
 
 def test_extract_fast_path_is_narrow(spark, matrix_df):
