@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import spec
+from .io import doc_bucket
 from .pipeline import extract, split_quarantine
 
 LINEAGE_SCHEMA = T.StructType(
@@ -136,9 +137,7 @@ def run_extraction(
             f"resume with the same value (got {n_batches})"
         )
     done = committed_batches(spark, out_dir)
-    batched = input_df.withColumn(
-        "batch_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)).cast("int")
-    )
+    batched = input_df.withColumn("batch_id", doc_bucket(n_batches))
     if done:
         # the batch filter IS the exactly-once guard: batch_id is a
         # pure function of doc_id (pmod(xxhash64, n)) and n_batches is
@@ -196,7 +195,8 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-run rollup over the lineage table (docs/sec, spans/doc,
-    parse-failure rate) — the P12 metrics job."""
+    parse-failure rate) — the P12 metrics job.  A ratio over zero is
+    null: a run that quarantined every doc has no spans per doc."""
     lin = spark.read.parquet(f"{out_dir}/lineage")
     return lin.groupBy("run_id").agg(
         F.count("*").alias("batches"),
@@ -204,9 +204,11 @@ def metrics(spark: SparkSession, out_dir: str) -> DataFrame:
         F.sum("n_spans").alias("spans"),
         F.sum("n_errors").alias("errors"),
         F.sum("wall_ms").alias("wall_ms"),
-        F.round(F.sum("n_docs") / (F.sum("wall_ms") / 1000.0), 2).alias("docs_per_sec"),
-        F.round(F.sum("n_spans") / F.sum("n_docs"), 2).alias("spans_per_doc"),
-        F.round(F.sum("n_errors") / (F.sum("n_docs") + F.sum("n_errors")), 4).alias(
-            "error_rate"
+        F.round(F.try_divide(F.sum("n_docs"), F.sum("wall_ms") / 1000.0), 2).alias(
+            "docs_per_sec"
         ),
+        F.round(F.try_divide(F.sum("n_spans"), F.sum("n_docs")), 2).alias("spans_per_doc"),
+        F.round(
+            F.try_divide(F.sum("n_errors"), F.sum("n_docs") + F.sum("n_errors")), 4
+        ).alias("error_rate"),
     )

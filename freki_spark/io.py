@@ -11,7 +11,7 @@ N)`` bucket column standing in for the Iceberg transform.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import DOC_SCHEMA
@@ -25,10 +25,15 @@ def docs_to_df(spark: SparkSession, docs: list[dict]) -> DataFrame:
     return spark.createDataFrame(rows, DOC_SCHEMA)
 
 
+def doc_bucket(n_buckets: int) -> Column:
+    """A doc's bucket, ``pmod(xxhash64(doc_id), n_buckets)``: the local
+    stand-in for Iceberg's ``bucket(N, doc_id)``, and the batch id of
+    ``checkpoint.run_extraction`` when n_batches == N."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", doc_bucket(n_buckets))
 
 
 def read_docs(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:

@@ -9,18 +9,20 @@ greedy scans (line clustering, block walking) over per-page arrays —
 XML parsing (stdlib iterparse; no lxml offline) dominates runtime
 regardless.
 
-The kernel has two entry surfaces, which build span records through
-one ``layout_records`` (S2–S5 per page, media spans in reading order)
-and render them through one ``finalize_records``:
+The kernel has two entry surfaces.  Both quarantine null span fields
+with ``null_field_error``, put a doc's pages and media in one
+``reading_order``, build span records through one ``layout_records``
+(S2–S5 per page, media spans in reading order) and render them through
+one ``finalize_records``:
 
 - ``extract_document_rows`` — whole document in, final output span
   rows out (the unsalted fast path; one call per input row inside
-  ``mapInArrow``).
-- ``split_pages`` + ``extract_group_records`` — the salted mega-doc
-  path (S7): stage 1 splits raw XML into per-page pieces by regex,
-  stage 2 lays out each page shard into span records with group-local
-  line numbers; stage 3 shifts them to doc-global numbering and
-  renders them (see pipeline.py).
+  ``mapInArrow``).  Its pages are parsed ``PageTokens``.
+- ``page_pieces`` + ``extract_group_records`` — the salted mega-doc
+  path (S7): stage 1 takes the reading order over standalone per-page
+  XML pieces split by regex, stage 2 lays out each page shard into span
+  records with shard-local line numbers; stage 3 shifts them to
+  doc-global numbering and renders them (see pipeline.py).
 
 Reference parity targets (pvk444/freki [U], mount empty at build time):
 freki/analyzers/{tetml,pdfminer}.py (S1), analyzers/base.py (S2/S3),
@@ -654,26 +656,61 @@ def finalize_records(doc_id: str, records: list, doc_fonts: dict) -> list[dict]:
 
 
 # --------------------------------------------------------------------------
-# media anchoring (page position per media span)
+# reading order: pages with their media anchored (shared by the two paths)
 # --------------------------------------------------------------------------
 
 PAGE_START_RE = spec.PAGE_START_RE  # normative, shared with the oracle
 
 
-def media_page_positions(
-    chunk_offsets: list[int],
-    chunk_lens: list[int],
-    page_starts: list[int],
-    media_offsets: list[int],
-) -> list[int]:
-    """0-based page position for each media span (-1 = prologue)."""
-    cum = np.concatenate([[0], np.cumsum(chunk_lens)])
-    res = []
-    for mo in media_offsets:
-        j = int(np.searchsorted(np.asarray(chunk_offsets), mo))
-        anchor = int(cum[j])
-        res.append(int(np.searchsorted(np.asarray(page_starts), anchor, "right")) - 1)
-    return res
+def null_field_error(spans: list) -> str | None:
+    """The quarantine error of a doc whose spans hold a null the kernel
+    cannot order or join: a null span, a null offset, or a null text on
+    an XML or HTML chunk.  None when the doc has none of them."""
+    if any(s is None for s in spans):
+        return "span-null-field: span"
+    if any(s["offset"] is None for s in spans):
+        return "span-null-field: offset"
+    if any(s["text"] is None for s in spans if s["kind"] in spec.CHUNK_KINDS):
+        return "span-null-field: text"
+    return None
+
+
+def media_page_positions(chunks: list[dict], page_starts: list[int], media: list[dict]) -> list:
+    """0-based page position for each media span (-1 = prologue): the
+    page whose XML region holds the chunk text before the media span."""
+    cum = np.cumsum([0] + [len(c["text"]) for c in chunks])
+    anchors = cum[np.searchsorted([c["offset"] for c in chunks], [m["offset"] for m in media])]
+    return (np.searchsorted(page_starts, anchors, "right") - 1).tolist()
+
+
+def reading_order(spans: list[dict], pages_of) -> tuple[str, list, str | None]:
+    """A doc's content in reading order: the media before the first
+    page, then each page followed by the media anchored to it.
+
+    ``spans`` are in offset order.  ``pages_of(dialect, xml) -> (pages,
+    err)`` takes the joined XML chunks: ``_parse`` (``PageTokens``) on
+    the narrow path, ``page_pieces`` on the salted one.  Media are
+    clamped to the last page: a page start the regex finds in markup
+    the parser skips must never lose a media span.  Returns (dialect,
+    items, err); without XML chunks, dialect is '' and items the media."""
+    chunks = [s for s in spans if s["kind"] in spec.XML_KINDS]
+    media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
+    if not chunks:
+        return "", media, None
+    dialect = chunks[0]["kind"]
+    xml = "".join(c["text"] for c in chunks)
+    pages, err = pages_of(dialect, xml)
+    if err is not None:
+        return dialect, [], err
+    by_page: dict[int, list[dict]] = {}
+    if media:
+        starts = [m.start() for m in PAGE_START_RE[dialect].finditer(xml)]
+        for m, p in zip(media, media_page_positions(chunks, starts, media)):
+            by_page.setdefault(min(p, len(pages) - 1), []).append(m)
+    items: list = by_page.get(-1, [])
+    for i, page in enumerate(pages):
+        items += [page, *by_page.get(i, [])]
+    return dialect, items, None
 
 
 # --------------------------------------------------------------------------
@@ -692,6 +729,9 @@ def extract_document_rows(
     extractor (freki_spark.html_kernel); the XML kinds run FrekiSpec
     S1-S7 below (stray other-kind chunks are ignored by the chosen
     pipeline)."""
+    err = null_field_error(spans)
+    if err is not None:
+        return [], err
     spans = sorted(spans, key=lambda s: s["offset"])
     first_kind = next(
         (s["kind"] for s in spans if s["kind"] in spec.CHUNK_KINDS), None
@@ -700,35 +740,9 @@ def extract_document_rows(
         from . import html_kernel
 
         return html_kernel.extract_document_rows(doc_id, spans)
-    chunks = [s for s in spans if s["kind"] in spec.XML_KINDS]
-    media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
-
-    if not chunks:
-        return finalize_records(doc_id, layout_records(media)[0], {}), None
-
-    dialect = chunks[0]["kind"]
-    xml = "".join(c["text"] for c in chunks)
-    pages, err = _parse(dialect, xml)
+    _, items, err = reading_order(spans, _parse)
     if err is not None:
         return [], err
-
-    starts = [m.start() for m in PAGE_START_RE[dialect].finditer(xml)]
-    mpos = media_page_positions(
-        [c["offset"] for c in chunks],
-        [len(c["text"]) for c in chunks],
-        starts,
-        [m["offset"] for m in media],
-    )
-    media_by_page: dict[int, list[dict]] = {}
-    for m, p in zip(media, mpos):
-        # clamp to parsed pages (mirrors oracle.extract_document): regex
-        # anchor sites inside comments/PIs can exceed what the parser
-        # yields; media spans must never vanish
-        media_by_page.setdefault(min(p, len(pages) - 1), []).append(m)
-
-    items: list = list(media_by_page.get(-1, []))
-    for pidx, page in enumerate(pages):
-        items += [page, *media_by_page.get(pidx, [])]
     records, doc_fonts, _ = layout_records(items)
     return finalize_records(doc_id, records, doc_fonts), None
 
@@ -738,20 +752,21 @@ def extract_document_rows(
 # --------------------------------------------------------------------------
 
 
-def split_pages(xml: str, dialect: str) -> tuple[list[str], list[int]]:
-    """Regex-split raw XML into standalone per-page pieces (stage 1).
-
-    Returns (pieces, page_starts).  Each piece is made standalone at
-    stage 1 via repair_page_piece (which needs the preamble's xmlns
-    declarations — only stage 1 sees the whole document).  Assumes page elements do not nest
-    and no entity definitions live in the prologue (true for both
-    supported dialects)."""
+def page_pieces(dialect: str, xml: str) -> tuple[list[str], str | None]:
+    """Stage 1's ``pages_of``: (one standalone XML piece per page,
+    None), or ([], 'xml-parse-error: ...').  The same expat acceptance
+    as the narrow path, then a regex split with no tree parse; each
+    piece is wrapped by ``repair_page_piece`` with the preamble's xmlns
+    declarations.  Assumes page elements do not nest and no entity
+    definitions live in the prologue (true for both dialects)."""
+    try:
+        fastparse.validate(xml)
+    except ET.ParseError as e:
+        return [], f"xml-parse-error: {e}"
     starts = [m.start() for m in PAGE_START_RE[dialect].finditer(xml)]
-    pieces = []
-    for i, s in enumerate(starts):
-        e = starts[i + 1] if i + 1 < len(starts) else len(xml)
-        pieces.append(xml[s:e])
-    return pieces, starts
+    decls = collect_xmlns(xml[: starts[0]]) if starts else ""
+    ends = [*starts[1:], len(xml)]
+    return [repair_page_piece(xml[s:e], dialect, decls) for s, e in zip(starts, ends)], None
 
 
 _XMLNS_RE = re.compile(r"""(xmlns(?::[\w.-]+)?)\s*=\s*("[^"]*"|'[^']*')""")
@@ -791,24 +806,25 @@ def repair_page_piece(piece: str, dialect: str, decls: str = "") -> str:
 
 
 def extract_group_records(
-    doc_id: str,
-    items: list[dict],
-    dialect: str,
+    items, dialect: str
 ) -> tuple[list[dict], dict[str, None], int, str | None]:
-    """Stage 2 of the salted path: lay out one salted page-group.
+    """Stage 2 of the salted path: lay out one page shard.
 
-    items: [{'item_type': 'page'|'media', 'payload', 'media_ref'}] in
-    (page_pos, rank) order; a page payload is a piece repaired in
-    stage 1.  Returns ``layout_records``' (records, doc_fonts, n_lines)
-    with group-local line numbers, then the error: ``None``, or the
-    first failing page's parse error with no records."""
+    items: (item_type, payload, media_ref) tuples in reading order; the
+    payload of a 'page' is a ``page_pieces`` piece, of a 'media' its
+    text, of an 'error' stage 1's quarantine error ('empty' is skipped).
+    Returns ``layout_records``' (records, doc_fonts, n_lines), line
+    numbers shard-local, then the error: ``None``, or the first error
+    with no records."""
     content: list = []
-    for it in items:
-        if it["item_type"] == "media":
-            content.append({"text": it["payload"], "media_ref": it["media_ref"]})
-            continue
-        pages, err = _parse(dialect, it["payload"])
-        if err is not None:
-            return [], {}, 0, err
-        content += pages
+    for item_type, payload, media_ref in items:
+        if item_type == "media":
+            content.append({"text": payload, "media_ref": media_ref})
+        elif item_type == "page":
+            pages, err = _parse(dialect, payload)
+            if err is not None:
+                return [], {}, 0, err
+            content += pages
+        elif item_type == "error":
+            return [], {}, 0, payload
     return (*layout_records(content), None)

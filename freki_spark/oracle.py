@@ -598,12 +598,19 @@ def extract_document(doc_id: str, spans: list[dict]) -> tuple[list[dict], str | 
 
     ``spans`` is the input span list (kind/text/media_ref/offset dicts).
     Returns (output_spans, None) or ([], error_message) when the XML is
-    unparseable (quarantine path — never raises).
+    unparseable or a span field the pipeline orders or joins by is null
+    (quarantine path — never raises).
 
     Dialect dispatch mirrors kernel.extract_document_rows: a document
     whose first input chunk is kind='html' routes to the HtmlSpec
     oracle (freki_spark.html_oracle) instead.
     """
+    if None in spans:
+        return [], "span-null-field: span"
+    if any(s["offset"] is None for s in spans):
+        return [], "span-null-field: offset"
+    if any(s["kind"] in spec.CHUNK_KINDS and s["text"] is None for s in spans):
+        return [], "span-null-field: text"
     spans = sorted(spans, key=lambda s: s["offset"])
     first_kind = next(
         (s["kind"] for s in spans if s["kind"] in spec.CHUNK_KINDS), None

@@ -7,11 +7,13 @@ Dataflow (north-star lifecycle, SURVEY.md §3.2):
       ├─ not salted : mapInArrow(extract)               -- NO shuffle
       └─ salted     : salted mega-doc path (S7), planned only when
                       the routing check finds a salted doc
-           stage 1  mapInPandas: regex page-split + media anchoring
-           stage 2  groupBy(doc_id, salt).applyInPandas: per-page
-                    layout with group-local numbering   -- 1 shuffle
-           stage 3  groupBy(doc_id).applyInPandas: renumber the
-                    shards from their __meta__ rows and render them
+           stage 1  mapInPandas: the kernel's reading order over
+                    regex-split page pieces, salted by page
+           stage 2  groupBy(doc_id, salt).applyInPandas: per-shard
+                    layout with shard-local numbering, one row
+                    per shard                            -- 1 shuffle
+           stage 3  groupBy(doc_id).applyInPandas: shift the shards'
+                    lines by the lines before them and render them
                     with kernel.finalize_records        -- 1 shuffle
     union → (doc_id, spans, error)
 
@@ -28,8 +30,8 @@ Design notes for 100 TB / 10^12-doc scale:
   per doc and laid out in parallel; one cheap per-doc pass then shifts
   each shard's line numbers by the lines of the shards before it and
   renders the spans through the narrow path's own serializer.
-- Corrupt XML never fails a task: quarantined docs come back with
-  spans=[] and a non-null error column (split with
+- Corrupt XML and null span fields never fail a task: quarantined docs
+  come back with spans=[] and a non-null error column (split with
   ``split_quarantine``).
 
 Reference parity: this file replaces freki/main.py's single-process
@@ -80,8 +82,7 @@ _STAGE1_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         T.StructField("salt", T.IntegerType()),
-        T.StructField("page_pos", T.IntegerType()),
-        T.StructField("rank", T.IntegerType()),
+        T.StructField("pos", T.IntegerType()),  # the doc's reading order
         T.StructField("item_type", T.StringType()),  # page | media | error | empty
         T.StructField("payload", T.StringType()),
         T.StructField("media_ref", T.StringType()),
@@ -89,21 +90,29 @@ _STAGE1_SCHEMA = T.StructType(
     ]
 )
 
+# one kernel.layout_records record: the fields finalize_records reads
+_RECORD_STRUCT = T.StructType(
+    [
+        T.StructField("kind", T.StringType()),
+        T.StructField("page", T.IntegerType()),
+        T.StructField("block_k", T.IntegerType()),
+        T.StructField("line_start", T.IntegerType()),
+        T.StructField("line_end", T.IntegerType()),
+        T.StructField("line_no", T.IntegerType()),
+        T.StructField("fonts_keys", T.ArrayType(T.StringType())),
+        T.StructField("body", T.StringType()),
+        T.StructField("media_ref", T.StringType()),
+    ]
+)
+
 _STAGE2_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         T.StructField("salt", T.IntegerType()),
-        T.StructField("seq_l", T.LongType()),
-        T.StructField("kind", T.StringType()),  # block|line|media|__meta__
-        T.StructField("page", T.IntegerType()),
-        T.StructField("block_k", T.IntegerType()),
-        T.StructField("line_start_l", T.LongType()),
-        T.StructField("line_end_l", T.LongType()),
-        T.StructField("line_no_l", T.LongType()),
+        T.StructField("records", T.ArrayType(_RECORD_STRUCT)),
         T.StructField("fonts_keys", T.ArrayType(T.StringType())),
-        T.StructField("body", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("n_lines", T.LongType()),
+        T.StructField("n_lines", T.IntegerType()),
+        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -149,151 +158,86 @@ def extract_simple(df: DataFrame) -> DataFrame:
 
 
 def _split_doc(doc_id: str, spans) -> list[tuple]:
-    """Stage-1 rows of one mega-doc: well-formedness check (same expat
-    parser the kernel's acceptance uses — the salted path must
-    quarantine exactly the docs the unsalted path quarantines), then
-    regex page split + media→page anchoring (no tree parse of the whole
-    doc)."""
-    import xml.etree.ElementTree as ET
-
-    from . import fastparse
-
-    spans = sorted(list(spans), key=lambda s: s["offset"])
-    chunks = [s for s in spans if s["kind"] in spec.XML_KINDS]
-    media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
-    if not chunks:
-        return [
-            (doc_id, 0, -1, j, "media", m["text"], m["media_ref"], "") for j, m in enumerate(media)
-        ]
-    dialect = chunks[0]["kind"]
-    xml = "".join(c["text"] for c in chunks)
-    try:
-        fastparse.validate(xml)
-    except ET.ParseError as e:
-        return [(doc_id, 0, 0, 0, "error", f"xml-parse-error: {e}", "", dialect)]
-    pieces, starts = kernel.split_pages(xml, dialect)
-    if not pieces:
-        # valid XML with zero page elements: the kernel emits just the
-        # media spans (all anchored to the prologue) — mirror that,
-        # never quarantine
-        return [
-            (doc_id, 0, -1, j, "media", m["text"], m["media_ref"], dialect)
-            for j, m in enumerate(media)
-        ]
-    n_groups = min(spec.SALT_MAX_GROUPS, len(pieces))
-    per_group = math.ceil(len(pieces) / n_groups)
-    mpos = kernel.media_page_positions(
-        [c["offset"] for c in chunks],
-        [len(c["text"]) for c in chunks],
-        starts,
-        [m["offset"] for m in media],
-    )
-    decls = kernel.collect_xmlns(xml[: starts[0]])
+    """Stage-1 rows of one mega-doc: the kernel's reading order over its
+    page pieces (``kernel.page_pieces``: the same expat acceptance as
+    the narrow path, then a regex split with no tree parse of the whole
+    doc).  Page i goes to salt ``i // per_group``, so a doc has at most
+    SALT_MAX_GROUPS shards; a media span takes the salt of the page
+    before it (0 in the prologue).  A quarantined doc is one ``error``
+    row."""
+    err = kernel.null_field_error(spans)
+    if err is None:
+        spans = sorted(spans, key=lambda s: s["offset"])
+        dialect, items, err = kernel.reading_order(spans, kernel.page_pieces)
+    if err is not None:
+        return [(doc_id, 0, 0, "error", err, "", "")]
+    n_pages = sum(isinstance(it, str) for it in items)
+    per_group = max(1, math.ceil(n_pages / spec.SALT_MAX_GROUPS))
     rows = []
-    for p, piece in enumerate(pieces):
-        piece = kernel.repair_page_piece(piece, dialect, decls)
-        rows.append((doc_id, p // per_group, p, 0, "page", piece, "", dialect))
-    ranks: dict[int, int] = {}
-    for m, p in zip(media, mpos):
-        salt = 0 if p < 0 else min(p, len(pieces) - 1) // per_group
-        r = ranks.get(p, 0) + 1
-        ranks[p] = r
-        rows.append((doc_id, salt, p, r, "media", m["text"], m["media_ref"], dialect))
+    page = salt = 0
+    for pos, it in enumerate(items):
+        if isinstance(it, str):
+            salt = page // per_group
+            page += 1
+            rows.append((doc_id, salt, pos, "page", it, "", dialect))
+        else:
+            rows.append((doc_id, salt, pos, "media", it["text"], it["media_ref"], dialect))
     return rows
 
 
 def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Per mega-doc: ``_split_doc``.  A doc that yields no item (no page
-    and no media) still emits one ``empty`` marker row, which stage 2
-    turns into a bare ``__meta__`` row, so the doc reaches stage 3 and
-    comes out as (doc_id, [], null) like on the unsalted path."""
+    and no media) still emits one ``empty`` marker row, so the doc
+    reaches stage 3 and comes out as (doc_id, [], null) like on the
+    unsalted path."""
     for pdf in it:
         rows: list[tuple] = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            rows += _split_doc(doc_id, spans) or [(doc_id, 0, -1, 0, "empty", "", "", "")]
-        yield pd.DataFrame(rows, columns=[f.name for f in _STAGE1_SCHEMA.fields])
+            rows += _split_doc(doc_id, spans) or [(doc_id, 0, 0, "empty", "", "", "")]
+        yield pd.DataFrame(rows, columns=_STAGE1_SCHEMA.names)
 
 
 def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per (doc_id, salt) group: lay out the page shard with group-local
-    numbering.  Emits the block/line/media records, numbered by
-    ``seq_l`` in shard order, plus exactly one ``__meta__`` row carrying
-    (fonts in first-appearance order, n_lines, error-or-'') — everything
+    """Per (doc_id, salt) group: lay out the page shard with shard-local
+    numbering.  Emits one row: the shard's records in reading order, its
+    fonts in first-appearance order, its number of lines and its error
+    (null, or the doc's quarantine error with no records) — everything
     stage 3 needs to renumber."""
-    pdf = pdf.sort_values(["page_pos", "rank"], kind="stable")
-    doc_id = pdf["doc_id"].iloc[0]
-    salt = int(pdf["salt"].iloc[0])
-    cols = [f.name for f in _STAGE2_SCHEMA.fields]
-
-    def meta_only(err: str) -> pd.DataFrame:
-        return pd.DataFrame(
-            [[doc_id, salt, 0, "__meta__", 0, 0, 0, 0, 0, [], err, "", 0]],
-            columns=cols,
-        )
-
-    err_rows = pdf[pdf["item_type"] == "error"]
-    if len(err_rows):
-        return meta_only(err_rows["payload"].iloc[0])
-
-    dialects = [d for d in pdf["dialect"] if d]
-    dialect = dialects[0] if dialects else spec.KIND_TETML
-    items = [
-        {"item_type": it, "payload": pl, "media_ref": mr}
-        for it, pl, mr in zip(pdf["item_type"], pdf["payload"], pdf["media_ref"])
-        if it != "empty"
-    ]
-    records, doc_fonts, n_lines, err = kernel.extract_group_records(doc_id, items, dialect)
-    if err is not None:
-        return meta_only(err)
-    rows = [
-        [
-            doc_id,
-            salt,
-            seq,
-            r["kind"],
-            r["page"],
-            r["block_k"],
-            r["line_start"],
-            r["line_end"],
-            r["line_no"],
-            r["fonts_keys"],
-            r["body"],
-            r["media_ref"],
-            0,
-        ]
-        for seq, r in enumerate(records)
-    ]
-    rows.append([doc_id, salt, 0, "__meta__", 0, 0, 0, 0, 0, list(doc_fonts), "", "", n_lines])
-    return pd.DataFrame(rows, columns=cols)
+    pdf = pdf.sort_values("pos")
+    records, doc_fonts, n_lines, err = kernel.extract_group_records(
+        zip(pdf["item_type"], pdf["payload"], pdf["media_ref"]), pdf["dialect"].iloc[0]
+    )
+    row = [pdf["doc_id"].iloc[0], pdf["salt"].iloc[0], records, list(doc_fonts), n_lines, err]
+    return pd.DataFrame([row], columns=_STAGE2_SCHEMA.names)
 
 
 def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per doc: renumber the stage-2 shards and render them.
 
-    A shard's lines are numbered from 1 and its records' ``seq_l`` runs
-    0, 1, ... in shard order, so in salt order each shard's lines shift
-    by the lines of the shards before it and the offsets are the
-    records' positions.  The doc's font ids follow the shards' first-appearance
+    A shard's lines are numbered from 1, so in salt order each shard's
+    lines shift by the lines of the shards before it, and the records
+    concatenated in salt order are the doc's, their offsets their
+    positions.  The doc's font ids follow the shards' first-appearance
     lists concatenated in salt order, first occurrences kept: shards are
     disjoint, ordered slices of the doc.  Rendering is the narrow path's
-    ``kernel.finalize_records``.  Rows arrive in no particular order."""
+    ``kernel.finalize_records``.  Shards arrive in no particular order."""
     doc_id = pdf["doc_id"].iloc[0]
-    is_meta = pdf["kind"] == "__meta__"
-    meta = pdf[is_meta].sort_values("salt")
-    errors = [e for e in meta["body"] if e]
-    if errors:
-        return pd.DataFrame([[doc_id, [], errors[0]]], columns=EXTRACTED_SCHEMA.names)
-    line_base = dict(zip(meta["salt"].tolist(), accumulate(meta["n_lines"].tolist(), initial=0)))
-    doc_fonts = dict.fromkeys(k for keys in meta["fonts_keys"] for k in keys)
-    recs = pdf[~is_meta].sort_values(["salt", "seq_l"])
-    base = recs["salt"].map(line_base)
-    # only the fields finalize_records reads: every record's dict is
-    # held at once, so each extra key costs memory on a mega-doc
-    records = recs[["kind", "page", "block_k", "fonts_keys", "body", "media_ref"]].assign(
-        line_start=recs["line_start_l"] + base,
-        line_end=recs["line_end_l"] + base,
-        line_no=recs["line_no_l"] + base,
-    ).to_dict("records")
+    shards = pdf.sort_values("salt")
+    errors = shards["error"].dropna()
+    if len(errors):
+        return pd.DataFrame([[doc_id, [], errors.iloc[0]]], columns=EXTRACTED_SCHEMA.names)
+    records = []
+    for recs, base in zip(shards["records"], accumulate(shards["n_lines"].tolist(), initial=0)):
+        records += [
+            dict(
+                r,
+                line_start=r["line_start"] + base,
+                line_end=r["line_end"] + base,
+                line_no=r["line_no"] + base,
+            )
+            for r in recs
+        ]
+    doc_fonts = dict.fromkeys(k for keys in shards["fonts_keys"] for k in keys)
     spans = kernel.finalize_records(doc_id, records, doc_fonts)
     return pd.DataFrame([[doc_id, spans, None]], columns=EXTRACTED_SCHEMA.names)
 
@@ -301,12 +245,13 @@ def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
 def extract_salted(df: DataFrame) -> DataFrame:
     """Mega-document path: page-parallel layout, then a per-doc renumber.
 
-    Plan shape (2 shuffles, over page pieces and then over layout
-    records — never raw XML bytes twice):
+    Plan shape (2 shuffles, over page pieces and then over one row of
+    layout records per shard — never raw XML bytes twice):
 
-      1. ``mapInPandas`` — page split + media anchoring per doc;
+      1. ``mapInPandas`` — the kernel's reading order over page pieces,
+         salted by page;
       2. ``groupBy(doc_id, salt).applyInPandas`` — the page-shard layout,
-         the work that fans out over executors;
+         the work that fans out over executors, one row per shard;
       3. ``groupBy(doc_id).applyInPandas`` — one task per doc renumbers
          its shards and renders the spans; a doc whose shards hold no
          record, or carry an error, comes out of the same group.

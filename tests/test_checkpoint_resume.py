@@ -18,7 +18,7 @@ from freki_spark.checkpoint import (
     read_output,
     run_extraction,
 )
-from freki_spark.io import docs_to_df
+from freki_spark.io import doc_bucket, docs_to_df
 from freki_spark.pipeline import extract
 from sql_plans import executions, node_names_run_by, plan_nodes, status_store
 
@@ -28,14 +28,10 @@ def docs():
     return fixtures.random_docs(60, seed=11, prefix="ck")
 
 
-def _batch_id(n_batches: int):
-    return F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)).cast("int")
-
-
 def _killed_run(spark, df, out, run_id, n_batches, batch_ids):
     """A run killed after committing only ``batch_ids``: the same call
     over the input restricted to those batches."""
-    partial = df.filter(_batch_id(n_batches).isin(batch_ids))
+    partial = df.filter(doc_bucket(n_batches).isin(batch_ids))
     return run_extraction(spark, partial, str(out), run_id=run_id, n_batches=n_batches)
 
 
@@ -153,7 +149,7 @@ def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
 
     # simulate the kill: half of the victim batch's docs already written
     # to its data dir, with NO lineage row
-    batched = df.withColumn("batch_id", _batch_id(6))
+    batched = df.withColumn("batch_id", doc_bucket(6))
     partial = (
         extract(batched.filter(F.col("batch_id") == victim).select("doc_id", "spans"))
         .filter(F.col("error").isNull())
@@ -287,6 +283,10 @@ def test_observed_lineage_equals_recompute(spark, tmp_path, profile, n_good, n_b
     assert (got["n_docs"], got["n_errors"]) == (n_good, n_bad)
     if not n_good:
         assert [got[k] for k in _COUNTS[:4]] == [None, None, 0, 0]
+    # the rollup divides by n_docs: with none, its ratio is null, not an error
+    m = metrics(spark, out).first()
+    assert m.error_rate == n_bad / (n_good + n_bad)
+    assert (m.spans_per_doc is None) == (not n_good)
 
 
 def test_stream_micro_batch_observes_its_writes(spark, docs, tmp_path, monkeypatch):

@@ -155,8 +155,8 @@ def test_risky_docs_route_unsalted(spark):
     evil = '<!-- <Page number="99"> <page id="p9"> --><?pi <Page number="98"> ?>'
     xml2 = xml[:i] + evil + xml[i:]
     # the splice really does create a phantom split site (the hazard)
-    assert len(kernel.split_pages(xml2, dialect)[0]) > len(
-        kernel.split_pages(xml, dialect)[0]
+    assert len(kernel.page_pieces(dialect, xml2)[0]) > len(
+        kernel.page_pieces(dialect, xml)[0]
     )
     # chunk it so size(spans) > 1 and run with salt_threshold=1
     step = max(1, len(xml2) // 7)
@@ -284,6 +284,56 @@ def test_salted_quarantine_error_text_parity(spark):
     for got in (unsalted, salted, s7):
         assert got["fx-corrupt-00"].error == unsalted["fx-corrupt-00"].error
         assert (list(got["fx-mega-01"].spans), got["fx-mega-01"].error) == content_error
+
+
+def _null_field_doc(field: str) -> dict:
+    """A media fixture doc with one null where the pipeline orders or
+    joins: a chunk's offset, a chunk's text, or a whole span."""
+    from freki_spark import spec
+
+    doc = fixtures.make_doc(f"nf-{field}", 42, "media")
+    spans = doc["spans"]
+    assert any(s["kind"] == spec.KIND_MEDIA for s in spans)
+    # a chunk after the first, so the router's head-chunk checks still
+    # see a valid doc and τ = 1 salts it
+    i = next(i for i, s in enumerate(spans) if i and s["kind"] in spec.XML_KINDS)
+    if field == "span":
+        spans.insert(i, None)
+    else:
+        spans[i][field] = None
+    return doc
+
+
+@pytest.mark.parametrize("field", ["offset", "text", "span"])
+def test_null_span_field_quarantines_the_doc(spark, tmp_path, field):
+    """A null offset, chunk text or span quarantines its doc as
+    'span-null-field: <field>' on every path, and the rest of the batch
+    is extracted: it used to raise in the oracle and abort the batch."""
+    from freki_spark import oracle
+    from freki_spark.checkpoint import run_extraction
+
+    bad = _null_field_doc(field)
+    want_bad = ([], f"span-null-field: {field}")
+    assert oracle.extract_document(bad["doc_id"], bad["spans"]) == want_bad
+    good = [fixtures.make_doc(f"nf-{p}", 42, p) for p in ("single_col", "media", "two_col")]
+    want = {d["doc_id"]: oracle.extract_document(d["doc_id"], d["spans"]) for d in good}
+    df = docs_to_df(spark, [*good, bad])
+    for got in (
+        extract(df, salt_threshold=1),
+        extract(df, salt_threshold=10_000),
+        extract_salted(df),
+    ):
+        rows = {
+            r.doc_id: ([[s.kind, s.text, s.media_ref, s.offset] for s in r.spans], r.error)
+            for r in got.collect()
+        }
+        assert rows.pop(bad["doc_id"]) == want_bad
+        assert rows == {
+            d: ([[s["kind"], s["text"], s["media_ref"], s["offset"]] for s in spans], e)
+            for d, (spans, e) in want.items()
+        }
+    s = run_extraction(spark, df, str(tmp_path / "out"), n_batches=1, salt_threshold=1)
+    assert (s["n_docs"], s["n_errors"]) == (len(good), 1)
 
 
 def test_extract_fast_path_is_narrow(spark, matrix_df):
@@ -507,9 +557,9 @@ def test_stage3_assembles_shuffled_shards_in_doc_order():
     doc = fixtures.make_doc("ord-7", 42, "mega")
     st1 = pd.concat(list(_stage1_split(iter([pd.DataFrame([doc])]))))
     st2 = pd.concat([_stage2_layout(shard) for _, shard in st1.groupby(["doc_id", "salt"])])
-    fonts = st2[st2["kind"] == "__meta__"].sort_values("salt")["fonts_keys"].tolist()
+    fonts = st2.sort_values("salt")["fonts_keys"].tolist()
     assert len(fonts) >= 3 and any(set(f) - set(fonts[0]) for f in fonts[1:])
-    assert (st2["kind"] == "media").any()
+    assert any(r["kind"] == "media" for recs in st2["records"] for r in recs)
 
     out = _stage3_assemble(st2.sample(frac=1, random_state=7))
     want, err = kernel.extract_document_rows(doc["doc_id"], doc["spans"])
