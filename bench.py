@@ -43,6 +43,14 @@ HEADLINE_QUERIES = [
 ]
 
 
+def driver_memory_mb() -> int:
+    """Half of the host's physical RAM, capped at 48g: the driver JVM
+    is the whole local[N] cluster, but it shares the host with the
+    Python workers it forks."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return min(ram_mb // 2, 48 * 1024)
+
+
 def build_session(cpus: int, app: str = "freki-bench"):
     from pyspark.sql import SparkSession
 
@@ -65,7 +73,7 @@ def build_session(cpus: int, app: str = "freki-bench"):
         # at local[32]: JVM climbs to ~10 cores of GC while the python
         # workers starve)
         .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", f"{driver_memory_mb()}m")
         .getOrCreate()
     )
 

@@ -62,28 +62,14 @@ def _exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
-def committed_batches(spark: SparkSession, out_dir: str) -> set[int]:
+def committed_batches(spark: SparkSession, out_dir: str) -> tuple[set[int], set[int]]:
+    """(committed batch ids, distinct n_batches values) of the lineage
+    table, from one read of it; both empty when there is none."""
     if not _exists(spark, f"{out_dir}/lineage"):
-        return set()
-    rows = (
-        spark.read.parquet(f"{out_dir}/lineage")
-        .filter(F.col("status") == "committed")
-        .select("batch_id")
-        .distinct()
-        .collect()
-    )
-    return {r.batch_id for r in rows}
-
-
-def lineage_n_batches(spark: SparkSession, out_dir: str) -> set[int]:
-    """Distinct n_batches values recorded in the lineage table."""
-    if not _exists(spark, f"{out_dir}/lineage"):
-        return set()
+        return set(), set()
     lin = spark.read.parquet(f"{out_dir}/lineage")
-    if "n_batches" not in lin.columns:  # pre-field outputs
-        return set()
-    rows = lin.select("n_batches").distinct().collect()
-    return {r.n_batches for r in rows if r.n_batches is not None}
+    rows = lin.select("batch_id", "n_batches", "status").distinct().collect()
+    return {r.batch_id for r in rows if r.status == "committed"}, {r.n_batches for r in rows}
 
 
 def write_batch(df: DataFrame, out_dir: str, batch_id: int, salt_threshold: int) -> dict:
@@ -127,7 +113,7 @@ def run_extraction(
     salt_threshold: int = spec.SALT_SPAN_THRESHOLD,
 ) -> dict:
     """Run (or resume) checkpointed extraction.  Returns a summary dict."""
-    prior_nb = lineage_n_batches(spark, out_dir)
+    done, prior_nb = committed_batches(spark, out_dir)
     if prior_nb and prior_nb != {n_batches}:
         # the batch dirs are keyed by pmod(hash, n_batches): a different
         # n_batches remaps doc→batch and the re-run would overwrite
@@ -136,7 +122,6 @@ def run_extraction(
             f"output {out_dir} was written with n_batches={sorted(prior_nb)}; "
             f"resume with the same value (got {n_batches})"
         )
-    done = committed_batches(spark, out_dir)
     batched = input_df.withColumn("batch_id", doc_bucket(n_batches))
     if done:
         # the batch filter IS the exactly-once guard: batch_id is a

@@ -7,6 +7,10 @@ counters — no DOM tree is ever materialized, so peak memory per
 document is the current block buffer plus the emitted records.  The
 independent tree-walking reference implementation lives in
 ``freki_spark.html_oracle``; tests pin span-for-span equality.
+Input media spans are placed by ``kernel.reading_order``, the one
+anchor of every dialect: a media span's anchor is the length of the
+HTML chunks whose offset is at or before its own, and it goes after the
+last record whose source position is at or before that anchor.
 
 Two parser frontends drive the same semantic state machine
 (``_Machine``):
@@ -32,7 +36,7 @@ from __future__ import annotations
 from html.parser import HTMLParser
 
 from . import html_spec as H
-from . import spec
+from . import kernel, spec
 
 _BLOCK = H.BLOCK_TAGS
 _STRIP = H.STRIP_TAGS
@@ -277,65 +281,42 @@ def analyze(html_text: str) -> list[tuple]:
     return m.finish()
 
 
+def _records(dialect: str, html_text: str) -> tuple[list[tuple], list[int], str | None]:
+    """``kernel.reading_order``'s ``units_of`` for HTML: the analyzed
+    records and their source positions (non-decreasing by construction)."""
+    try:
+        records = analyze(html_text)
+    except Exception as e:  # tolerant parser; belt and braces (S-H1)
+        return [], [], f"html-parse-error: {e}"
+    return records, [rec[5] for rec in records], None
+
+
 def extract_document_rows(
     doc_id: str, spans: list[dict]
 ) -> tuple[list[dict], str | None]:
     """HtmlSpec v1 for one document; same contract as
     kernel.extract_document_rows (output span dicts, error)."""
     spans = sorted(spans, key=lambda s: s["offset"])
-    chunks = [s for s in spans if s["kind"] == spec.KIND_HTML]
-    media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
-    html_text = "".join(c["text"] for c in chunks)
-    try:
-        records = analyze(html_text)
-    except Exception as e:  # tolerant parser; belt and braces (S-H1)
-        return [], f"html-parse-error: {e}"
-
-    # media anchors: chars of html chunks preceding each media span
-    anchors: list[int] = []
-    for m in media:
-        before = 0
-        for c in chunks:
-            if c["offset"] > m["offset"]:
-                break
-            before += len(c["text"])
-        anchors.append(before)
-
-    out: list[dict] = []
-
-    def emit(kind: str, text: str, media_ref: str) -> None:
-        out.append(
-            {"kind": kind, "text": text, "media_ref": media_ref, "offset": len(out)}
-        )
-
-    mi = 0
-
-    def drain(limit: int | None) -> None:
-        nonlocal mi
-        while mi < len(media) and (limit is None or anchors[mi] < limit):
-            emit(spec.KIND_MEDIA, media[mi]["text"], media[mi]["media_ref"])
-            mi += 1
-
-    drain(records[0][5] if records else None)
-    line_no = 0
-    k = 0
-    for i, rec in enumerate(records):
-        nxt = records[i + 1][5] if i + 1 < len(records) else None
-        is_block, tag, words, ld, lines, _pos, alt, src = rec
-        if is_block:
-            k += 1
-            emit(
-                spec.KIND_BLOCK,
-                H.render_block_header(
-                    doc_id, k, tag, words, ld, line_no + 1, line_no + len(lines)
-                ),
-                "",
-            )
-            for ln in lines:
-                line_no += 1
-                emit(spec.KIND_LINE, H.render_line(line_no, tag, ln), "")
-        else:
-            emit(spec.KIND_MEDIA, alt, src)
-        drain(nxt)
-    drain(None)
-    return out, None
+    _, items, err = kernel.reading_order(spans, _records)
+    if err is not None:
+        return [], err
+    out: list[tuple[str, str, str]] = []
+    line_no = k = 0
+    for it in items:
+        if isinstance(it, dict):  # an input media span
+            out.append((spec.KIND_MEDIA, it["text"], it["media_ref"]))
+            continue
+        is_block, tag, words, ld, lines, _pos, alt, src = it
+        if not is_block:
+            out.append((spec.KIND_MEDIA, alt, src))
+            continue
+        k += 1
+        header = H.render_block_header(doc_id, k, tag, words, ld, line_no + 1, line_no + len(lines))
+        out.append((spec.KIND_BLOCK, header, ""))
+        for ln in lines:
+            line_no += 1
+            out.append((spec.KIND_LINE, H.render_line(line_no, tag, ln), ""))
+    return [
+        {"kind": kind, "text": text, "media_ref": ref, "offset": off}
+        for off, (kind, text, ref) in enumerate(out)
+    ], None

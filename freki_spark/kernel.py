@@ -11,13 +11,15 @@ regardless.
 
 The kernel has two entry surfaces.  Both quarantine null span fields
 with ``null_field_error``, put a doc's pages and media in one
-``reading_order``, build span records through one ``layout_records``
-(S2–S5 per page, media spans in reading order) and render them through
-one ``finalize_records``:
+``reading_order`` (which ``html_kernel`` shares for HTML records),
+build span records through one ``layout_records`` (S2–S5 per page,
+media spans in reading order) and render them through one
+``finalize_records``:
 
 - ``extract_document_rows`` — whole document in, final output span
   rows out (the unsalted fast path; one call per input row inside
-  ``mapInArrow``).  Its pages are parsed ``PageTokens``.
+  ``mapInArrow``).  Its pages are parsed ``PageTokens``; HTML docs go
+  to ``html_kernel.extract_document_rows``.
 - ``page_pieces`` + ``extract_group_records`` — the salted mega-doc
   path (S7): stage 1 takes the reading order over standalone per-page
   XML pieces split by regex, stage 2 lays out each page shard into span
@@ -656,10 +658,8 @@ def finalize_records(doc_id: str, records: list, doc_fonts: dict) -> list[dict]:
 
 
 # --------------------------------------------------------------------------
-# reading order: pages with their media anchored (shared by the two paths)
+# reading order: units with their media anchored (every dialect, both paths)
 # --------------------------------------------------------------------------
-
-PAGE_START_RE = spec.PAGE_START_RE  # normative, shared with the oracle
 
 
 def null_field_error(spans: list) -> str | None:
@@ -675,47 +675,64 @@ def null_field_error(spans: list) -> str | None:
     return None
 
 
-def media_page_positions(chunks: list[dict], page_starts: list[int], media: list[dict]) -> list:
-    """0-based page position for each media span (-1 = prologue): the
-    page whose XML region holds the chunk text before the media span."""
+def page_starts(dialect: str, xml: str) -> list[int]:
+    """Source position of each page start tag (``spec.PAGE_START_RE``:
+    normative, shared with the oracle)."""
+    return [m.start() for m in spec.PAGE_START_RE[dialect].finditer(xml)]
+
+
+def media_positions(chunks: list[dict], starts: list[int], media: list[dict], n_units: int) -> list:
+    """The one media anchor, for every dialect: the 0-based position of
+    the unit each media span follows (-1 = before the first).  Its anchor
+    is the length of the chunks whose offset is at or before its own (the
+    oracle's tie rule); it follows the last unit that starts at or before
+    the anchor.  Media are clamped to the last unit: a page start the
+    regex finds in markup the parser skips must never lose a media span."""
     cum = np.cumsum([0] + [len(c["text"]) for c in chunks])
-    anchors = cum[np.searchsorted([c["offset"] for c in chunks], [m["offset"] for m in media])]
-    return (np.searchsorted(page_starts, anchors, "right") - 1).tolist()
+    at = np.searchsorted([c["offset"] for c in chunks], [m["offset"] for m in media], "right")
+    return np.minimum(np.searchsorted(starts, cum[at], "right") - 1, n_units - 1).tolist()
 
 
-def reading_order(spans: list[dict], pages_of) -> tuple[str, list, str | None]:
-    """A doc's content in reading order: the media before the first
-    page, then each page followed by the media anchored to it.
+def reading_order(spans: list[dict], units_of) -> tuple[str, list, str | None]:
+    """A doc's content in reading order, for every dialect: the media
+    before the first unit, then each unit followed by its media.
 
-    ``spans`` are in offset order.  ``pages_of(dialect, xml) -> (pages,
-    err)`` takes the joined XML chunks: ``_parse`` (``PageTokens``) on
-    the narrow path, ``page_pieces`` on the salted one.  Media are
-    clamped to the last page: a page start the regex finds in markup
-    the parser skips must never lose a media span.  Returns (dialect,
-    items, err); without XML chunks, dialect is '' and items the media."""
-    chunks = [s for s in spans if s["kind"] in spec.XML_KINDS]
+    ``spans`` are in offset order.  The first chunk kind picks the
+    dialect, whose chunks (both XML kinds, or HTML) are joined.
+    ``units_of(dialect, text) -> (units, starts, err)`` gives the units
+    and their source positions: ``_pages`` on the narrow XML path,
+    ``page_pieces`` on the salted one, ``html_kernel``'s records for
+    HTML.  Returns (dialect, items, err); without chunks, dialect is ''
+    and items the media."""
+    dialect = next((s["kind"] for s in spans if s["kind"] in spec.CHUNK_KINDS), "")
     media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
-    if not chunks:
+    if not dialect:
         return "", media, None
-    dialect = chunks[0]["kind"]
-    xml = "".join(c["text"] for c in chunks)
-    pages, err = pages_of(dialect, xml)
+    kinds = (spec.KIND_HTML,) if dialect == spec.KIND_HTML else spec.XML_KINDS
+    chunks = [s for s in spans if s["kind"] in kinds]
+    units, starts, err = units_of(dialect, "".join(c["text"] for c in chunks))
     if err is not None:
         return dialect, [], err
-    by_page: dict[int, list[dict]] = {}
+    by_unit: dict[int, list[dict]] = {}
     if media:
-        starts = [m.start() for m in PAGE_START_RE[dialect].finditer(xml)]
-        for m, p in zip(media, media_page_positions(chunks, starts, media)):
-            by_page.setdefault(min(p, len(pages) - 1), []).append(m)
-    items: list = by_page.get(-1, [])
-    for i, page in enumerate(pages):
-        items += [page, *by_page.get(i, [])]
+        for m, p in zip(media, media_positions(chunks, starts, media, len(units))):
+            by_unit.setdefault(p, []).append(m)
+    items: list = by_unit.get(-1, [])
+    for i, unit in enumerate(units):
+        items += [unit, *by_unit.get(i, [])]
     return dialect, items, None
 
 
 # --------------------------------------------------------------------------
 # top level — unsalted fast path
 # --------------------------------------------------------------------------
+
+
+def _pages(dialect: str, xml: str) -> tuple[list[PageTokens], list[int], str | None]:
+    """The narrow path's ``units_of``: ``_parse``'s pages and their start
+    tags' positions."""
+    pages, err = _parse(dialect, xml)
+    return pages, page_starts(dialect, xml), err
 
 
 def extract_document_rows(
@@ -740,7 +757,7 @@ def extract_document_rows(
         from . import html_kernel
 
         return html_kernel.extract_document_rows(doc_id, spans)
-    _, items, err = reading_order(spans, _parse)
+    _, items, err = reading_order(spans, _pages)
     if err is not None:
         return [], err
     records, doc_fonts, _ = layout_records(items)
@@ -752,21 +769,22 @@ def extract_document_rows(
 # --------------------------------------------------------------------------
 
 
-def page_pieces(dialect: str, xml: str) -> tuple[list[str], str | None]:
-    """Stage 1's ``pages_of``: (one standalone XML piece per page,
-    None), or ([], 'xml-parse-error: ...').  The same expat acceptance
-    as the narrow path, then a regex split with no tree parse; each
-    piece is wrapped by ``repair_page_piece`` with the preamble's xmlns
-    declarations.  Assumes page elements do not nest and no entity
-    definitions live in the prologue (true for both dialects)."""
+def page_pieces(dialect: str, xml: str) -> tuple[list[str], list[int], str | None]:
+    """Stage 1's ``units_of``: (one standalone XML piece per page, the
+    pages' start positions, None), or ([], [], 'xml-parse-error: ...').
+    The same expat acceptance as the narrow path, then a regex split
+    with no tree parse; each piece is wrapped by ``repair_page_piece``
+    with the preamble's xmlns declarations.  Assumes page elements do
+    not nest and no entity definitions live in the prologue (true for
+    both dialects)."""
     try:
         fastparse.validate(xml)
     except ET.ParseError as e:
-        return [], f"xml-parse-error: {e}"
-    starts = [m.start() for m in PAGE_START_RE[dialect].finditer(xml)]
+        return [], [], f"xml-parse-error: {e}"
+    starts = page_starts(dialect, xml)
     decls = collect_xmlns(xml[: starts[0]]) if starts else ""
     ends = [*starts[1:], len(xml)]
-    return [repair_page_piece(xml[s:e], dialect, decls) for s, e in zip(starts, ends)], None
+    return [repair_page_piece(xml[s:e], dialect, decls) for s, e in zip(starts, ends)], starts, None
 
 
 _XMLNS_RE = re.compile(r"""(xmlns(?::[\w.-]+)?)\s*=\s*("[^"]*"|'[^']*')""")

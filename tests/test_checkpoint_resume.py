@@ -53,7 +53,7 @@ def test_resume_no_duplicates_and_identical(spark, docs, tmp_path):
     # killed run: only 2 of 6 batches commit
     s2 = _killed_run(spark, df, resumed, "r2a", 6, [0, 1])
     assert s2["batches_run"] == 2
-    assert committed_batches(spark, str(resumed)) != set(range(6))
+    assert committed_batches(spark, str(resumed))[0] != set(range(6))
 
     # resume: the rest commit, already-done batches are skipped
     s3 = run_extraction(spark, df, str(resumed), run_id="r2b", n_batches=6)
@@ -144,7 +144,7 @@ def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
 
     s1 = _killed_run(spark, df, out, "p1", 6, [0, 1])
     assert s1["batches_run"] == 2
-    done = committed_batches(spark, str(out))
+    done, _ = committed_batches(spark, str(out))
     victim = min(set(range(6)) - done)
 
     # simulate the kill: half of the victim batch's docs already written

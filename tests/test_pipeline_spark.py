@@ -336,6 +336,46 @@ def test_null_span_field_quarantines_the_doc(spark, tmp_path, field):
     assert (s["n_docs"], s["n_errors"]) == (len(good), 1)
 
 
+def _tied_media_doc(dialect: str, media_first: bool) -> dict:
+    """A fixture doc plus one media span that shares its offset with a
+    chunk in the middle of the doc, listed before or after that chunk."""
+    if dialect == "xml":
+        doc = fixtures.make_doc("tie", 42, "mega")
+    else:
+        doc = fixtures.make_html_doc("tie-html", 42, "random_html")
+    spans = doc["spans"]
+    i = next(i for i, s in enumerate(spans) if s["offset"] == (5 if dialect == "xml" else 2))
+    assert spans[i]["kind"] != "media"
+    fig = {"kind": "media", "text": "fig", "media_ref": "m:tie", "offset": spans[i]["offset"]}
+    spans.insert(i if media_first else i + 1, fig)
+    return doc
+
+
+@pytest.mark.parametrize("media_first", [True, False], ids=["media-listed-first", "chunk-listed-first"])
+@pytest.mark.parametrize("dialect", ["xml", "html"])
+def test_media_tied_with_a_chunk_goes_after_it(spark, dialect, media_first):
+    """A media span whose offset equals a chunk's goes after that chunk's
+    text, whichever of the two the input lists first: the oracle's tie
+    rule, on the kernel and on both paths.  The XML kernel used to put
+    it before the chunk's text."""
+    from freki_spark import kernel, oracle
+
+    doc = _tied_media_doc(dialect, media_first)
+    want, err = oracle.extract_document(doc["doc_id"], doc["spans"])
+    assert err is None
+    assert kernel.extract_document_rows(doc["doc_id"], doc["spans"]) == (want, None)
+    df = docs_to_df(spark, [doc])
+    paths = [extract(df, salt_threshold=1), extract(df, salt_threshold=10_000)]
+    if dialect == "xml":  # HTML docs never take the salted path
+        paths.append(extract_salted(df))
+    for got in paths:
+        [r] = got.collect()
+        assert r.error is None
+        assert [[s.kind, s.text, s.media_ref, s.offset] for s in r.spans] == [
+            [s["kind"], s["text"], s["media_ref"], s["offset"]] for s in want
+        ]
+
+
 def test_extract_fast_path_is_narrow(spark, matrix_df):
     """The 100 TB invariant: the unsalted extraction path must contain
     no Exchange — document bytes never shuffle."""
