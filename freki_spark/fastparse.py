@@ -45,7 +45,7 @@ from xml.parsers import expat
 
 import numpy as np
 
-from .grammar import font_key, mode_first as _mode_first
+from .grammar import font_key, mode_first as _mode_first, page_number
 
 # --------------------------------------------------------------------------
 # eligibility + validation
@@ -197,7 +197,7 @@ def parse_tetml_fast(xml: str, page_cls) -> list | None:
         if pa is None:
             return None  # page attr blob beyond the scan: ET decides
         cur = page_cls(
-            int(pa.get("number", str(len(pages) + 1))),
+            page_number(pa.get("number")),
             float(pa.get("width", "612")),
             float(pa.get("height", "792")),
         )
@@ -368,7 +368,7 @@ def parse_pdfminer_fast(xml: str, page_cls) -> list | None:
             return None  # page attr blob beyond the scan: ET decides
         pb = pa.get("bbox", "0,0,612,792").split(",")
         cur = page_cls(
-            int(pa.get("id", str(len(pages) + 1))),
+            page_number(pa.get("id")),
             float(pb[2]) - float(pb[0]),
             float(pb[3]) - float(pb[1]),
         )

@@ -28,6 +28,14 @@ from .spec import FONT_KEY_SEP, FONT_SIZE_NDIGITS
 _LABEL_RE = re.compile(r"\S+")
 
 
+def page_number(attr: str | None) -> int | None:
+    """A page element's number (TETML ``number``, PDFMiner ``id``), or
+    None when it has none.  Shared by the kernel's two parser paths;
+    ``kernel._parse`` numbers a page without one by its position in the
+    doc, which a parser handed one S7 page piece cannot know."""
+    return None if attr is None else int(attr)
+
+
 def mode_first(keys: list[str]) -> int:
     """Index of the first element whose value is the mode (ties -> the
     earliest).  Part of the shared contract (S1 majority-font vote):

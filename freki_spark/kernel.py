@@ -6,8 +6,8 @@ consistency check, SURVEY.md §5.2): both share only ``spec`` constants
 and the ``grammar`` output format.  All per-token math is float64
 numpy; the only Python-level loops are the inherently-sequential
 greedy scans (line clustering, block walking) over per-page arrays —
-XML parsing (stdlib iterparse; no lxml offline) dominates runtime
-regardless.
+XML parsing (a regex scan of the whole string, or stdlib
+``ET.fromstring``; no lxml offline) dominates runtime regardless.
 
 The kernel has two entry surfaces.  Both quarantine null span fields
 with ``null_field_error``, put a doc's pages and media in one
@@ -44,6 +44,7 @@ from .grammar import (
     font_key,
     font_label,
     mode_first,
+    page_number,
     render_bbox,
     render_block_header_from_parts,
     render_line,
@@ -57,7 +58,7 @@ from .grammar import (
 class PageTokens:
     __slots__ = ("number", "width", "height", "texts", "fkeys", "box")
 
-    def __init__(self, number: int, width: float, height: float):
+    def __init__(self, number: int | None, width: float, height: float):
         self.number = number
         self.width = width
         self.height = height
@@ -85,7 +86,7 @@ _mode_first = mode_first
 
 
 # --------------------------------------------------------------------------
-# S1 — parse (streaming iterparse, memory-bounded for mega pages)
+# S1 — parse (a regex scan of the string, ET.fromstring as fallback)
 # --------------------------------------------------------------------------
 
 
@@ -114,7 +115,7 @@ def _parse_tetml_et(xml_text: str) -> list[PageTokens]:
     fk_memo: dict[tuple[str, str], str] = {}
     for pel in root.iterfind(".//{*}Page"):
         cur = PageTokens(
-            int(pel.get("number", str(len(pages) + 1))),
+            page_number(pel.get("number")),
             float(pel.get("width", "612")),
             float(pel.get("height", "792")),
         )
@@ -155,7 +156,7 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
     for pel in root.iterfind(".//{*}page"):
         pb = pel.get("bbox", "0,0,612,792").split(",")
         cur = PageTokens(
-            int(pel.get("id", str(len(pages) + 1))),
+            page_number(pel.get("id")),
             float(pb[2]) - float(pb[0]),
             float(pb[3]) - float(pb[1]),
         )
@@ -203,15 +204,22 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
 _PARSERS = {spec.KIND_TETML: parse_tetml, spec.KIND_PDFMINER: parse_pdfminer}
 
 
-def _parse(dialect: str, xml: str) -> tuple[list[PageTokens], str | None]:
+def _parse(dialect: str, xml: str, first: int = 1) -> tuple[list[PageTokens], str | None]:
     """S1 for both paths: (pages, None), or ([], quarantine error) when
-    the XML is malformed or one of its values is not a number."""
+    the XML is malformed or one of its values is not a number.  A page
+    without a number is numbered by its position in the doc, ``first``
+    being the position of the first page in ``xml`` (S7 stage 2 parses
+    one page piece at a time)."""
     try:
-        return _PARSERS[dialect](xml), None
+        pages = _PARSERS[dialect](xml)
     except ET.ParseError as e:
         return [], f"xml-parse-error: {e}"
     except (ValueError, TypeError, IndexError) as e:
         return [], f"xml-content-error: {e}"
+    for n, page in enumerate(pages, first):
+        if page.number is None:
+            page.number = n
+    return pages, None
 
 
 # --------------------------------------------------------------------------
@@ -828,18 +836,19 @@ def extract_group_records(
 ) -> tuple[list[dict], dict[str, None], int, str | None]:
     """Stage 2 of the salted path: lay out one page shard.
 
-    items: (item_type, payload, media_ref) tuples in reading order; the
-    payload of a 'page' is a ``page_pieces`` piece, of a 'media' its
-    text, of an 'error' stage 1's quarantine error ('empty' is skipped).
+    items: (item_type, payload, media_ref, page) tuples in reading order;
+    the payload of a 'page' is a ``page_pieces`` piece and ``page`` its
+    1-based position in the doc, the payload of a 'media' is its text,
+    of an 'error' stage 1's quarantine error ('empty' is skipped).
     Returns ``layout_records``' (records, doc_fonts, n_lines), line
     numbers shard-local, then the error: ``None``, or the first error
     with no records."""
     content: list = []
-    for item_type, payload, media_ref in items:
+    for item_type, payload, media_ref, page in items:
         if item_type == "media":
             content.append({"text": payload, "media_ref": media_ref})
         elif item_type == "page":
-            pages, err = _parse(dialect, payload)
+            pages, err = _parse(dialect, payload, page)
             if err is not None:
                 return [], {}, 0, err
             content += pages

@@ -87,6 +87,7 @@ _STAGE1_SCHEMA = T.StructType(
         T.StructField("payload", T.StringType()),
         T.StructField("media_ref", T.StringType()),
         T.StructField("dialect", T.StringType()),
+        T.StructField("page", T.IntegerType()),  # a page's 1-based position
     ]
 )
 
@@ -162,15 +163,16 @@ def _split_doc(doc_id: str, spans) -> list[tuple]:
     page pieces (``kernel.page_pieces``: the same expat acceptance as
     the narrow path, then a regex split with no tree parse of the whole
     doc).  Page i goes to salt ``i // per_group``, so a doc has at most
-    SALT_MAX_GROUPS shards; a media span takes the salt of the page
-    before it (0 in the prologue).  A quarantined doc is one ``error``
-    row."""
+    SALT_MAX_GROUPS shards, and carries its position i + 1, which
+    numbers it in stage 2 when its element has no number; a media span
+    takes the salt of the page before it (0 in the prologue).  A
+    quarantined doc is one ``error`` row."""
     err = kernel.null_field_error(spans)
     if err is None:
         spans = sorted(spans, key=lambda s: s["offset"])
         dialect, items, err = kernel.reading_order(spans, kernel.page_pieces)
     if err is not None:
-        return [(doc_id, 0, 0, "error", err, "", "")]
+        return [(doc_id, 0, 0, "error", err, "", "", 0)]
     n_pages = sum(isinstance(it, str) for it in items)
     per_group = max(1, math.ceil(n_pages / spec.SALT_MAX_GROUPS))
     rows = []
@@ -179,9 +181,9 @@ def _split_doc(doc_id: str, spans) -> list[tuple]:
         if isinstance(it, str):
             salt = page // per_group
             page += 1
-            rows.append((doc_id, salt, pos, "page", it, "", dialect))
+            rows.append((doc_id, salt, pos, "page", it, "", dialect, page))
         else:
-            rows.append((doc_id, salt, pos, "media", it["text"], it["media_ref"], dialect))
+            rows.append((doc_id, salt, pos, "media", it["text"], it["media_ref"], dialect, 0))
     return rows
 
 
@@ -193,7 +195,7 @@ def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         rows: list[tuple] = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            rows += _split_doc(doc_id, spans) or [(doc_id, 0, 0, "empty", "", "", "")]
+            rows += _split_doc(doc_id, spans) or [(doc_id, 0, 0, "empty", "", "", "", 0)]
         yield pd.DataFrame(rows, columns=_STAGE1_SCHEMA.names)
 
 
@@ -205,7 +207,8 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
     stage 3 needs to renumber."""
     pdf = pdf.sort_values("pos")
     records, doc_fonts, n_lines, err = kernel.extract_group_records(
-        zip(pdf["item_type"], pdf["payload"], pdf["media_ref"]), pdf["dialect"].iloc[0]
+        zip(pdf["item_type"], pdf["payload"], pdf["media_ref"], pdf["page"].tolist()),
+        pdf["dialect"].iloc[0],
     )
     row = [pdf["doc_id"].iloc[0], pdf["salt"].iloc[0], records, list(doc_fonts), n_lines, err]
     return pd.DataFrame([row], columns=_STAGE2_SCHEMA.names)
@@ -277,14 +280,17 @@ def extract(df: DataFrame, salt_threshold: int = spec.SALT_SPAN_THRESHOLD) -> Da
     Routing details:
     - NULL ``spans`` counts as empty (the doc must surface in the
       output as (doc_id, [], null), never silently vanish);
-    - docs whose XML may contain comments / CDATA / processing
-      instructions (any ``<!``, or ``<?`` beyond the position-0 XML
+    - docs whose XML text (their XML chunks joined in offset order, as
+      the kernel joins them) holds a comment, CDATA, DTD or processing
+      instruction (any ``<!``, or ``<?`` beyond a position-0 XML
       declaration) take the UNSALTED path regardless of size: the
       salted path's regex page split cannot see markup context, so a
       ``<Page`` inside a comment would create phantom piece boundaries
       there — whole-document parsing defines the semantics, so risky
-      docs go where the whole document is parsed.  All checks are
-      JVM-side string scans (codegen, narrow);
+      docs go where the whole document is parsed.  Where the chunks are
+      cut does not matter.  The check is one JVM-side scan of the
+      joined text (``_risky_markup``), narrow, and ``n > τ`` comes first
+      so that only docs above τ build the text;
     - docs carrying any ``kind='html'`` span (the HtmlSpec
       main-content dialect) always take the unsalted path: boilerplate
       classification is a whole-document DOM property and HTML has no
@@ -314,37 +320,31 @@ def extract(df: DataFrame, salt_threshold: int = spec.SALT_SPAN_THRESHOLD) -> Da
 
 
 def _risky_markup(spans: str) -> Column:
-    """True when a doc's XML chunks may hold a comment, CDATA, DTD or PI.
+    """True when a doc's XML text holds a comment, CDATA, DTD or PI.
 
-    Every lambda reads only its own element, so the check is O(spans)
-    per doc: a lambda that reads a per-doc aggregate (such as the head
-    chunk's offset) re-evaluates it for every element."""
-    xml_chunks = F.filter(spans, lambda s: s["kind"].isin(*spec.XML_KINDS))
+    The text is the doc's XML chunks joined in offset order (input
+    position breaks ties), as the kernel joins them, so a ``<!`` or
+    ``<?`` split across chunks is seen whole.  The only exempt ``<?`` is
+    a true XML declaration, ``<?xml`` plus whitespace at position 0
+    (``xml`` is a reserved PI target, so the prefix is unambiguous);
+    ``fastparse.fast_eligible`` applies the same rule.
 
-    def _decl(s: Column) -> Column:
-        # the only exempt '<?' is a true XML declaration: '<?xml' +
-        # whitespace at byte 0 of the first XML chunk ('xml' is a
-        # forbidden PI target, so this prefix is unambiguous); a
-        # document-leading PI like '<?pi <Page ?>' must still flag
-        return F.substring(s["text"], 1, 6).isin("<?xml ", "<?xml\t", "<?xml\r", "<?xml\n")
-
-    def _markup(s: Column) -> Column:
-        pi = F.when(_decl(s), F.locate("<?", s["text"], 2) > 0).otherwise(
-            F.locate("<?", s["text"], 1) > 0
-        )
-        # a chunk ending in '<' may complete to '<!'/'<?' in the NEXT
-        # chunk (chunk boundaries are arbitrary byte splits) — the
-        # per-chunk contains() can't see across, so flag it risky too
-        return s["text"].contains("<!") | pi | s["text"].endswith("<")
-
-    # a declaration is exempt only in a head chunk (the lowest offset):
-    # one at a null or higher offset flags
-    decl_offsets = F.transform(F.filter(xml_chunks, _decl), lambda s: s["offset"])
-    head = F.array_min(F.transform(xml_chunks, lambda s: s["offset"]))
-    late_decl = F.exists(decl_offsets, lambda o: o.isNull()) | (
-        F.array_max(decl_offsets) > head
+    The text is bound once, as the one element of an array: written
+    out four times, subexpression elimination would hoist it out of
+    ``salted``'s ``And`` and build it for every doc, not only for the
+    docs above τ."""
+    chunks = F.filter(spans, lambda s: s["kind"].isin(*spec.XML_KINDS))
+    keyed = F.transform(
+        chunks, lambda s, i: F.struct(s["offset"].alias("o"), i.alias("i"), s["text"].alias("t"))
     )
-    return F.coalesce(F.exists(xml_chunks, _markup) | late_decl, F.lit(False))
+    xml = F.array_join(F.transform(F.sort_array(keyed), lambda s: s["t"]), "")
+
+    def _markup(x: Column) -> Column:
+        decl = F.substring(x, 1, 6).isin("<?xml ", "<?xml\t", "<?xml\r", "<?xml\n")
+        pi = F.when(decl, F.locate("<?", x, 2)).otherwise(F.locate("<?", x, 1)) > 0
+        return x.contains("<!") | pi
+
+    return F.coalesce(F.exists(F.array(xml), _markup), F.lit(False))
 
 
 def split_quarantine(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -7,12 +7,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from freki_spark import fixtures
+from freki_spark import fixtures, spec
 from freki_spark.io import docs_to_df
 from freki_spark.pipeline import extract, extract_salted, extract_simple, split_quarantine
 from sql_plans import node_names_run_by
@@ -277,8 +277,8 @@ def test_salted_quarantine_error_text_parity(spark):
     df = docs_to_df(spark, docs)
     unsalted = {r.doc_id: r for r in extract(df, salt_threshold=10_000).collect()}
     salted = {r.doc_id: r for r in extract(df, salt_threshold=1).collect()}
-    # fx-mega-01 has chunks ending in '<', so the router keeps it narrow
-    # at any threshold: S7 itself must be called to see its error
+    # τ = 1 salts fx-mega-01 (its joined XML holds no markup); calling
+    # S7 directly checks its error text whatever the router decides
     s7 = {r.doc_id: r for r in extract_salted(df).collect()}
     assert unsalted["fx-corrupt-00"].error is not None
     for got in (unsalted, salted, s7):
@@ -294,8 +294,8 @@ def _null_field_doc(field: str) -> dict:
     doc = fixtures.make_doc(f"nf-{field}", 42, "media")
     spans = doc["spans"]
     assert any(s["kind"] == spec.KIND_MEDIA for s in spans)
-    # a chunk after the first, so the router's head-chunk checks still
-    # see a valid doc and τ = 1 salts it
+    # a chunk after the first; the doc's joined XML holds no markup, so
+    # τ = 1 salts it
     i = next(i for i, s in enumerate(spans) if i and s["kind"] in spec.XML_KINDS)
     if field == "span":
         spans.insert(i, None)
@@ -398,9 +398,11 @@ def test_extract_without_mega_doc_plans_no_salted_path(spark, matrix_df):
     assert not ran & {"MapInPandas", "FlatMapGroupsInPandas", "Exchange"}, ran
 
 
-def test_extract_with_mega_doc_plans_salted_path(spark, matrix_df):
+def test_extract_with_mega_doc_plans_salted_path(spark, matrix_df, golden):
     """The salted golden test really runs S7: at threshold 1 stage 2's
-    grouped map is planned."""
+    grouped map is planned.  So it is for a doc whose chunks end in '<'
+    but whose joined XML holds no markup: the router reads the joined
+    text, so where the chunks are cut does not keep a doc off S7."""
     ran = node_names_run_by(spark, lambda: extract(matrix_df, salt_threshold=1).collect())
     assert "FlatMapGroupsInPandas" in ran
     # stage 3 renumbers each doc in one grouped map: no join of records
@@ -408,29 +410,32 @@ def test_extract_with_mega_doc_plans_salted_path(spark, matrix_df):
     joins = {"BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin", "BroadcastExchange"}
     assert not ran & joins, ran
 
+    mega = matrix_df.filter(F.col("doc_id") == "fx-mega-01")
+    assert any(s.text.endswith("<") for s in mega.first().spans)
+    got = {}
+    ran = node_names_run_by(
+        spark, lambda: got.update(_collect_spans(extract(mega, salt_threshold=1)))
+    )
+    assert "FlatMapGroupsInPandas" in ran
+    _assert_matches_golden(got, {"fx-mega-01": golden["fx-mega-01"]})
 
-def _risky_reference(spans: str) -> Column:
-    """The risky-markup check in its direct form: the lambda compares
-    each chunk's offset with the head offset, an aggregate over every
-    chunk, so it costs O(chunks x spans) per doc."""
-    from freki_spark import spec
 
-    xml_chunks = F.filter(spans, lambda s: s["kind"].isin(*spec.XML_KINDS))
-    minoff = F.array_min(F.transform(xml_chunks, lambda s: s["offset"]))
-
-    def _pi_or_markup_decl(s):
-        head_pi = F.when(
-            (s["offset"] == minoff) & s["text"].rlike(r"^<\?xml[ \t\r\n]"),
-            F.locate("<?", s["text"], 2) > 0,
-        ).otherwise(F.locate("<?", s["text"], 1) > 0)
-        return s["text"].contains("<!") | head_pi | s["text"].endswith("<")
-
-    return F.coalesce(F.exists(xml_chunks, _pi_or_markup_decl), F.lit(False))
+def _risky_reference(spans) -> bool:
+    """The risky-markup rule in Python over the kernel's own join: the
+    XML chunks in offset order (a stable sort; null offsets first, as
+    Spark sorts them, though the kernel quarantines such docs), joined,
+    hold a ``<!`` or a ``<?`` other than a position-0 XML declaration."""
+    chunks = [s for s in spans or [] if s is not None and s["kind"] in spec.XML_KINDS]
+    chunks.sort(key=lambda s: (s["offset"] is not None, s["offset"] or 0))
+    xml = "".join(s["text"] or "" for s in chunks)
+    decl = xml.startswith(("<?xml ", "<?xml\t", "<?xml\r", "<?xml\n"))
+    return "<!" in xml or xml.find("<?", 1 if decl else 0) >= 0
 
 
 def test_risky_markup_matches_reference_form(spark):
-    """The O(spans) router check flags exactly the docs the direct form
-    flags: the fixture matrix plus hand-made edge docs."""
+    """The router flags exactly the docs whose joined XML text holds
+    markup, as a Python reference over the kernel's join finds: the
+    fixture matrix plus hand-made edge docs."""
     from freki_spark.pipeline import DOC_SCHEMA, _risky_markup
 
     decl = '<?xml version="1.0"?>\n'
@@ -446,14 +451,15 @@ def test_risky_markup_matches_reference_form(spark):
         doc(False, "decl-head", (decl + "<TET>", 0), ("<Page/></TET>", 1)),
         doc(False, "decl-head-cr", ('<?xml\rversion="1.0"?><TET>', 0), ("</TET>", 1)),
         doc(False, "decl-head-unsorted", ("<Page/></TET>", 3), (decl + "<TET>", 1)),
-        doc(False, "decl-head-twice", (decl + "<TET>", 0), (decl + "</TET>", 0)),
+        doc(True, "decl-head-twice", (decl + "<TET>", 0), (decl + "</TET>", 0)),
         doc(True, "decl-head-then-pi", (decl + "<?pi x?><TET>", 0), ("</TET>", 1)),
         doc(True, "decl-late", ("<TET>", 0), (decl + "</TET>", 1)),
         doc(True, "decl-late-listed-first", (decl + "</TET>", 5), ("<TET>", 2)),
-        doc(True, "decl-null-offset", ("<TET>", 0), (decl + "</TET>", None)),
+        doc(False, "decl-null-offset", ("<TET>", 0), (decl + "</TET>", None)),
         doc(True, "stylesheet-pi", ('<?xml-stylesheet href="a"?><TET>', 0), ("</TET>", 1)),
         doc(True, "leading-pi", ('<?pi <Page number="9"> ?><TET>', 0), ("</TET>", 1)),
-        doc(True, "ends-in-lt", ("<TET><", 0), ("Page/></TET>", 1)),
+        doc(False, "ends-in-lt", ("<TET><", 0), ("Page/></TET>", 1)),
+        doc(False, "mid-lt", ("<TET>", 0), ("<Page/><", 1), ("Page/></TET>", 2)),
         doc(True, "split-bang", ("<TET><Page/><", 0), ("!-- <Page/> --></TET>", 1)),
         doc(True, "comment", ("<TET><!-- c -->", 0), ("</TET>", 1)),
         doc(False, "null-text", (None, 0), ("<TET></TET>", 1)),
@@ -465,19 +471,37 @@ def test_risky_markup_matches_reference_form(spark):
     matrix = [(d["doc_id"], d["spans"]) for d in fixtures.fixture_matrix()]
     df = spark.createDataFrame([*matrix, *edges], DOC_SCHEMA)
     got = {
-        r.doc_id: (r.new, r.ref)
-        for r in df.select(
-            "doc_id",
-            _risky_markup("spans").alias("new"),
-            _risky_reference("spans").alias("ref"),
-        ).collect()
+        r.doc_id: (r.new, _risky_reference(r.spans))
+        for r in df.select("doc_id", "spans", _risky_markup("spans").alias("new")).collect()
     }
     assert all(new == ref for new, ref in got.values()), {
         k: v for k, v in got.items() if v[0] != v[1]
     }
     assert [got[doc_id][0] for doc_id, _ in edges] == list(want)
-    # the matrix holds both outcomes, so the comparison has teeth
-    assert {got[doc_id][0] for doc_id, _ in matrix} == {True, False}
+    # matrix docs with a chunk ending in '<' (which used to be flagged)
+    # hold no markup, so the comparison has teeth on the matrix too
+    lt = [
+        doc_id
+        for doc_id, spans in matrix
+        if any(s["text"].endswith("<") for s in spans if s["kind"] in spec.XML_KINDS)
+    ]
+    assert lt and not any(got[doc_id][0] for doc_id in lt)
+
+
+def test_router_builds_the_joined_text_only_above_the_threshold(spark, monkeypatch):
+    """``salted`` tests ``n > τ`` before the risky-markup rule builds a
+    doc's joined XML text: the join is made to fail, and routing a doc
+    below τ must not reach it.  (Written out more than once in the
+    predicate, the text would be hoisted by subexpression elimination
+    and built for every doc.)"""
+    join = F.array_join
+    monkeypatch.setattr(
+        F, "array_join", lambda c, d: F.concat(join(c, d), F.raise_error("joined").cast("string"))
+    )
+    df = docs_to_df(spark, [fixtures.make_doc("fx-route", 42, "single_col")])
+    assert extract(df, salt_threshold=10_000).count() == 1
+    with pytest.raises(Exception, match="joined"):
+        extract(df, salt_threshold=1)
 
 
 def test_html_dialect_through_pipeline(spark):
@@ -664,6 +688,38 @@ def test_namespaced_pages_salted_parity(spark):
     assert list(salted["ns-mega"].spans) == list(unsalted["ns-mega"].spans)
     texts = " ".join(s.text for s in salted["ns-mega"].spans)
     assert "ns1" in texts and "ns2" in texts
+
+
+@pytest.mark.parametrize(
+    ("seed", "dialect", "attr"), [(0, spec.KIND_TETML, "number"), (1, spec.KIND_PDFMINER, "id")]
+)
+def test_unnumbered_pages_are_numbered_by_position_on_every_path(spark, seed, dialect, attr):
+    """A page element without its number (TETML ``number``, PDFMiner
+    ``id``) is numbered by its position in the doc, as the oracle does,
+    on every path: S7 stage 2 parses one page piece at a time, so stage
+    1 hands it each page's position."""
+    from freki_spark import oracle
+
+    doc = fixtures.make_doc(f"p-mega-{seed}", seed, "mega")
+    chunks = [s for s in doc["spans"] if s["kind"] in spec.XML_KINDS]
+    assert {s["kind"] for s in chunks} == {dialect}
+    xml = "".join(s["text"] for s in sorted(chunks, key=lambda s: s["offset"]))
+    xml = re.sub(rf'(<[Pp]age\b[^>]*?)\s{attr}="[^"]*"', r"\1", xml)
+    assert not re.search(rf'<[Pp]age\b[^>]*\s{attr}=', xml)
+    step = len(xml) // 16 + 1
+    spans = [
+        {"kind": dialect, "text": xml[j : j + step], "media_ref": "", "offset": k}
+        for k, j in enumerate(range(0, len(xml), step))
+    ]
+    want, err = oracle.extract_document(doc["doc_id"], spans)
+    assert err is None and any("page=2 block_id=2-1" in s["text"] for s in want)
+    want = [[s["kind"], s["text"], s["media_ref"], s["offset"]] for s in want]
+
+    df = docs_to_df(spark, [{"doc_id": doc["doc_id"], "spans": spans}])
+    for out in (extract(df, 1), extract(df, 10_000), extract_salted(df)):
+        [row] = out.collect()
+        assert row.error is None, row.error
+        assert [[s.kind, s.text, s.media_ref, s.offset] for s in row.spans] == want
 
 
 def test_reader_survives_hostile_doc_ids(spark):
