@@ -122,6 +122,10 @@ def run_extraction(
             f"output {out_dir} was written with n_batches={sorted(prior_nb)}; "
             f"resume with the same value (got {n_batches})"
         )
+    summary = {"run_id": run_id, "batches_run": 0, "n_docs": 0, "n_spans": 0, "n_errors": 0}
+    if done >= set(range(n_batches)):
+        # a finished run: nothing to scan, cache or list
+        return summary
     batched = input_df.withColumn("batch_id", doc_bucket(n_batches))
     if done:
         # the batch filter IS the exactly-once guard: batch_id is a
@@ -136,7 +140,6 @@ def run_extraction(
         # (or Iceberg snapshot), never by mutating a half-done run's
         # input.
         batched = batched.filter(~F.col("batch_id").isin(sorted(done)))
-    summary = {"run_id": run_id, "batches_run": 0, "n_docs": 0, "n_spans": 0, "n_errors": 0}
     batched = batched.persist()
     try:
         todo = sorted(

@@ -41,10 +41,11 @@ eager loop [U]; layout semantics live in freki_spark.kernel.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from itertools import accumulate
+from typing import TYPE_CHECKING
 
-import pandas as pd
+import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
@@ -53,6 +54,14 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 from . import kernel, spec
+
+# pandas is imported inside S7's three stage functions only.  Every
+# executor core forks a Python worker for the narrow path, and a worker
+# that never loads pandas holds about 30 MB less; the narrow path builds
+# its output from Arrow buffers because pa.array imports pandas on its
+# first call, whatever its input.
+if TYPE_CHECKING:
+    import pandas as pd
 
 # --------------------------------------------------------------------------
 # schemas
@@ -126,23 +135,70 @@ _STAGE2_SCHEMA = T.StructType(
 _SPANS_ARROW = to_arrow_type(DOC_SCHEMA["spans"].dataType)
 
 
+def _offsets(lengths: Iterable[int]) -> np.ndarray:
+    """Arrow int32 offsets of values of these lengths: 0, then their
+    running sums.  Past 2 GiB a 32-bit offset would wrap, so a batch
+    that large fails loudly instead."""
+    ends = np.fromiter(accumulate(lengths, initial=0), np.int64)
+    if ends[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{ends[-1]} values or bytes in one Arrow batch column: past the "
+            "2 GiB limit of 32-bit offsets"
+        )
+    return ends.astype(np.int32)
+
+
+def _int32_array(values: np.ndarray) -> pa.Array:
+    """A non-null int32 Arrow array over an int32 numpy array's buffer."""
+    return pa.Array.from_buffers(pa.int32(), len(values), [None, pa.py_buffer(values)])
+
+
+def _string_array(values: list[str | None]) -> pa.Array:
+    """A ``pa.string()`` array built from its buffers: the values' UTF-8
+    bytes end to end, their offsets, and a validity bitmap only when a
+    value is None (a None holds no bytes)."""
+    data = [b"" if v is None else v.encode() for v in values]
+    n_null = values.count(None)
+    bitmap = None
+    if n_null:
+        bitmap = pa.py_buffer(np.packbits([v is not None for v in values], bitorder="little"))
+    return pa.StringArray.from_buffers(
+        len(values),
+        pa.py_buffer(_offsets(map(len, data))),
+        pa.py_buffer(b"".join(data)),
+        bitmap,
+        n_null,
+    )
+
+
+def _spans_array(docs: list[list[dict]]) -> pa.Array:
+    """The ``spans`` column of a batch, of type ``_SPANS_ARROW``: the
+    kernel's span dicts of every doc as one struct array, cut into one
+    list per doc by int32 offsets."""
+    flat = [s for spans in docs for s in spans]
+    fields = [_string_array([s[f] for s in flat]) for f in ("kind", "text", "media_ref")]
+    fields.append(_int32_array(np.fromiter((s["offset"] for s in flat), np.int32, len(flat))))
+    structs = pa.StructArray.from_arrays(fields, fields=list(_SPANS_ARROW.value_type))
+    offsets = _int32_array(_offsets(map(len, docs)))
+    return pa.ListArray.from_arrays(offsets, structs, type=_SPANS_ARROW)
+
+
 def _extract_docs_arrow(batches):
-    """mapInArrow fast path: the kernel's span dicts of a whole batch
-    cross into Arrow in one ``pa.array`` conversion per column."""
+    """mapInArrow fast path: the kernel runs per doc, and each output
+    batch is assembled from Arrow buffers (``_spans_array``,
+    ``_string_array``), the input ``doc_id`` column passed through.  No
+    ``pa.array`` call and no pandas: a narrow-path worker never imports
+    pandas (``tests/test_narrow_arrow.py``)."""
     for rb in batches:
-        doc_ids = rb.column("doc_id").to_pylist()
+        doc_ids = rb.column("doc_id")
         spans_out: list[list[dict]] = []
         errors: list[str | None] = []
-        for doc_id, spans in zip(doc_ids, rb.column("spans").to_pylist()):
+        for doc_id, spans in zip(doc_ids.to_pylist(), rb.column("spans").to_pylist()):
             rows, err = kernel.extract_document_rows(doc_id, spans or [])
             spans_out.append(rows)
             errors.append(err)
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(doc_ids, pa.string()),
-                pa.array(spans_out, _SPANS_ARROW),
-                pa.array(errors, pa.string()),
-            ],
+            [doc_ids.cast(pa.string()), _spans_array(spans_out), _string_array(errors)],
             names=["doc_id", "spans", "error"],
         )
 
@@ -192,6 +248,8 @@ def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     and no media) still emits one ``empty`` marker row, so the doc
     reaches stage 3 and comes out as (doc_id, [], null) like on the
     unsalted path."""
+    import pandas as pd
+
     for pdf in it:
         rows: list[tuple] = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
@@ -205,6 +263,8 @@ def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
     fonts in first-appearance order, its number of lines and its error
     (null, or the doc's quarantine error with no records) — everything
     stage 3 needs to renumber."""
+    import pandas as pd
+
     pdf = pdf.sort_values("pos")
     records, doc_fonts, n_lines, err = kernel.extract_group_records(
         zip(pdf["item_type"], pdf["payload"], pdf["media_ref"], pdf["page"].tolist()),
@@ -224,6 +284,8 @@ def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
     lists concatenated in salt order, first occurrences kept: shards are
     disjoint, ordered slices of the doc.  Rendering is the narrow path's
     ``kernel.finalize_records``.  Shards arrive in no particular order."""
+    import pandas as pd
+
     doc_id = pdf["doc_id"].iloc[0]
     shards = pdf.sort_values("salt")
     errors = shards["error"].dropna()

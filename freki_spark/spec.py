@@ -14,7 +14,8 @@ Both implementations of the spec import ONLY this module:
 - ``freki_spark.oracle``  — readable single-node pure-Python/numpy
   oracle (the golden-answer generator);
 - ``freki_spark.kernel``  — the vectorized numpy kernel that runs
-  inside the Spark pandas UDFs.
+  inside the pipeline's Python UDFs (the narrow ``mapInArrow`` path
+  and the salted path's pandas stages).
 
 They are deliberately coded separately (two-implementation consistency
 check, SURVEY.md §5.2).

@@ -69,9 +69,17 @@ def test_resume_no_duplicates_and_identical(spark, docs, tmp_path):
     out = read_output(spark, str(resumed))
     assert out.count() == out.select("doc_id").distinct().count()
 
-    # third run is a no-op
-    s4 = run_extraction(spark, df, str(resumed), run_id="r2c", n_batches=6)
+    # third run is a no-op: it reads the lineage and nothing else, no
+    # input scan and no cache of it
+    s4 = {}
+    ran = node_names_run_by(
+        spark,
+        lambda: s4.update(run_extraction(spark, df, str(resumed), run_id="r2c", n_batches=6)),
+    )
     assert s4["batches_run"] == 0
+    scans = {n for n in ran if "Scan" in n}
+    assert scans and all(n.startswith("Scan parquet") for n in scans), ran
+    assert "InMemoryTableScan" not in ran, ran
 
 
 def test_lineage_metrics(spark, docs, tmp_path):
