@@ -9,8 +9,9 @@ and is extracted once by ``write_batch``, which writes ``data/`` and
 on those writes; the lineage append that follows is the commit point.
 A crash before it leaves an uncommitted (overwritable) batch.
 
-Resume skips committed batch ids outright (deterministic assignment,
-no data read).  Uncommitted batch dirs may hold partial files from a
+The batch list is ``range(n_batches)``: every id commits one lineage
+row, an empty bucket's with zero counts.  Resume skips committed ids
+(no data read).  Uncommitted batch dirs may hold partial files from a
 killed run; they are never trusted, only overwritten by the re-run.
 
 ``n_batches`` is recorded in lineage and pinned: the batch dirs are
@@ -112,7 +113,11 @@ def run_extraction(
     n_batches: int = 8,
     salt_threshold: int = spec.SALT_SPAN_THRESHOLD,
 ) -> dict:
-    """Run (or resume) checkpointed extraction.  Returns a summary dict."""
+    """Run (or resume) checkpointed extraction of the batch ids in
+    ``range(n_batches)`` not yet committed.  Returns this call's summary:
+    ``run_id``, ``batches_run``, ``n_docs``, ``n_spans``, ``n_errors``."""
+    if n_batches < 1:
+        raise ValueError(f"n_batches must be at least 1 (got {n_batches})")
     done, prior_nb = committed_batches(spark, out_dir)
     if prior_nb and prior_nb != {n_batches}:
         # the batch dirs are keyed by pmod(hash, n_batches): a different
@@ -123,9 +128,6 @@ def run_extraction(
             f"resume with the same value (got {n_batches})"
         )
     summary = {"run_id": run_id, "batches_run": 0, "n_docs": 0, "n_spans": 0, "n_errors": 0}
-    if done >= set(range(n_batches)):
-        # a finished run: nothing to scan, cache or list
-        return summary
     batched = input_df.withColumn("batch_id", doc_bucket(n_batches))
     if done:
         # the batch filter IS the exactly-once guard: batch_id is a
@@ -142,9 +144,7 @@ def run_extraction(
         batched = batched.filter(~F.col("batch_id").isin(sorted(done)))
     batched = batched.persist()
     try:
-        todo = sorted(
-            r.batch_id for r in batched.select("batch_id").distinct().collect()
-        )
+        todo = [b for b in range(n_batches) if b not in done]
         for b in todo:
             t0 = time.monotonic()
             batch_df = batched.filter(F.col("batch_id") == b).select("doc_id", "spans")
@@ -167,9 +167,8 @@ def run_extraction(
                 f"{out_dir}/lineage"
             )
             summary["batches_run"] += 1
-            summary["n_docs"] += counts["n_docs"]
-            summary["n_spans"] += counts["n_spans"]
-            summary["n_errors"] += counts["n_errors"]
+            for k in ("n_docs", "n_spans", "n_errors"):
+                summary[k] += counts[k]
     finally:
         # released on every way out: a failed batch must not leave the
         # whole input cached in a long-lived session

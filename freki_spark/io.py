@@ -4,7 +4,8 @@ No Iceberg runtime jar ships in this sandbox (SURVEY.md §7), so the
 Iceberg branch is config-only: at prod the same calls go through
 ``spark.read.table`` / ``DataFrameWriterV2.writeTo(...).append()`` on
 a table partitioned by ``bucket(N, doc_id)`` — the partition transform
-keeps resume anti-joins and per-partition checkpoints prunable.
+keeps the per-batch filter of a checkpointed run (one bucket per batch
+id; resume filters committed ids out, never anti-joins) prunable.
 Locally everything is parquet with an explicit ``pmod(xxhash64(doc_id),
 N)`` bucket column standing in for the Iceberg transform.
 """

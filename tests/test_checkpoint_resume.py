@@ -28,11 +28,26 @@ def docs():
     return fixtures.random_docs(60, seed=11, prefix="ck")
 
 
-def _killed_run(spark, df, out, run_id, n_batches, batch_ids):
-    """A run killed after committing only ``batch_ids``: the same call
-    over the input restricted to those batches."""
-    partial = df.filter(doc_bucket(n_batches).isin(batch_ids))
-    return run_extraction(spark, partial, str(out), run_id=run_id, n_batches=n_batches)
+class _Killed(Exception):
+    """A kill, raised in place of a batch's write."""
+
+
+def _killed_run(monkeypatch, spark, df, out, run_id, n_batches, k):
+    """A run killed in its batch loop: the write of batch ``k`` raises,
+    so batches ``0..k-1`` stay committed, as after a crash."""
+    from freki_spark import checkpoint
+
+    original = checkpoint.write_batch
+
+    def write_until_killed(batch_df, out_dir, batch_id, salt_threshold):
+        if batch_id >= k:
+            raise _Killed(batch_id)
+        return original(batch_df, out_dir, batch_id, salt_threshold)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "write_batch", write_until_killed)
+        with pytest.raises(_Killed):
+            run_extraction(spark, df, str(out), run_id=run_id, n_batches=n_batches)
 
 
 def _spans_map(df):
@@ -42,7 +57,7 @@ def _spans_map(df):
     }
 
 
-def test_resume_no_duplicates_and_identical(spark, docs, tmp_path):
+def test_resume_no_duplicates_and_identical(spark, docs, tmp_path, monkeypatch):
     df = docs_to_df(spark, docs)
     one_shot = tmp_path / "oneshot"
     resumed = tmp_path / "resumed"
@@ -51,9 +66,8 @@ def test_resume_no_duplicates_and_identical(spark, docs, tmp_path):
     assert s1["batches_run"] == 6
 
     # killed run: only 2 of 6 batches commit
-    s2 = _killed_run(spark, df, resumed, "r2a", 6, [0, 1])
-    assert s2["batches_run"] == 2
-    assert committed_batches(spark, str(resumed))[0] != set(range(6))
+    _killed_run(monkeypatch, spark, df, resumed, "r2a", 6, 2)
+    assert committed_batches(spark, str(resumed))[0] == {0, 1}
 
     # resume: the rest commit, already-done batches are skipped
     s3 = run_extraction(spark, df, str(resumed), run_id="r2b", n_batches=6)
@@ -142,7 +156,7 @@ def test_stream_extract_incremental(spark, docs, tmp_path):
     assert got2 == batch
 
 
-def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
+def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path, monkeypatch):
     """A killed run leaves partially-written parquet in an UNCOMMITTED
     batch dir.  Resume must not count those docs as done (they would be
     skipped while the overwrite destroys the partial data — data loss);
@@ -150,9 +164,9 @@ def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
     df = docs_to_df(spark, docs)
     out = tmp_path / "partial"
 
-    s1 = _killed_run(spark, df, out, "p1", 6, [0, 1])
-    assert s1["batches_run"] == 2
+    _killed_run(monkeypatch, spark, df, out, "p1", 6, 2)
     done, _ = committed_batches(spark, str(out))
+    assert done == {0, 1}
     victim = min(set(range(6)) - done)
 
     # simulate the kill: half of the victim batch's docs already written
@@ -177,12 +191,43 @@ def test_resume_ignores_partial_uncommitted_batch(spark, docs, tmp_path):
     )
 
 
-def test_resume_rejects_changed_n_batches(spark, docs, tmp_path):
+def test_resume_rejects_changed_n_batches(spark, docs, tmp_path, monkeypatch):
     df = docs_to_df(spark, docs)
     out = tmp_path / "nb"
-    _killed_run(spark, df, out, "n1", 4, [0])
+    _killed_run(monkeypatch, spark, df, out, "n1", 4, 1)
     with pytest.raises(ValueError, match="n_batches"):
         run_extraction(spark, df, str(out), run_id="n2", n_batches=8)
+
+
+@pytest.mark.parametrize("n_batches", [0, -1])
+def test_run_rejects_fewer_than_one_batch(spark, docs, tmp_path, n_batches):
+    """No batch list is no run: it is an error, not a finished run."""
+    out = tmp_path / "none"
+    with pytest.raises(ValueError, match="n_batches"):
+        run_extraction(spark, docs_to_df(spark, docs), str(out), n_batches=n_batches)
+    assert not out.exists()
+
+
+def test_run_commits_every_batch_an_empty_one_too(spark, docs, tmp_path):
+    """The batch list is ``range(n_batches)``: a bucket that holds no
+    doc commits a lineage row with zero counts, so the run is finished
+    and its re-run reads only the lineage."""
+    df = docs_to_df(spark, docs).filter(doc_bucket(4) != 2)
+    assert df.count() < len(docs)
+    out = str(tmp_path / "gap")
+    run_extraction(spark, df, out, run_id="g1", n_batches=4)
+    assert committed_batches(spark, out)[0] == {0, 1, 2, 3}
+    (empty,) = spark.read.parquet(f"{out}/lineage").filter("batch_id = 2").collect()
+    assert (empty.n_docs, empty.n_spans, empty.n_errors) == (0, 0, 0)
+    assert empty.doc_id_min is None and empty.doc_id_max is None
+    assert metrics(spark, out).first().batches == 4
+
+    s = {}
+    ran = node_names_run_by(
+        spark, lambda: s.update(run_extraction(spark, df, out, run_id="g2", n_batches=4))
+    )
+    assert s["batches_run"] == 0
+    assert "InMemoryTableScan" not in ran, ran
 
 
 def test_extraction_leaves_no_cached_dataset(spark, docs, tmp_path, monkeypatch):
@@ -247,7 +292,8 @@ def test_commit_extracts_each_doc_once(spark, tmp_path):
 
 def test_commit_without_mega_doc_plans_no_salted_path(spark, docs, tmp_path):
     """With no doc above the salting threshold, a run plans only the
-    narrow kernel: no S7 stage runs, not even over empty input."""
+    narrow kernel: no S7 stage runs, not even over empty input, and
+    nothing shuffles."""
     assert max(len(d["spans"]) for d in docs) <= spec.SALT_SPAN_THRESHOLD
     df = docs_to_df(spark, docs)
     ran = node_names_run_by(
@@ -255,6 +301,7 @@ def test_commit_without_mega_doc_plans_no_salted_path(spark, docs, tmp_path):
     )
     assert "MapInArrow" in ran
     assert not ran & {"MapInPandas", "FlatMapGroupsInPandas"}, ran
+    assert not any("Exchange" in n for n in ran), ran
 
 
 _COUNTS = ("doc_id_min", "doc_id_max", "n_docs", "n_spans", "n_errors")

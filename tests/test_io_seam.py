@@ -3,8 +3,9 @@ parquet-locally boundary, SURVEY.md §7).
 
 No Iceberg jar ships in this sandbox, so the iceberg branch stays
 config-only; these tests pin the PARQUET fallback's scale-relevant
-contracts — the ones the production table relies on for resume
-anti-joins and per-partition checkpoints:
+contracts — the ones the production table relies on for the per-batch
+filter of a checkpointed run (resume filters committed batch ids out,
+never anti-joins):
 
 - bucket assignment is deterministic, bounded, and well-spread (the
   stand-in for Iceberg's ``bucket(N, doc_id)`` partition transform);
