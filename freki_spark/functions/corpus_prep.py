@@ -3396,8 +3396,7 @@ FROM x GROUP BY 1, 2, 3
 # The naive dense-id assignment is row_number() over one global
 # ordering — a single-partition sort bottleneck at 10^8-token
 # vocabularies.  This op is the TWO-PASS SHARD REBASE instead (the
-# pipeline.py salted-renumber / q_compact_plan pattern at vocabulary
-# grain): tokens shard by md5 bucket, rank within their bucket
+# q_compact_plan pattern at vocabulary grain): tokens shard by md5 bucket, rank within their bucket
 # (VOCAB_BUCKETS-way parallel), bucket sizes roll up to a tiny table
 # whose running sum gives each bucket's base offset, and
 # id = base(bucket) + rank − 1.  Ids are provably a permutation of

@@ -13,8 +13,9 @@ The kernel has two entry surfaces.  Both quarantine null span fields
 with ``null_field_error``, put a doc's pages and media in one
 ``reading_order`` (which ``html_kernel`` shares for HTML records),
 build span records through one ``layout_records`` (S2–S5 per page,
-media spans in reading order) and render them through one
-``finalize_records``:
+media spans in reading order; records carry no doc position) and
+render them through one ``finalize_records``, which numbers lines and
+font ids in record order:
 
 - ``extract_document_rows`` — whole document in, final output span
   rows out (the unsalted fast path; one call per input row inside
@@ -23,8 +24,8 @@ media spans in reading order) and render them through one
 - ``page_pieces`` + ``extract_group_records`` — the salted mega-doc
   path (S7): stage 1 takes the reading order over standalone per-page
   XML pieces split by regex, stage 2 lays out each page shard into span
-  records with shard-local line numbers; stage 3 shifts them to
-  doc-global numbering and renders them (see pipeline.py).
+  records; stage 3 concatenates the shards' records in doc order and
+  renders them (see pipeline.py).
 
 Reference parity targets (pvk444/freki [U], mount empty at build time):
 freki/analyzers/{tetml,pdfminer}.py (S1), analyzers/base.py (S2/S3),
@@ -542,15 +543,12 @@ def segment_blocks(
 # --------------------------------------------------------------------------
 
 
-def layout_page(page: PageTokens, records: list, line_no: int, doc_fonts: dict) -> int:
-    """Run S2–S5 on one page and append its block and line records.
-
-    records: dicts with keys kind/page/block_k/line_start/line_end/
-    line_no/fonts_keys/body/media_ref; lines are numbered on from
-    ``line_no``.  doc_fonts: insertion-ordered key set (dict keys)
-    gaining each font key at its first appearance.  Returns the last
-    line number.
-    """
+def layout_page(page: PageTokens, records: list) -> None:
+    """Run S2–S5 on one page and append its records: each block's
+    record (its bbox as ``body``, its number of lines as ``n_lines``),
+    then that block's line records (rendered text as ``body``, the
+    line's font keys in first-appearance order as ``fonts_keys``).
+    Records carry no doc position: ``finalize_records`` numbers them."""
     lines = cluster_lines(page)
     segments = detect_columns(page, lines)
     blocks = segment_blocks(page, segments)
@@ -568,89 +566,73 @@ def layout_page(page: PageTokens, records: list, line_no: int, doc_fonts: dict) 
                 "kind": spec.KIND_BLOCK,
                 "page": page.number,
                 "block_k": k,
-                "line_start": line_no + 1,
-                "line_end": line_no + len(blines),
-                "line_no": 0,
+                "n_lines": len(blines),
                 "fonts_keys": [],
                 "body": bbox,
                 "media_ref": "",
             }
         )
         for idx in blines:
-            line_no += 1
-            fkeys: list[str] = []
-            seen: set[str] = set()
-            for i in idx:
-                fk = page.fkeys[i]
-                if fk not in seen:
-                    seen.add(fk)
-                    fkeys.append(fk)
-                    doc_fonts.setdefault(fk)
             records.append(
                 {
                     "kind": spec.KIND_LINE,
                     "page": page.number,
                     "block_k": k,
-                    "line_start": 0,
-                    "line_end": 0,
-                    "line_no": line_no,
-                    "fonts_keys": fkeys,
+                    "n_lines": 0,
+                    "fonts_keys": list(dict.fromkeys([page.fkeys[i] for i in idx])),
                     "body": render_spacing(page, idx),
                     "media_ref": "",
                 }
             )
-    return line_no
 
 
-def layout_records(items: list) -> tuple[list[dict], dict[str, None], int]:
+def layout_records(items: list) -> list[dict]:
     """Span records of content in reading order: ``items`` holds parsed
     pages (``PageTokens``, laid out by ``layout_page``) and media spans
-    (dicts with ``text``/``media_ref``).  Returns (records, doc_fonts,
-    n_lines): the doc's font keys in first-appearance order and the
-    number of lines, numbered from 1."""
+    (dicts with ``text``/``media_ref``).  The records of consecutive
+    slices of ``items``, concatenated, are the records of the whole."""
     records: list[dict] = []
-    doc_fonts: dict[str, None] = {}
-    line_no = 0
     for it in items:
         if isinstance(it, PageTokens):
-            line_no = layout_page(it, records, line_no, doc_fonts)
+            layout_page(it, records)
         else:
             records.append(
                 {
                     "kind": spec.KIND_MEDIA,
                     "page": 0,
                     "block_k": 0,
-                    "line_start": 0,
-                    "line_end": 0,
-                    "line_no": 0,
+                    "n_lines": 0,
                     "fonts_keys": [],
                     "body": it["text"],
                     "media_ref": it["media_ref"],
                 }
             )
-    return records, doc_fonts, line_no
+    return records
 
 
-def finalize_records(doc_id: str, records: list, doc_fonts: dict) -> list[dict]:
-    """Render structured records into final (kind,text,media_ref,offset)
-    spans — the serializer of both paths.  ``records`` carry doc-global
-    line numbers in doc order (the salted path renumbers its shards
-    first), so each span's offset is its position; ``doc_fonts`` keys
-    are the doc's fonts in first-appearance order."""
-    fid = {fk: i for i, fk in enumerate(doc_fonts)}
+def finalize_records(doc_id: str, records: list) -> list[dict]:
+    """Render a doc's records, in doc order, into final
+    (kind,text,media_ref,offset) spans — the serializer of both paths.
+    Lines are numbered, and fonts given ids, here and nowhere else, in
+    record order: a block spans the ``n_lines`` lines after those before
+    it, a font's id is the number of fonts seen before its first line,
+    and each span's offset is its position."""
+    fid: dict[str, int] = {}
+    line_no = 0
     out = []
     for off, r in enumerate(records):
         if r["kind"] == spec.KIND_LINE:
-            labels = [font_label(fid[fk], fk) for fk in r["fonts_keys"]]
-            text = render_line(r["line_no"], labels, r["body"])
+            line_no += 1
+            labels = [font_label(fid.setdefault(fk, len(fid)), fk) for fk in r["fonts_keys"]]
+            text = render_line(line_no, labels, r["body"])
         elif r["kind"] == spec.KIND_BLOCK:
             text = render_block_header_from_parts(
                 doc_id,
                 r["page"],
                 r["block_k"],
                 r["body"],
-                r["line_start"],
-                r["line_end"],
+                line_no + 1,
+                line_no + r["n_lines"],
             )
         else:  # media
             text = r["body"]
@@ -768,8 +750,7 @@ def extract_document_rows(
     _, items, err = reading_order(spans, _pages)
     if err is not None:
         return [], err
-    records, doc_fonts, _ = layout_records(items)
-    return finalize_records(doc_id, records, doc_fonts), None
+    return finalize_records(doc_id, layout_records(items)), None
 
 
 # --------------------------------------------------------------------------
@@ -831,18 +812,16 @@ def repair_page_piece(piece: str, dialect: str, decls: str = "") -> str:
     return f"<R{decls}>{piece}</R>"
 
 
-def extract_group_records(
-    items, dialect: str
-) -> tuple[list[dict], dict[str, None], int, str | None]:
+def extract_group_records(items, dialect: str) -> tuple[list[dict], str | None]:
     """Stage 2 of the salted path: lay out one page shard.
 
     items: (item_type, payload, media_ref, page) tuples in reading order;
     the payload of a 'page' is a ``page_pieces`` piece and ``page`` its
     1-based position in the doc, the payload of a 'media' is its text,
     of an 'error' stage 1's quarantine error ('empty' is skipped).
-    Returns ``layout_records``' (records, doc_fonts, n_lines), line
-    numbers shard-local, then the error: ``None``, or the first error
-    with no records."""
+    Returns (``layout_records``' records, None), or ([], the first
+    error).  The shards' records concatenated in doc order are the doc's
+    records."""
     content: list = []
     for item_type, payload, media_ref, page in items:
         if item_type == "media":
@@ -850,8 +829,8 @@ def extract_group_records(
         elif item_type == "page":
             pages, err = _parse(dialect, payload, page)
             if err is not None:
-                return [], {}, 0, err
+                return [], err
             content += pages
         elif item_type == "error":
-            return [], {}, 0, payload
-    return (*layout_records(content), None)
+            return [], payload
+    return layout_records(content), None

@@ -10,10 +10,10 @@ Dataflow (north-star lifecycle, SURVEY.md §3.2):
            stage 1  mapInPandas: the kernel's reading order over
                     regex-split page pieces, salted by page
            stage 2  groupBy(doc_id, salt).applyInPandas: per-shard
-                    layout with shard-local numbering, one row
-                    per shard                            -- 1 shuffle
-           stage 3  groupBy(doc_id).applyInPandas: shift the shards'
-                    lines by the lines before them and render them
+                    layout into records that carry no doc
+                    position, one row per shard          -- 1 shuffle
+           stage 3  groupBy(doc_id).applyInPandas: concatenate the
+                    shards' records in doc order and render them
                     with kernel.finalize_records        -- 1 shuffle
     union → (doc_id, spans, error)
 
@@ -27,9 +27,10 @@ Design notes for 100 TB / 10^12-doc scale:
 - Catalyst cannot split a skewed group inside applyInPandas (AQE skew
   handling does not apply there), so mega-documents are salted
   *explicitly*: pages are sharded into at most SALT_MAX_GROUPS groups
-  per doc and laid out in parallel; one cheap per-doc pass then shifts
-  each shard's line numbers by the lines of the shards before it and
-  renders the spans through the narrow path's own serializer.
+  per doc and laid out in parallel; one cheap per-doc pass then
+  concatenates the shards' records in doc order and renders the spans
+  through the narrow path's own serializer, which numbers the lines and
+  fonts.
 - Corrupt XML and null span fields never fail a task: quarantined docs
   come back with spans=[] and a non-null error column (split with
   ``split_quarantine``).
@@ -106,9 +107,7 @@ _RECORD_STRUCT = T.StructType(
         T.StructField("kind", T.StringType()),
         T.StructField("page", T.IntegerType()),
         T.StructField("block_k", T.IntegerType()),
-        T.StructField("line_start", T.IntegerType()),
-        T.StructField("line_end", T.IntegerType()),
-        T.StructField("line_no", T.IntegerType()),
+        T.StructField("n_lines", T.IntegerType()),
         T.StructField("fonts_keys", T.ArrayType(T.StringType())),
         T.StructField("body", T.StringType()),
         T.StructField("media_ref", T.StringType()),
@@ -120,8 +119,6 @@ _STAGE2_SCHEMA = T.StructType(
         T.StructField("doc_id", T.StringType()),
         T.StructField("salt", T.IntegerType()),
         T.StructField("records", T.ArrayType(_RECORD_STRUCT)),
-        T.StructField("fonts_keys", T.ArrayType(T.StringType())),
-        T.StructField("n_lines", T.IntegerType()),
         T.StructField("error", T.StringType()),
     ]
 )
@@ -258,32 +255,25 @@ def _stage1_split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _stage2_layout(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per (doc_id, salt) group: lay out the page shard with shard-local
-    numbering.  Emits one row: the shard's records in reading order, its
-    fonts in first-appearance order, its number of lines and its error
-    (null, or the doc's quarantine error with no records) — everything
-    stage 3 needs to renumber."""
+    """Per (doc_id, salt) group: lay out the page shard.  Emits one row:
+    the shard's records in reading order and its error (null, or the
+    doc's quarantine error with no records)."""
     import pandas as pd
 
     pdf = pdf.sort_values("pos")
-    records, doc_fonts, n_lines, err = kernel.extract_group_records(
+    records, err = kernel.extract_group_records(
         zip(pdf["item_type"], pdf["payload"], pdf["media_ref"], pdf["page"].tolist()),
         pdf["dialect"].iloc[0],
     )
-    row = [pdf["doc_id"].iloc[0], pdf["salt"].iloc[0], records, list(doc_fonts), n_lines, err]
+    row = [pdf["doc_id"].iloc[0], pdf["salt"].iloc[0], records, err]
     return pd.DataFrame([row], columns=_STAGE2_SCHEMA.names)
 
 
 def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per doc: renumber the stage-2 shards and render them.
-
-    A shard's lines are numbered from 1, so in salt order each shard's
-    lines shift by the lines of the shards before it, and the records
-    concatenated in salt order are the doc's, their offsets their
-    positions.  The doc's font ids follow the shards' first-appearance
-    lists concatenated in salt order, first occurrences kept: shards are
-    disjoint, ordered slices of the doc.  Rendering is the narrow path's
-    ``kernel.finalize_records``.  Shards arrive in no particular order."""
+    """Per doc: the first shard error, or the shards' records
+    concatenated in salt order (shards are disjoint, ordered slices of
+    the doc, and arrive in no particular order) and rendered by the
+    narrow path's ``kernel.finalize_records``."""
     import pandas as pd
 
     doc_id = pdf["doc_id"].iloc[0]
@@ -291,24 +281,12 @@ def _stage3_assemble(pdf: pd.DataFrame) -> pd.DataFrame:
     errors = shards["error"].dropna()
     if len(errors):
         return pd.DataFrame([[doc_id, [], errors.iloc[0]]], columns=EXTRACTED_SCHEMA.names)
-    records = []
-    for recs, base in zip(shards["records"], accumulate(shards["n_lines"].tolist(), initial=0)):
-        records += [
-            dict(
-                r,
-                line_start=r["line_start"] + base,
-                line_end=r["line_end"] + base,
-                line_no=r["line_no"] + base,
-            )
-            for r in recs
-        ]
-    doc_fonts = dict.fromkeys(k for keys in shards["fonts_keys"] for k in keys)
-    spans = kernel.finalize_records(doc_id, records, doc_fonts)
+    spans = kernel.finalize_records(doc_id, [r for recs in shards["records"] for r in recs])
     return pd.DataFrame([[doc_id, spans, None]], columns=EXTRACTED_SCHEMA.names)
 
 
 def extract_salted(df: DataFrame) -> DataFrame:
-    """Mega-document path: page-parallel layout, then a per-doc renumber.
+    """Mega-document path: page-parallel layout, then a per-doc render.
 
     Plan shape (2 shuffles, over page pieces and then over one row of
     layout records per shard — never raw XML bytes twice):
@@ -317,9 +295,10 @@ def extract_salted(df: DataFrame) -> DataFrame:
          salted by page;
       2. ``groupBy(doc_id, salt).applyInPandas`` — the page-shard layout,
          the work that fans out over executors, one row per shard;
-      3. ``groupBy(doc_id).applyInPandas`` — one task per doc renumbers
-         its shards and renders the spans; a doc whose shards hold no
-         record, or carry an error, comes out of the same group.
+      3. ``groupBy(doc_id).applyInPandas`` — one task per doc
+         concatenates its shards' records and renders the spans; a doc
+         whose shards hold no record, or carry an error, comes out of
+         the same group.
     """
     return (
         df.mapInPandas(_stage1_split, _STAGE1_SCHEMA)

@@ -89,19 +89,6 @@ def read_freki_docs(docs: DataFrame) -> DataFrame:
     return read_freki_spans(exploded)
 
 
-def render_freki_text(docs: DataFrame) -> DataFrame:
-    """FrekiDoc.write parity — the other half of the round-trip: one
-    row per document carrying the full rendered freki file text.  The
-    ``spans`` array is already in offset order, so this is a pure-JVM
-    ``array_join`` (narrow map, whole-stage codegen, no shuffle)."""
-    return docs.select(
-        "doc_id",
-        F.array_join(F.transform("spans", lambda s: s["text"]), "\n").alias(
-            "freki_text"
-        ),
-    )
-
-
 def blocks(parsed: DataFrame) -> DataFrame:
     """Block view — parity with iterating FrekiDoc blocks upstream."""
     return parsed.filter(F.col("kind") == spec.KIND_BLOCK).select(

@@ -16,6 +16,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from freki_spark.grammar import font_key
 from freki_spark.kernel import PageTokens, cluster_lines, render_spacing
 
 coord = st.floats(min_value=0.0, max_value=600.0, allow_nan=False, width=32)
@@ -31,7 +32,7 @@ def pages(draw, min_tokens=1, max_tokens=40):
         w = draw(st.floats(min_value=0.5, max_value=80.0, allow_nan=False, width=32))
         h = draw(st.floats(min_value=0.5, max_value=30.0, allow_nan=False, width=32))
         text = draw(st.text(alphabet="abcXYZ09", min_size=1, max_size=8))
-        page.add(text, llx, lly, llx + w, lly + h, "Times|10.0")
+        page.add(text, llx, lly, llx + w, lly + h, font_key("Times", 10.0))
     page.freeze()
     return page
 
@@ -79,16 +80,26 @@ def test_render_spacing_preserves_texts(page):
 @settings(max_examples=40, deadline=None)
 @given(pages(min_tokens=2, max_tokens=30))
 def test_layout_page_block_ranges_cover_lines(page):
-    from freki_spark.kernel import layout_page
+    from freki_spark.kernel import finalize_records, layout_page
 
     records: list = []
-    fonts: dict = {}
-    n_lines = layout_page(page, records, 0, fonts)
-    line_recs = [r for r in records if r["kind"] == "line"]
-    block_recs = [r for r in records if r["kind"] == "block"]
-    assert len(line_recs) == n_lines
-    # block line ranges are disjoint, contiguous, and cover 1..n_lines
-    ranges = sorted((r["line_start"], r["line_end"]) for r in block_recs)
+    layout_page(page, records)
+    # each block record is followed by exactly its n_lines line records,
+    # and every record belongs to one block
+    i = 0
+    while i < len(records):
+        block = records[i]
+        assert block["kind"] == "block" and block["n_lines"] >= 1
+        lines = records[i + 1 : i + 1 + block["n_lines"]]
+        assert len(lines) == block["n_lines"]
+        assert all(r["kind"] == "line" for r in lines)
+        i += 1 + block["n_lines"]
+    assert i == len(records)
+    # so the rendered block line ranges are disjoint, contiguous, and
+    # cover 1..n_lines
+    spans = finalize_records("d", records)
+    n_lines = sum(s["kind"] == "line" for s in spans)
+    ranges = sorted(tuple(map(int, s["text"].split()[-2:])) for s in spans if s["kind"] == "block")
     covered = []
     for a, b in ranges:
         assert a <= b

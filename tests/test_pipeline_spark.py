@@ -405,7 +405,7 @@ def test_extract_with_mega_doc_plans_salted_path(spark, matrix_df, golden):
     text, so where the chunks are cut does not keep a doc off S7."""
     ran = node_names_run_by(spark, lambda: extract(matrix_df, salt_threshold=1).collect())
     assert "FlatMapGroupsInPandas" in ran
-    # stage 3 renumbers each doc in one grouped map: no join of records
+    # stage 3 renders each doc in one grouped map: no join of records
     # with per-doc metadata
     joins = {"BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin", "BroadcastExchange"}
     assert not ran & joins, ran
@@ -608,6 +608,24 @@ def test_salted_zero_record_doc_survives(spark, tmp_path):
     assert (s["n_docs"], s["n_errors"]) == (len(docs), 0)
 
 
+def test_layout_records_concatenate_across_any_split():
+    """Layout records carry no doc position: the records of a doc's
+    reading order cut at any point, concatenated, render to the narrow
+    kernel's spans.  S7 stage 3 relies on it to join its shards."""
+    from freki_spark import kernel
+
+    for s in range(6):
+        doc = fixtures.make_doc(f"split-{s}", s, "mega")
+        want, err = kernel.extract_document_rows(doc["doc_id"], doc["spans"])
+        assert err is None
+        spans = sorted(doc["spans"], key=lambda x: x["offset"])
+        _, items, err = kernel.reading_order(spans, kernel._pages)
+        assert err is None and len(items) > 1
+        for k in range(len(items) + 1):
+            records = kernel.layout_records(items[:k]) + kernel.layout_records(items[k:])
+            assert kernel.finalize_records(doc["doc_id"], records) == want, (s, k)
+
+
 def test_stage3_assembles_shuffled_shards_in_doc_order():
     """Stage 3 receives a doc's stage-2 rows in no guaranteed order:
     shuffled, they still assemble to the narrow kernel's spans.  The doc
@@ -621,7 +639,9 @@ def test_stage3_assembles_shuffled_shards_in_doc_order():
     doc = fixtures.make_doc("ord-7", 42, "mega")
     st1 = pd.concat(list(_stage1_split(iter([pd.DataFrame([doc])]))))
     st2 = pd.concat([_stage2_layout(shard) for _, shard in st1.groupby(["doc_id", "salt"])])
-    fonts = st2.sort_values("salt")["fonts_keys"].tolist()
+    fonts = [
+        [k for r in recs for k in r["fonts_keys"]] for recs in st2.sort_values("salt")["records"]
+    ]
     assert len(fonts) >= 3 and any(set(f) - set(fonts[0]) for f in fonts[1:])
     assert any(r["kind"] == "media" for recs in st2["records"] for r in recs)
 
