@@ -23,10 +23,20 @@ to the ET path (span equality is the engine's core invariant):
    via ``count('<') != count('>')`` — or non-predefined entity
    references) falls back to the ET parser, as does any structural
    anomaly discovered during extraction (returns ``None``).
-3. The walk replicates the ET parsers' exact semantics: document-order
-   traversal, the same attribute defaults, the same float/int
-   conversions (same exception classes for the content-error
-   quarantine), the same word-break rules.
+3. Each S1 rule is stated once.  Both fast parsers cut pages with one
+   cutter (``_cut_pages``: eligibility, validation, line-ending
+   normalization, then the page scan on the spec's page markers
+   ``spec.PAGE_START_RE``/``spec.PAGE_END_RE``).  What a page, word,
+   box and glyph font mean lives on the page class the parsers are
+   handed (``kernel.PageTokens``): the page rule of each dialect
+   (``tetml_page``/``pdfminer_page``), the TETML word and box rules
+   (``add_word``, ``tet_box``) and the per-doc ``(font, size)`` ->
+   font-key table (``FontKeys``).  The ET walks use the same ones, so
+   attribute defaults, float/int conversions and the exception they
+   raise cannot drift apart.  A PDFMiner glyph bbox has exactly four
+   fields on the fast path; any other arity falls back, and so does a
+   glyph value error (the fast path converts boxes after sizes, the ET
+   walk reports the first bad value in document order).
 
 Assumption shared with the ET path: the dialects' page / word /
 textline elements do not nest within themselves (true for both
@@ -45,7 +55,8 @@ from xml.parsers import expat
 
 import numpy as np
 
-from .grammar import font_key, mode_first as _mode_first, page_number
+from . import spec
+from .grammar import mode_first
 
 # --------------------------------------------------------------------------
 # eligibility + validation
@@ -144,12 +155,49 @@ def _attrs(blob: str) -> dict[str, str] | None:
     return out
 
 
+# the spec's page start marker plus its attribute blob
+_PAGE_OPEN = {d: re.compile(rx.pattern + r"([^>]*)>") for d, rx in spec.PAGE_START_RE.items()}
+
+
+def _cut_pages(xml: str, dialect: str, page_of):
+    """The page cutter of both fast parsers.  Checks ``fast_eligible``,
+    then ``validate`` (raises ET.ParseError), normalizes line endings,
+    and yields ``(page_of(attrs.get), body)`` per page in document
+    order, lazily, so a doc meets its errors and fallbacks in document
+    order.  A self-closing page has an empty body.  Yields None (= use
+    the ET path) for an ineligible doc, a page attribute blob ``_attrs``
+    cannot read, or a page whose close tag is not before the next
+    page's open (nested pages: ET's ``.//`` walk would visit the inner
+    words twice)."""
+    if not fast_eligible(xml):
+        yield None
+        return
+    validate(xml)
+    xml = _normalize(xml)
+    close = spec.PAGE_END_RE[dialect]
+    opens = list(_PAGE_OPEN[dialect].finditer(xml))
+    for i, m in enumerate(opens):
+        blob = m.group(1)
+        attrs = _attrs(blob)
+        if attrs is None:
+            yield None
+            return
+        page = page_of(attrs.get)
+        if blob.rstrip().endswith("/"):
+            yield page, ""
+            continue
+        end = opens[i + 1].start() if i + 1 < len(opens) else len(xml)
+        c = close.search(xml, m.end(), end)
+        if c is None:
+            yield None
+            return
+        yield page, xml[m.end() : c.start()]
+
+
 # --------------------------------------------------------------------------
 # TETML
 # --------------------------------------------------------------------------
 
-_TET_PAGE = re.compile(r"<(?:[\w.-]+:)?Page(?=[\s/>])([^>]*)>")
-_TET_PAGE_CLOSE = re.compile(r"</(?:[\w.-]+:)?Page>")
 # one alternation, matched in document order.  Every tag (including
 # unknown ones) is matched so the walk can track element depth inside
 # a Word — the ET parser reads ONLY DIRECT children of <Word>, so
@@ -162,7 +210,7 @@ _TET_PAGE_CLOSE = re.compile(r"</(?:[\w.-]+:)?Page>")
 _TET_EV = re.compile(
     r"<(?:"
     r"(?P<ws>(?:[\w.-]+:)?Word)(?=[\s/>])(?P<wattr>[^>]*)>"
-    r"|(?P<we>/(?:[\w.-]+:)?Word)>"
+    r"|(?P<we>/(?:[\w.-]+:)?Word)\s*>"
     r"|(?P<tx>(?:[\w.-]+:)?Text)(?=[\s/>])(?P<tattr>[^>]*)>(?P<txt>[^<]*)"
     r"|(?P<te>/(?:[\w.-]+:)?Text)>"
     r"|(?P<bx>(?:[\w.-]+:)?Box)(?=[\s/>])(?P<battr>[^>]*)>"
@@ -174,7 +222,8 @@ _TET_EV = re.compile(
 )
 # strict patterns exclude entity/whitespace-normalization triggers
 # from the value classes — such values fall through to the generic
-# _attrs path, which normalizes and unescapes like a real XML parser
+# _attrs path, which normalizes and unescapes like a real XML parser.
+# _BOX_FAST's groups are in ``PageTokens.tet_box``'s order.
 _BOX_FAST = re.compile(
     r'\s*llx="([^"&\n\t]*)"\s+lly="([^"&\n\t]*)"'
     r'\s+urx="([^"&\n\t]*)"\s+ury="([^"&\n\t]*)"\s*/?\s*$'
@@ -184,56 +233,17 @@ _BOX_FAST = re.compile(
 def parse_tetml_fast(xml: str, page_cls) -> list | None:
     """Returns list[PageTokens] or None (= use the ET path).  Raises
     ET.ParseError on malformed XML (identical expat message)."""
-    if not fast_eligible(xml):
-        return None
-    validate(xml)
-    xml = _normalize(xml)
-
     pages: list = []
-    fk_memo: dict[str, str] = {}
-    popens = list(_TET_PAGE.finditer(xml))
-    for pi, pm in enumerate(popens):
-        pa = _attrs(pm.group(1))
-        if pa is None:
-            return None  # page attr blob beyond the scan: ET decides
-        cur = page_cls(
-            page_number(pa.get("number")),
-            float(pa.get("width", "612")),
-            float(pa.get("height", "792")),
-        )
-        if pm.group(1).rstrip().endswith("/"):  # self-closing <Page/>
-            cur.freeze()
-            pages.append(cur)
-            continue
-        end = popens[pi + 1].start() if pi + 1 < len(popens) else len(xml)
-        body = xml[pm.end() : end]
-        cm = _TET_PAGE_CLOSE.search(body)
-        if cm is None:
-            # this page's close tag is not before the next page open:
-            # nested <Page> elements (ET would visit inner words twice
-            # via .//) — fall back
+    fonts = page_cls.FontKeys()
+    blob_fk: dict[str, str] = {}  # glyph attribute blob -> font key
+    for cut in _cut_pages(xml, spec.KIND_TETML, page_cls.tetml_page):
+        if cut is None:
             return None
-        body = body[: cm.start()]
-
+        cur, body = cut
         in_word = False
         w_text: str | None = None
         w_box: tuple | None = None
         w_fonts: list[str] = []
-
-        def finalize() -> None:
-            nonlocal in_word, w_text, w_box
-            if in_word and w_text and w_text.strip() and w_box is not None:
-                fk = (
-                    w_fonts[_mode_first(w_fonts)]
-                    if w_fonts
-                    else font_key("", 0.0)
-                )
-                cur.add(w_text, *w_box, fk)
-            in_word = False
-            w_text = None
-            w_box = None
-            w_fonts.clear()
-
         # wdepth = element depth relative to the Word interior; ET only
         # reads DIRECT children (wdepth == 0).  Every open tag that is
         # not self-closing increments it; every close tag decrements.
@@ -242,13 +252,12 @@ def parse_tetml_fast(xml: str, page_cls) -> list | None:
             if t[10]:  # <Glyph ...>text
                 ga = t[11]
                 if in_word and wdepth == 0:
-                    fk = fk_memo.get(ga)
+                    fk = blob_fk.get(ga)
                     if fk is None:
                         d = _attrs(ga)
                         if d is None:
                             return None
-                        fk = font_key(d.get("font", ""), float(d.get("size", "0")))
-                        fk_memo[ga] = fk
+                        fk = blob_fk[ga] = fonts.of(d.get)
                     w_fonts.append(fk)
                 if in_word and not ga.rstrip().endswith("/"):
                     wdepth += 1
@@ -272,22 +281,12 @@ def parse_tetml_fast(xml: str, page_cls) -> list | None:
                 if in_word and wdepth == 0:
                     bf = _BOX_FAST.match(ba)
                     if bf:
-                        w_box = (
-                            float(bf.group(1)),
-                            float(bf.group(2)),
-                            float(bf.group(3)),
-                            float(bf.group(4)),
-                        )
+                        w_box = tuple(map(float, bf.groups()))
                     else:
                         d = _attrs(ba)
                         if d is None:
                             return None
-                        w_box = (
-                            float(d.get("llx")),
-                            float(d.get("lly")),
-                            float(d.get("urx")),
-                            float(d.get("ury")),
-                        )
+                        w_box = page_cls.tet_box(d.get)
                 if in_word and not ba.rstrip().endswith("/"):
                     wdepth += 1
             elif t[9]:  # </Box>
@@ -299,13 +298,14 @@ def parse_tetml_fast(xml: str, page_cls) -> list | None:
                     # walk has cross-cutting semantics a flat scan can't
                     # mirror — fall back
                     return None
-                finalize()
-                in_word = True
+                in_word = not t[1].rstrip().endswith("/")  # <Word/> is empty
+                w_text = w_box = None
+                w_fonts = []
                 wdepth = 0
-                if t[1].rstrip().endswith("/"):  # <Word/>
-                    in_word = False
             elif t[2]:  # </Word>
-                finalize()
+                if in_word:
+                    cur.add_word(w_text, w_box, w_fonts)
+                    in_word = False
             else:  # any other tag (t[14]): track depth inside a word
                 if in_word:
                     go = t[14]
@@ -314,7 +314,8 @@ def parse_tetml_fast(xml: str, page_cls) -> list | None:
                             wdepth -= 1
                     elif not t[15].rstrip().endswith("/"):
                         wdepth += 1
-        finalize()
+        if in_word:  # a word still open at the page close
+            cur.add_word(w_text, w_box, w_fonts)
         cur.freeze()
         pages.append(cur)
     return pages
@@ -324,16 +325,17 @@ def parse_tetml_fast(xml: str, page_cls) -> list | None:
 # PDFMiner XML (vectorized: one findall per page + numpy reduceat)
 # --------------------------------------------------------------------------
 
-_PDM_PAGE = re.compile(r"<(?:[\w.-]+:)?page(?=[\s/>])([^>]*)>")
-_PDM_PAGE_CLOSE = re.compile(r"</(?:[\w.-]+:)?page>")
 # findall tuple indices:
 #  0 strict-marker('font') 1 font 2 bbox 3 size 4 text
 #  5 generic-marker('<text') 6 attr-blob 7 text
 #  8 close-slash 9 textline-marker 10 textline-selfclose-slash
 # all element names accept an optional namespace prefix (matching the
-# ET walk's wildcard-namespace iterfind)
+# ET walk's wildcard-namespace iterfind).  The strict glyph's bbox has
+# exactly four fields; any other arity takes the generic branch, which
+# falls back to the ET path.
 _PDM_EV = re.compile(
-    r'<(?:[\w.-]+:)?text\s+(font)="([^"&\n\t]*)"\s+bbox="([^"&\n\t]*)"(?:[^>]*?\s)?'
+    r'<(?:[\w.-]+:)?text\s+(font)="([^"&\n\t]*)"'
+    r'\s+bbox="([^",&\n\t]*,[^",&\n\t]*,[^",&\n\t]*,[^",&\n\t]*)"(?:[^>]*?\s)?'
     r'size="([^"&\n\t]*)"\s*>'
     r"([^<]*)</(?:[\w.-]+:)?text>"
     r"|(<(?:[\w.-]+:)?text)(?=[\s/>])((?:\s[^>]*)?/?)>([^<]*)(?:</(?:[\w.-]+:)?text>)?"
@@ -353,35 +355,13 @@ _PDM_EV = re.compile(
 # --------------------------------------------------------------------------
 
 def parse_pdfminer_fast(xml: str, page_cls) -> list | None:
-    if not fast_eligible(xml):
-        return None
-    validate(xml)
-    xml = _normalize(xml)
-    has_amp = "&" in xml
-
     pages: list = []
-    fk_memo: dict[tuple[str, str], str] = {}
-    popens = list(_PDM_PAGE.finditer(xml))
-    for pi, pm in enumerate(popens):
-        pa = _attrs(pm.group(1))
-        if pa is None:
-            return None  # page attr blob beyond the scan: ET decides
-        pb = pa.get("bbox", "0,0,612,792").split(",")
-        cur = page_cls(
-            page_number(pa.get("id")),
-            float(pb[2]) - float(pb[0]),
-            float(pb[3]) - float(pb[1]),
-        )
-        if pm.group(1).rstrip().endswith("/"):
-            cur.freeze()
-            pages.append(cur)
-            continue
-        end = popens[pi + 1].start() if pi + 1 < len(popens) else len(xml)
-        body = xml[pm.end() : end]
-        cm = _PDM_PAGE_CLOSE.search(body)
-        if cm is None:
-            return None  # nested <page> elements: fall back (see TETML)
-        body = body[: cm.start()]
+    fonts = page_cls.FontKeys()
+    for cut in _cut_pages(xml, spec.KIND_PDFMINER, page_cls.pdfminer_page):
+        if cut is None:
+            return None
+        cur, body = cut
+        has_amp = "&" in body
 
         # flat event scan: glyph texts/bboxes/fonts + word-id per glyph
         texts: list[str] = []
@@ -398,94 +378,86 @@ def parse_pdfminer_fast(xml: str, page_cls) -> list | None:
             fkeys.append,
             wids.append,
         )
-        memo_get = fk_memo.get
-        for ev in _PDM_EV.findall(body):
-            if ev[0]:  # strict glyph
-                if not in_tl:
-                    continue
-                t = _unesc(ev[4]) if has_amp else ev[4]
-                if not t or t.isspace():
+        # a glyph value error falls back: sizes are converted here,
+        # boxes in _assemble_words, and the ET walk reports the first
+        # bad value in document order (page-rule errors still raise)
+        try:
+            for ev in _PDM_EV.findall(body):
+                if ev[0]:  # strict glyph
+                    if not in_tl:
+                        continue
+                    t = _unesc(ev[4]) if has_amp else ev[4]
+                    if not t or t.isspace():
+                        if open_word:
+                            wid += 1
+                            open_word = False
+                        continue
+                    t_app(t)
+                    b_app(ev[2])
+                    f_app(fonts[ev[1], ev[3]])
+                    w_app(wid)
+                    open_word = True
+                elif ev[9]:  # textline open/close -> word break
+                    if ev[8]:  # </textline>
+                        in_tl -= 1
+                        if in_tl < 0:
+                            return None  # stray close: bail to ET path
+                    elif not ev[10]:  # <textline ...> (self-closing = empty
+                        in_tl += 1  # textline: no depth change, still a break)
+                        if in_tl > 1:
+                            # nested textlines: ET's .// walk would visit
+                            # inner glyphs twice — fall back
+                            return None
                     if open_word:
                         wid += 1
                         open_word = False
-                    continue
-                fs = (ev[1], ev[3])
-                fk = memo_get(fs)
-                if fk is None:
-                    fk = font_key(fs[0], float(fs[1]))
-                    fk_memo[fs] = fk
-                t_app(t)
-                b_app(ev[2])
-                f_app(fk)
-                w_app(wid)
-                open_word = True
-            elif ev[9]:  # textline open/close -> word break
-                if ev[8]:  # </textline>
-                    in_tl -= 1
-                    if in_tl < 0:
-                        return None  # stray close: bail to ET path
-                elif not ev[10]:  # <textline ...> (self-closing = empty
-                    in_tl += 1  # textline: no depth change, still a break)
-                    if in_tl > 1:
-                        # nested textlines: ET's .// walk would visit
-                        # inner glyphs twice — fall back
+                else:  # generic glyph (attr layout deviates from pdfminer's)
+                    if not in_tl:
+                        continue
+                    blob = ev[6]
+                    if not blob or blob == "/":
+                        # attr-less glyph (<text> </text> — one per word in
+                        # pdfminer output): no bbox -> always a word break;
+                        # skip the _attrs regex entirely
+                        if open_word:
+                            wid += 1
+                            open_word = False
+                        continue
+                    # self-closing <text .../> has no element text (the regex
+                    # text group grabs the following inter-tag run) -> ET
+                    # sees text=None -> word break
+                    selfclosed = blob.rstrip().endswith("/")
+                    t = "" if selfclosed else (_unesc(ev[7]) if has_amp else ev[7])
+                    d = _attrs(blob)
+                    if d is None:
                         return None
-                if open_word:
-                    wid += 1
-                    open_word = False
-            else:  # generic glyph (attr layout deviates from pdfminer's)
-                if not in_tl:
-                    continue
-                blob = ev[6]
-                if not blob or blob == "/":
-                    # attr-less glyph (<text> </text> — one per word in
-                    # pdfminer output): no bbox -> always a word break;
-                    # skip the _attrs regex entirely
-                    if open_word:
-                        wid += 1
-                        open_word = False
-                    continue
-                # self-closing <text .../> has no element text (the regex
-                # text group grabs the following inter-tag run) -> ET
-                # sees text=None -> word break
-                selfclosed = blob.rstrip().endswith("/")
-                t = "" if selfclosed else (_unesc(ev[7]) if has_amp else ev[7])
-                d = _attrs(blob)
-                if d is None:
-                    return None
-                bbox = d.get("bbox")
-                if not t or t.isspace() or bbox is None:
-                    if open_word:
-                        wid += 1
-                        open_word = False
-                    continue
-                if bbox.count(",") != 3:
-                    return None  # ET path raises differently; don't guess
-                raw = (d.get("font", ""), d.get("size", "0"))
-                fk = memo_get(raw)
-                if fk is None:
-                    fk = font_key(raw[0], float(raw[1]))
-                    fk_memo[raw] = fk
-                t_app(t)
-                b_app(bbox)
-                f_app(fk)
-                w_app(wid)
-                open_word = True
+                    bbox = d.get("bbox")
+                    if not t or t.isspace() or bbox is None:
+                        if open_word:
+                            wid += 1
+                            open_word = False
+                        continue
+                    if bbox.count(",") != 3:
+                        return None  # ET path raises differently; don't guess
+                    t_app(t)
+                    b_app(bbox)
+                    f_app(fonts.of(d.get))
+                    w_app(wid)
+                    open_word = True
 
-        if texts and not _assemble_words(cur, texts, bboxs, fkeys, wids):
-            return None  # malformed bbox arity: let the ET path decide
+            if texts:
+                _assemble_words(cur, texts, bboxs, fkeys, wids)
+        except ValueError:
+            return None
         cur.freeze()
         pages.append(cur)
     return pages
 
 
-def _assemble_words(cur, texts, bboxs, fkeys, wids) -> bool:
-    """Glyph columns -> words on `cur` (numpy reduceat).  False when the
-    bbox arity is malformed (caller falls back to the ET path)."""
-    box = np.array(",".join(bboxs).split(","), dtype=np.float64)
-    if box.size != 4 * len(texts):
-        return False
-    box = box.reshape(-1, 4)
+def _assemble_words(cur, texts, bboxs, fkeys, wids) -> None:
+    """Glyph columns -> words on `cur` (numpy reduceat); every glyph
+    bbox has exactly four fields."""
+    box = np.array(",".join(bboxs).split(","), dtype=np.float64).reshape(-1, 4)
     wa = np.asarray(wids, dtype=np.int64)
     starts = np.flatnonzero(np.r_[True, wa[1:] != wa[:-1]])
     bounds = np.r_[starts, len(texts)]
@@ -503,6 +475,5 @@ def _assemble_words(cur, texts, bboxs, fkeys, wids) -> bool:
             float(wlly[k]),
             float(wurx[k]),
             float(wury[k]),
-            fkeys[a] if b - a == 1 else fkeys[a + _mode_first(fkeys[a:b])],
+            fkeys[a] if b - a == 1 else fkeys[a + mode_first(fkeys[a:b])],
         )
-    return True

@@ -30,9 +30,10 @@ _LABEL_RE = re.compile(r"\S+")
 
 def page_number(attr: str | None) -> int | None:
     """A page element's number (TETML ``number``, PDFMiner ``id``), or
-    None when it has none.  Shared by the kernel's two parser paths;
-    ``kernel._parse`` numbers a page without one by its position in the
-    doc, which a parser handed one S7 page piece cannot know."""
+    None when it has none.  Read by the kernel's page rules, which its
+    two parser paths share; ``kernel._parse`` numbers a page without
+    one by its position in the doc, which a parser handed one S7 page
+    piece cannot know."""
     return None if attr is None else int(attr)
 
 

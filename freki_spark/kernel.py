@@ -67,23 +67,66 @@ class PageTokens:
         self.fkeys: list[str] = []
         self.box: np.ndarray | list = []  # grows as python list of 4-tuples
 
+    # The S1 rules, each stated once and shared by the fast walks
+    # (fastparse.py, through the page class it is handed) and the ET
+    # walks below.  ``get`` reads an element's attributes (an
+    # element's ``get`` or a dict's).
+
+    @classmethod
+    def tetml_page(cls, get) -> PageTokens:
+        number = page_number(get("number"))
+        return cls(number, float(get("width", "612")), float(get("height", "792")))
+
+    @classmethod
+    def pdfminer_page(cls, get) -> PageTokens:
+        b = get("bbox", "0,0,612,792").split(",")
+        return cls(page_number(get("id")), float(b[2]) - float(b[0]), float(b[3]) - float(b[1]))
+
+    @staticmethod
+    def tet_box(get) -> tuple[float, float, float, float]:
+        """TETML word box: a <Box>'s ``llx``, ``lly``, ``urx``, ``ury``
+        as floats, no defaults."""
+        return (float(get("llx")), float(get("lly")), float(get("urx")), float(get("ury")))
+
+    class FontKeys(dict):
+        """One doc's glyph ``(font, size)`` attribute strings -> font
+        key, each distinct pair converted once.  A non-numeric size
+        raises ``float``'s ValueError on every lookup, so nothing wrong
+        is remembered."""
+
+        def __missing__(self, fs: tuple[str, str]) -> str:
+            fk = self[fs] = font_key(fs[0], float(fs[1]))
+            return fk
+
+        def of(self, get) -> str:
+            """Font key of a glyph whose attributes ``get`` reads: no
+            font is "", no size 0."""
+            return self[get("font", ""), get("size", "0")]
+
     def add(self, text: str, llx: float, lly: float, urx: float, ury: float, fk: str):
         self.texts.append(text)
         self.fkeys.append(fk)
         self.box.append((llx, lly, urx, ury))
 
+    def add_word(self, text: str | None, box: tuple | None, fonts: list[str]) -> None:
+        """S1 TETML word rule (fast and ET walks): a word with non-blank
+        text and a box is kept, in its glyphs' majority font (ties: the
+        first; no glyph: the empty font at size 0)."""
+        if text and text.strip() and box is not None:
+            self.texts.append(text)
+            self.fkeys.append(fonts[mode_first(fonts)] if fonts else _NO_FONT)
+            self.box.append(box)
+
     def freeze(self) -> None:
         self.box = np.asarray(self.box, dtype=np.float64).reshape(-1, 4)
+
+
+_NO_FONT = font_key("", 0.0)
 
 
 def _strip_ns(tag: str) -> str:
     i = tag.rfind("}")
     return tag[i + 1 :] if i >= 0 else tag
-
-
-# S1 majority-font tie-break — shared with fastparse via grammar (the
-# two parser paths must vote identically)
-_mode_first = mode_first
 
 
 # --------------------------------------------------------------------------
@@ -113,13 +156,9 @@ def _parse_tetml_et(xml_text: str) -> list[PageTokens]:
     the single-node oracle keeps an independent traversal."""
     root = ET.fromstring(xml_text)
     pages: list[PageTokens] = []
-    fk_memo: dict[tuple[str, str], str] = {}
+    fonts = PageTokens.FontKeys()
     for pel in root.iterfind(".//{*}Page"):
-        cur = PageTokens(
-            page_number(pel.get("number")),
-            float(pel.get("width", "612")),
-            float(pel.get("height", "792")),
-        )
+        cur = PageTokens.tetml_page(pel.get)
         for wel in pel.iterfind(".//{*}Word"):
             text = None
             box = None
@@ -129,22 +168,10 @@ def _parse_tetml_et(xml_text: str) -> list[PageTokens]:
                 if cn == "Text":
                     text = ch.text
                 elif cn == "Box":
-                    box = (
-                        float(ch.get("llx")),
-                        float(ch.get("lly")),
-                        float(ch.get("urx")),
-                        float(ch.get("ury")),
-                    )
+                    box = PageTokens.tet_box(ch.get)
                 elif cn == "Glyph":
-                    raw = (ch.get("font", ""), ch.get("size", "0"))
-                    fk = fk_memo.get(raw)
-                    if fk is None:
-                        fk = font_key(raw[0], float(raw[1]))
-                        fk_memo[raw] = fk
-                    gfonts.append(fk)
-            if text and text.strip() and box is not None:
-                fk = gfonts[_mode_first(gfonts)] if gfonts else font_key("", 0.0)
-                cur.add(text, *box, fk)
+                    gfonts.append(fonts.of(ch.get))
+            cur.add_word(text, box, gfonts)
         cur.freeze()
         pages.append(cur)
     return pages
@@ -153,14 +180,9 @@ def _parse_tetml_et(xml_text: str) -> list[PageTokens]:
 def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
     root = ET.fromstring(xml_text)
     pages: list[PageTokens] = []
-    fk_memo: dict[tuple[str, str], str] = {}
+    fonts = PageTokens.FontKeys()
     for pel in root.iterfind(".//{*}page"):
-        pb = pel.get("bbox", "0,0,612,792").split(",")
-        cur = PageTokens(
-            page_number(pel.get("id")),
-            float(pb[2]) - float(pb[0]),
-            float(pb[3]) - float(pb[1]),
-        )
+        cur = PageTokens.pdfminer_page(pel.get)
         wtext: list[str] = []
         wbox: list[tuple[float, float, float, float]] = []
         wfk: list[str] = []
@@ -175,7 +197,7 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
                     min(b[1] for b in wbox),
                     max(b[2] for b in wbox),
                     max(b[3] for b in wbox),
-                    wfk[_mode_first(wfk)],
+                    wfk[mode_first(wfk)],
                 )
             wtext.clear()
             wbox.clear()
@@ -190,12 +212,7 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
                 wtext.append(gtext)
                 b = gbbox.split(",")
                 wbox.append((float(b[0]), float(b[1]), float(b[2]), float(b[3])))
-                raw = (gel.get("font", ""), gel.get("size", "0"))
-                fk = fk_memo.get(raw)
-                if fk is None:
-                    fk = font_key(raw[0], float(raw[1]))
-                    fk_memo[raw] = fk
-                wfk.append(fk)
+                wfk.append(fonts.of(gel.get))
             flush()
         cur.freeze()
         pages.append(cur)
@@ -516,7 +533,7 @@ def segment_blocks(
 
     def dom_font(idx: np.ndarray) -> str:
         keys = [page.fkeys[i] for i in idx]
-        return keys[_mode_first(keys)]
+        return keys[mode_first(keys)]
 
     blocks: list[list[np.ndarray]] = []
     for si, seg in enumerate(segments):

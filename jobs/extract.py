@@ -2,9 +2,9 @@
 ``spark-submit --py-files freki_spark.zip jobs/extract.py ...``).
 
     spark-submit --py-files freki_spark.zip jobs/extract.py \
-        --input  <iceberg table | parquet path> \
-        --output <output dir / table> \
-        --run-id r42 --n-batches 256 [--format iceberg]
+        --input  <parquet path> \
+        --output <output dir> \
+        --run-id r42 --n-batches 256
 
 On a cluster the session comes from spark-submit's conf (master,
 executors, memory); the script only sets job-level knobs.  Locally it
@@ -27,7 +27,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--n-batches", type=int, default=256)
-    ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
     ap.add_argument("--salt-threshold", type=int, default=spec.SALT_SPAN_THRESHOLD)
     args = ap.parse_args()
 
@@ -53,17 +52,7 @@ def main() -> None:
     )
     spark = builder.getOrCreate()
 
-    if args.format == "iceberg":
-        # the read side goes through the io.py seam, but run_extraction
-        # writes batch-keyed parquet dirs; silently treating an Iceberg
-        # table name as a local path would misplace the output with
-        # none of the claimed commit atomicity
-        raise SystemExit(
-            "--format iceberg: output commit path not available in this "
-            "environment (no Iceberg runtime); see freki_spark/io.py for "
-            "the production seam"
-        )
-    input_df = read_docs(spark, args.input, fmt=args.format)
+    input_df = read_docs(spark, args.input)
     summary = run_extraction(
         spark,
         input_df,

@@ -382,23 +382,140 @@ def test_fuzz_tetml_structure_fast_vs_et(xml):
     _assert_consistent(xml, fastparse.parse_tetml_fast, _parse_tetml_et)
 
 
+@st.composite
+def _pdm_glyph(draw):
+    """Random PDFMiner glyph: pdfminer's attribute order (the strict
+    scan), another order (the generic scan) or no attributes; a word
+    or whitespace text; a bbox of 2-6 fields."""
+    layout = draw(st.sampled_from(["strict", "strict", "strict", "generic", "bare"]))
+    text = draw(st.sampled_from(["a", "bc", "d", " ", "\t"]))
+    if layout == "bare":
+        return f"<text>{text}</text>"
+    n = draw(st.sampled_from([2, 3, 4, 4, 5, 6]))
+    bbox = ",".join(str(draw(st.integers(0, 99))) for _ in range(n))
+    font, size = draw(st.sampled_from([("F0", "12.0"), ("F1", "9.0")]))
+    if layout == "strict":
+        return f'<text font="{font}" bbox="{bbox}" size="{size}">{text}</text>'
+    return f'<text size="{size}" bbox="{bbox}" font="{font}">{text}</text>'
+
+
+@st.composite
+def _pdm_structural_doc(draw):
+    pages = []
+    for p in range(1, draw(st.integers(1, 2)) + 1):
+        lines = "".join(
+            '<textline bbox="0,0,1,1">'
+            + "".join(draw(st.lists(_pdm_glyph(), min_size=1, max_size=4)))
+            + "</textline>"
+            for _ in range(draw(st.integers(1, 3)))
+        )
+        pages.append(f'<page id="{p}" bbox="0,0,612,792"><textbox id="0">{lines}</textbox></page>')
+    return "<pages>" + "".join(pages) + "</pages>"
+
+
+@given(_pdm_structural_doc())
+@settings(max_examples=150, deadline=None)
+def test_fuzz_pdfminer_structure_fast_vs_et(xml):
+    _assert_consistent(xml, fastparse.parse_pdfminer_fast, _parse_pdfminer_et)
+
+
+# the errors kernel._parse quarantines
+_CONTENT_ERRORS = (ET.ParseError, ValueError, TypeError, IndexError)
+
+
+def _outcome(parse, *args):
+    """(pages, None) or (None, (exception type, message))."""
+    try:
+        return parse(*args), None
+    except _CONTENT_ERRORS as e:
+        return None, (type(e), str(e))
+
+
 def _assert_consistent(xml, fast, et):
-    try:
-        ep, e_err = et(xml), None
-    except (ET.ParseError, ValueError, TypeError) as e:
-        ep, e_err = None, type(e)
-    try:
-        fp, f_err = fast(xml, PageTokens), None
-    except (ET.ParseError, ValueError, TypeError) as e:
-        fp, f_err = None, type(e)
-    if f_err is not None or e_err is not None:
-        # fast path may only raise when ET also rejects the doc
-        assert e_err is not None
-        return
-    if fp is None:
+    """The ET walk gives pages or a quarantined error on every doc; the
+    fast path falls back (None) or gives the ET walk's answer: the same
+    pages, or the same error."""
+    ep, e_err = _outcome(et, xml)
+    fp, f_err = _outcome(fast, xml, PageTokens)
+    if fp is None and f_err is None:
         return  # fallback: wrapper would produce the ET answer
-    assert ep is not None
-    _same(fp, ep)
+    assert f_err == e_err
+    if ep is not None:
+        _same(fp, ep)
+
+
+_TET_PAGE_DOC = (
+    "<TET><Pages>{open}<Content><Word><Text>w</Text>"
+    '<Box llx="1" lly="2" urx="3" ury="4"/><Glyph font="F0" size="9.0">w</Glyph>'
+    "</Word></Content>{close}</Pages></TET>"
+)
+_PDM_PAGE_DOC = (
+    '<pages>{open}<textline><text font="F0" bbox="1,2,3,4" size="9.0">w</text>'
+    "</textline>{close}</pages>"
+)
+
+
+_PAGE_PARSERS = {
+    "tetml": (_TET_PAGE_DOC, fastparse.parse_tetml_fast, _parse_tetml_et),
+    "pdfminer": (_PDM_PAGE_DOC, fastparse.parse_pdfminer_fast, _parse_pdfminer_et),
+}
+
+
+@pytest.mark.parametrize(
+    "dialect, open_tag, close_tag",
+    [
+        pytest.param("tetml", '<Page width="600" height="800">', "</Page>", id="tet-no-number"),
+        pytest.param("tetml", '<Page number="2" height="800">', "</Page>", id="tet-no-width"),
+        pytest.param("tetml", '<Page number="2" width="600">', "</Page>", id="tet-no-height"),
+        pytest.param("tetml", '<Page number="two" width="600" height="800">', "</Page>", id="tet-bad-number"),
+        pytest.param("tetml", '<Page number="2" width="wide" height="800">', "</Page>", id="tet-bad-width"),
+        pytest.param("tetml", '<Page number="2" width="600" height="">', "</Page>", id="tet-empty-height"),
+        pytest.param("tetml", '<Page number="2" width="600" height="800">', "</Page >", id="tet-close-space"),
+        pytest.param("tetml", '<Page number="2" width="600" height="800">', "</Page\n>", id="tet-close-newline"),
+        pytest.param("pdfminer", '<page bbox="0,0,600,800">', "</page>", id="pdm-no-id"),
+        pytest.param("pdfminer", '<page id="3">', "</page>", id="pdm-no-bbox"),
+        pytest.param("pdfminer", '<page id="three" bbox="0,0,600,800">', "</page>", id="pdm-bad-id"),
+        pytest.param("pdfminer", '<page id="3" bbox="0,0,wide,800">', "</page>", id="pdm-bad-bbox"),
+        pytest.param("pdfminer", '<page id="3" bbox="0,0,600">', "</page>", id="pdm-bbox-3-fields"),
+        pytest.param("pdfminer", '<page id="3" bbox="0,0,600,800">', "</page >", id="pdm-close-space"),
+    ],
+)
+def test_page_rule_parity(dialect, open_tag, close_tag):
+    # one page rule per dialect: the fast path never falls back on a
+    # page's attribute values or a close tag with whitespace, and gives
+    # the ET walk's pages, or its exception with the same message
+    doc, fast, et = _PAGE_PARSERS[dialect]
+    xml = doc.format(open=open_tag, close=close_tag)
+    assert _outcome(fast, xml, PageTokens) != (None, None)
+    _assert_consistent(xml, fast, et)
+
+
+def test_word_close_tag_with_whitespace_parity():
+    # '</Word >' closes the word: a Text after it is not the word's
+    xml = (
+        '<TET><Page number="1"><Content><Word><Text>a</Text>'
+        '<Box llx="1" lly="1" urx="2" ury="2"/></Word ><Text>b</Text>'
+        "</Content></Page></TET>"
+    )
+    _same(fastparse.parse_tetml_fast(xml, PageTokens), _parse_tetml_et(xml))
+    assert _parse_tetml_et(xml)[0].texts == ["a"]
+
+
+def test_pdfminer_content_error_is_the_first_in_document_order():
+    # the fast scan converts sizes before boxes; the kernel reports the
+    # bad bbox value of the first glyph, as the ET walk and the oracle do
+    from freki_spark import kernel as K, oracle as O
+
+    xml = (
+        '<pages><page id="1"><textline>'
+        '<text font="F" bbox="1,x,3,4" size="9">a</text>'
+        '<text font="F" bbox="1,2,3,4" size="zz">b</text>'
+        "</textline></page></pages>"
+    )
+    spans = [{"kind": "pdfminer-xml", "offset": 0, "media_ref": "", "text": xml}]
+    _, err = K.extract_document_rows("x", spans)
+    assert err == "xml-content-error: could not convert string to float: 'x'"
+    assert err == O.extract_document("x", spans)[1]
 
 
 # ---------------------------------------------------------------------------
@@ -453,7 +570,7 @@ def test_exotic_attr_name_parses_exactly():
 
 
 def test_malformed_bbox_arity_quarantines_not_crashes():
-    from freki_spark import kernel as K
+    from freki_spark import kernel as K, oracle as O
 
     for kind, text in (
         (
@@ -468,8 +585,18 @@ def test_malformed_bbox_arity_quarantines_not_crashes():
             '<text font="F" bbox="1,1" size="9">a</text>'
             "</textline></page></pages>",
         ),
+        (
+            # five fields then three: twice four in all, but no glyph
+            # has four (the fast scan once joined them into one box)
+            "pdfminer-xml",
+            '<pages><page id="1" bbox="0,0,612,792"><textline>'
+            '<text font="F" bbox="1,2,3,4,5" size="9">a</text>'
+            '<text font="F" bbox="6,7,8" size="9">b</text>'
+            "</textline></page></pages>",
+        ),
     ):
-        rows, err = K.extract_document_rows(
-            "x", [{"kind": kind, "offset": 0, "media_ref": "", "text": text}]
-        )
+        spans = [{"kind": kind, "offset": 0, "media_ref": "", "text": text}]
+        rows, err = K.extract_document_rows("x", spans)
         assert rows == [] and err is not None and "error" in err
+        o_rows, o_err = O.extract_document("x", spans)
+        assert o_rows == [] and o_err.split(":")[0] == err.split(":")[0]
