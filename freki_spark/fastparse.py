@@ -23,12 +23,14 @@ to the ET path (span equality is the engine's core invariant):
    via ``count('<') != count('>')`` — or non-predefined entity
    references) falls back to the ET parser, as does any structural
    anomaly discovered during extraction (returns ``None``).
-3. Each S1 rule is stated once.  Both fast parsers cut pages with one
-   cutter (``_cut_pages``: eligibility, validation, line-ending
-   normalization, then the page scan on the spec's page markers
-   ``spec.PAGE_START_RE``/``spec.PAGE_END_RE``).  What a page, word,
-   box and glyph font mean lives on the page class the parsers are
-   handed (``kernel.PageTokens``): the page rule of each dialect
+3. Each S1 rule is stated once.  ``page_cuts`` cuts a doc into pages
+   once for both extraction paths, on the spec's page markers
+   (``spec.PAGE_START_RE``/``spec.PAGE_END_RE``): the fast parsers walk
+   its cuts (``_cut_pages``: eligibility, validation, then each page's
+   blob and body), the media anchor reads its starts and S7 cuts its
+   page pieces there.  What a page, word, box and glyph font mean lives
+   on the page class the parsers are handed (``kernel.PageTokens``):
+   the page rule of each dialect
    (``tetml_page``/``pdfminer_page``), the TETML word and box rules
    (``add_word``, ``tet_box``) and the per-doc ``(font, size)`` ->
    font-key table (``FontKeys``).  The ET walks use the same ones, so
@@ -155,43 +157,63 @@ def _attrs(blob: str) -> dict[str, str] | None:
     return out
 
 
-# the spec's page start marker plus its attribute blob
-_PAGE_OPEN = {d: re.compile(rx.pattern + r"([^>]*)>") for d, rx in spec.PAGE_START_RE.items()}
+# the rest of a page's open tag: its attribute blob, read quote-aware
+# (a '>' inside a quoted value does not end the tag)
+_OPEN_REST = re.compile(r"""((?:[^>"']|"[^"]*"|'[^']*')*)>""")
 
 
-def _cut_pages(xml: str, dialect: str, page_of):
-    """The page cutter of both fast parsers.  Checks ``fast_eligible``,
-    then ``validate`` (raises ET.ParseError), normalizes line endings,
+def page_cuts(dialect: str, xml: str) -> list[tuple]:
+    """The one page cut of a doc's joined XML, for both extraction
+    paths.  Per ``spec.PAGE_START_RE`` match (normative, shared with the
+    oracle), in document order and in ``xml``'s own coordinates:
+    ``(start, blob, body, end)``.  ``blob`` is the open tag's attribute
+    blob (None when the tag does not close before the next page start,
+    which well-formed, fast-eligible XML never does) and ``body`` the
+    text between the open tag and the close tag.  ``end`` is the end
+    of the first ``spec.PAGE_END_RE`` match before the next page start;
+    else, for a self-closing page, the end of its open tag (an empty
+    body); else None, with a None body: the pages nest."""
+    close = spec.PAGE_END_RE[dialect]
+    opens = list(spec.PAGE_START_RE[dialect].finditer(xml))
+    cuts = []
+    for i, m in enumerate(opens):
+        stop = opens[i + 1].start() if i + 1 < len(opens) else len(xml)
+        tag = _OPEN_REST.match(xml, m.end(), stop)
+        blob, at = (tag.group(1), tag.end()) if tag else (None, m.end())
+        c = close.search(xml, at, stop)
+        if c is not None:
+            cuts.append((m.start(), blob, xml[at : c.start()], c.end()))
+        elif blob is not None and blob.endswith("/"):
+            cuts.append((m.start(), blob, "", at))
+        else:
+            cuts.append((m.start(), blob, None, None))
+    return cuts
+
+
+def _cut_pages(xml: str, cuts: list[tuple], page_of):
+    """The page walk of both fast parsers over ``xml``'s ``page_cuts``.
+    Checks ``fast_eligible``, then ``validate`` (raises ET.ParseError),
     and yields ``(page_of(attrs.get), body)`` per page in document
     order, lazily, so a doc meets its errors and fallbacks in document
-    order.  A self-closing page has an empty body.  Yields None (= use
+    order.  Line endings are normalized per blob and body (a tag's '<'
+    or '>' bounds each, so no \\r\\n straddles two).  Yields None (= use
     the ET path) for an ineligible doc, a page attribute blob ``_attrs``
-    cannot read, or a page whose close tag is not before the next
-    page's open (nested pages: ET's ``.//`` walk would visit the inner
-    words twice)."""
+    cannot read, or a page without an end (nested pages: ET's ``.//``
+    walk would visit the inner words twice)."""
     if not fast_eligible(xml):
         yield None
         return
     validate(xml)
-    xml = _normalize(xml)
-    close = spec.PAGE_END_RE[dialect]
-    opens = list(_PAGE_OPEN[dialect].finditer(xml))
-    for i, m in enumerate(opens):
-        blob = m.group(1)
-        attrs = _attrs(blob)
+    for _, blob, body, _ in cuts:
+        attrs = _attrs(_normalize(blob))
         if attrs is None:
             yield None
             return
         page = page_of(attrs.get)
-        if blob.rstrip().endswith("/"):
-            yield page, ""
-            continue
-        end = opens[i + 1].start() if i + 1 < len(opens) else len(xml)
-        c = close.search(xml, m.end(), end)
-        if c is None:
+        if body is None:
             yield None
             return
-        yield page, xml[m.end() : c.start()]
+        yield page, _normalize(body)
 
 
 # --------------------------------------------------------------------------
@@ -230,13 +252,14 @@ _BOX_FAST = re.compile(
 )
 
 
-def parse_tetml_fast(xml: str, page_cls) -> list | None:
-    """Returns list[PageTokens] or None (= use the ET path).  Raises
-    ET.ParseError on malformed XML (identical expat message)."""
+def parse_tetml_fast(xml: str, cuts: list[tuple], page_cls) -> list | None:
+    """Returns list[PageTokens] or None (= use the ET path); ``cuts`` are
+    ``page_cuts(KIND_TETML, xml)``.  Raises ET.ParseError on malformed
+    XML (identical expat message)."""
     pages: list = []
     fonts = page_cls.FontKeys()
     blob_fk: dict[str, str] = {}  # glyph attribute blob -> font key
-    for cut in _cut_pages(xml, spec.KIND_TETML, page_cls.tetml_page):
+    for cut in _cut_pages(xml, cuts, page_cls.tetml_page):
         if cut is None:
             return None
         cur, body = cut
@@ -354,10 +377,10 @@ _PDM_EV = re.compile(
 # page end (_assemble_words) is the fast configuration.
 # --------------------------------------------------------------------------
 
-def parse_pdfminer_fast(xml: str, page_cls) -> list | None:
+def parse_pdfminer_fast(xml: str, cuts: list[tuple], page_cls) -> list | None:
     pages: list = []
     fonts = page_cls.FontKeys()
-    for cut in _cut_pages(xml, spec.KIND_PDFMINER, page_cls.pdfminer_page):
+    for cut in _cut_pages(xml, cuts, page_cls.pdfminer_page):
         if cut is None:
             return None
         cur, body = cut

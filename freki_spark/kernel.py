@@ -10,7 +10,8 @@ XML parsing (a regex scan of the whole string, or stdlib
 ``ET.fromstring``; no lxml offline) dominates runtime regardless.
 
 The kernel has two entry surfaces.  Both quarantine null span fields
-with ``null_field_error``, put a doc's pages and media in one
+with ``null_field_error``, cut an XML doc into pages once with
+``fastparse.page_cuts``, put a doc's pages and media in one
 ``reading_order`` (which ``html_kernel`` shares for HTML records),
 build span records through one ``layout_records`` (S2–S5 per page,
 media spans in reading order; records carry no doc position) and
@@ -23,9 +24,9 @@ font ids in record order:
   to ``html_kernel.extract_document_rows``.
 - ``page_pieces`` + ``extract_group_records`` — the salted mega-doc
   path (S7): stage 1 takes the reading order over standalone per-page
-  XML pieces split by regex, stage 2 lays out each page shard into span
-  records; stage 3 concatenates the shards' records in doc order and
-  renders them (see pipeline.py).
+  XML pieces cut at the pages' bounds, stage 2 lays out each page shard
+  into span records; stage 3 concatenates the shards' records in doc
+  order and renders them (see pipeline.py).
 
 Reference parity targets (pvk444/freki [U], mount empty at build time):
 freki/analyzers/{tetml,pdfminer}.py (S1), analyzers/base.py (S2/S3),
@@ -134,19 +135,19 @@ def _strip_ns(tag: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def parse_tetml(xml_text: str) -> list[PageTokens]:
-    """Guarded regex/numpy fast path (fastparse.py) with ET fallback:
-    the fast parser validates with the same expat C parser ET wraps
-    (identical accept/reject + error text) and bails to the ET walk on
-    any construct a flat regex scan can't mirror."""
-    pages = fastparse.parse_tetml_fast(xml_text, PageTokens)
+def parse_tetml(xml_text: str, cuts: list[tuple]) -> list[PageTokens]:
+    """Guarded regex/numpy fast path (fastparse.py, over ``cuts``) with
+    ET fallback: the fast parser validates with the same expat C parser
+    ET wraps (identical accept/reject + error text) and bails to the ET
+    walk on any construct a flat regex scan can't mirror."""
+    pages = fastparse.parse_tetml_fast(xml_text, cuts, PageTokens)
     return pages if pages is not None else _parse_tetml_et(xml_text)
 
 
-def parse_pdfminer(xml_text: str) -> list[PageTokens]:
+def parse_pdfminer(xml_text: str, cuts: list[tuple]) -> list[PageTokens]:
     """Same guarded fast path for the PDFMiner dialect (vectorized:
     one findall per page + numpy reduceat word assembly)."""
-    pages = fastparse.parse_pdfminer_fast(xml_text, PageTokens)
+    pages = fastparse.parse_pdfminer_fast(xml_text, cuts, PageTokens)
     return pages if pages is not None else _parse_pdfminer_et(xml_text)
 
 
@@ -184,7 +185,7 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
     for pel in root.iterfind(".//{*}page"):
         cur = PageTokens.pdfminer_page(pel.get)
         wtext: list[str] = []
-        wbox: list[tuple[float, float, float, float]] = []
+        wbox: list[tuple[float, ...]] = []
         wfk: list[str] = []
 
         def flush() -> None:
@@ -210,8 +211,7 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
                     flush()
                     continue
                 wtext.append(gtext)
-                b = gbbox.split(",")
-                wbox.append((float(b[0]), float(b[1]), float(b[2]), float(b[3])))
+                wbox.append(tuple(map(float, gbbox.split(","))))
                 wfk.append(fonts.of(gel.get))
             flush()
         cur.freeze()
@@ -222,22 +222,26 @@ def _parse_pdfminer_et(xml_text: str) -> list[PageTokens]:
 _PARSERS = {spec.KIND_TETML: parse_tetml, spec.KIND_PDFMINER: parse_pdfminer}
 
 
-def _parse(dialect: str, xml: str, first: int = 1) -> tuple[list[PageTokens], str | None]:
-    """S1 for both paths: (pages, None), or ([], quarantine error) when
-    the XML is malformed or one of its values is not a number.  A page
-    without a number is numbered by its position in the doc, ``first``
-    being the position of the first page in ``xml`` (S7 stage 2 parses
-    one page piece at a time)."""
+def _parse(dialect: str, xml: str, first: int = 1) -> tuple[list[PageTokens], list[int], str | None]:
+    """S1 for both paths and the narrow path's ``units_of``: (pages, the
+    starts of ``fastparse.page_cuts``, None), or ([], starts, quarantine
+    error) when the XML is malformed or one of its values is not a
+    number.  The parser walks the same cuts.  A page without a number is
+    numbered by its position in the doc, ``first`` being the position of
+    the first page in ``xml`` (S7 stage 2 parses one page piece at a
+    time)."""
+    cuts = fastparse.page_cuts(dialect, xml)
+    starts = [c[0] for c in cuts]
     try:
-        pages = _PARSERS[dialect](xml)
+        pages = _PARSERS[dialect](xml, cuts)
     except ET.ParseError as e:
-        return [], f"xml-parse-error: {e}"
+        return [], starts, f"xml-parse-error: {e}"
     except (ValueError, TypeError, IndexError) as e:
-        return [], f"xml-content-error: {e}"
+        return [], starts, f"xml-content-error: {e}"
     for n, page in enumerate(pages, first):
         if page.number is None:
             page.number = n
-    return pages, None
+    return pages, starts, None
 
 
 # --------------------------------------------------------------------------
@@ -682,12 +686,6 @@ def null_field_error(spans: list) -> str | None:
     return None
 
 
-def page_starts(dialect: str, xml: str) -> list[int]:
-    """Source position of each page start tag (``spec.PAGE_START_RE``:
-    normative, shared with the oracle)."""
-    return [m.start() for m in spec.PAGE_START_RE[dialect].finditer(xml)]
-
-
 def media_positions(chunks: list[dict], starts: list[int], media: list[dict], n_units: int) -> list:
     """The one media anchor, for every dialect: the 0-based position of
     the unit each media span follows (-1 = before the first).  Its anchor
@@ -707,10 +705,10 @@ def reading_order(spans: list[dict], units_of) -> tuple[str, list, str | None]:
     ``spans`` are in offset order.  The first chunk kind picks the
     dialect, whose chunks (both XML kinds, or HTML) are joined.
     ``units_of(dialect, text) -> (units, starts, err)`` gives the units
-    and their source positions: ``_pages`` on the narrow XML path,
-    ``page_pieces`` on the salted one, ``html_kernel``'s records for
-    HTML.  Returns (dialect, items, err); without chunks, dialect is ''
-    and items the media."""
+    and their source positions: ``_parse`` on the narrow XML path,
+    ``page_pieces`` on the salted one (both cut by ``fastparse.page_cuts``),
+    ``html_kernel``'s records for HTML.  Returns (dialect, items, err);
+    without chunks, dialect is '' and items the media."""
     dialect = next((s["kind"] for s in spans if s["kind"] in spec.CHUNK_KINDS), "")
     media = [s for s in spans if s["kind"] == spec.KIND_MEDIA]
     if not dialect:
@@ -735,13 +733,6 @@ def reading_order(spans: list[dict], units_of) -> tuple[str, list, str | None]:
 # --------------------------------------------------------------------------
 
 
-def _pages(dialect: str, xml: str) -> tuple[list[PageTokens], list[int], str | None]:
-    """The narrow path's ``units_of``: ``_parse``'s pages and their start
-    tags' positions."""
-    pages, err = _parse(dialect, xml)
-    return pages, page_starts(dialect, xml), err
-
-
 def extract_document_rows(
     doc_id: str, spans: list[dict]
 ) -> tuple[list[dict], str | None]:
@@ -764,7 +755,7 @@ def extract_document_rows(
         from . import html_kernel
 
         return html_kernel.extract_document_rows(doc_id, spans)
-    _, items, err = reading_order(spans, _pages)
+    _, items, err = reading_order(spans, _parse)
     if err is not None:
         return [], err
     return finalize_records(doc_id, layout_records(items)), None
@@ -778,19 +769,21 @@ def extract_document_rows(
 def page_pieces(dialect: str, xml: str) -> tuple[list[str], list[int], str | None]:
     """Stage 1's ``units_of``: (one standalone XML piece per page, the
     pages' start positions, None), or ([], [], 'xml-parse-error: ...').
-    The same expat acceptance as the narrow path, then a regex split
-    with no tree parse; each piece is wrapped by ``repair_page_piece``
-    with the preamble's xmlns declarations.  Assumes page elements do
-    not nest and no entity definitions live in the prologue (true for
-    both dialects)."""
+    The narrow path's expat acceptance and page cut (``fastparse.page_cuts``),
+    no tree parse: a piece is its page's text from start to end, wrapped
+    with the preamble's xmlns declarations (``collect_xmlns``); a page
+    without an end (nested pages) keeps its text up to the next page
+    start, so its doc quarantines.  Assumes no entity definitions live
+    in the prologue (true for both dialects)."""
     try:
         fastparse.validate(xml)
     except ET.ParseError as e:
         return [], [], f"xml-parse-error: {e}"
-    starts = page_starts(dialect, xml)
+    cuts = fastparse.page_cuts(dialect, xml)
+    starts = [c[0] for c in cuts]
     decls = collect_xmlns(xml[: starts[0]]) if starts else ""
-    ends = [*starts[1:], len(xml)]
-    return [repair_page_piece(xml[s:e], dialect, decls) for s, e in zip(starts, ends)], starts, None
+    ends = [c[3] if c[3] is not None else nxt for c, nxt in zip(cuts, [*starts[1:], len(xml)])]
+    return [f"<R{decls}>{xml[s:e]}</R>" for s, e in zip(starts, ends)], starts, None
 
 
 _XMLNS_RE = re.compile(r"""(xmlns(?::[\w.-]+)?)\s*=\s*("[^"]*"|'[^']*')""")
@@ -810,25 +803,6 @@ def collect_xmlns(preamble: str) -> str:
     return "".join(f" {k}={v}" for k, v in seen.items())
 
 
-def repair_page_piece(piece: str, dialect: str, decls: str = "") -> str:
-    """Truncate after the page's close tag and wrap for standalone
-    parse.  Handles all close forms the parsers accept: namespaced /
-    whitespace-bearing end tags and self-closing page elements (a
-    piece ending '<Page .../></TET>' must not drag the parent close
-    tags into the wrapped parse).  ``decls`` re-binds the preamble's
-    xmlns declarations on the wrapper (collect_xmlns)."""
-    last = None
-    for last in spec.PAGE_END_RE[dialect].finditer(piece):
-        pass
-    if last is not None:
-        piece = piece[: last.end()]
-    else:
-        m = re.match(r"<[^>]*>", piece)
-        if m is not None and m.group().rstrip().endswith("/>"):
-            piece = piece[: m.end()]  # self-closing page, no close tag
-    return f"<R{decls}>{piece}</R>"
-
-
 def extract_group_records(items, dialect: str) -> tuple[list[dict], str | None]:
     """Stage 2 of the salted path: lay out one page shard.
 
@@ -844,7 +818,7 @@ def extract_group_records(items, dialect: str) -> tuple[list[dict], str | None]:
         if item_type == "media":
             content.append({"text": payload, "media_ref": media_ref})
         elif item_type == "page":
-            pages, err = _parse(dialect, payload, page)
+            pages, _, err = _parse(dialect, payload, page)
             if err is not None:
                 return [], err
             content += pages

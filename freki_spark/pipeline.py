@@ -213,12 +213,12 @@ def extract_simple(df: DataFrame) -> DataFrame:
 
 def _split_doc(doc_id: str, spans) -> list[tuple]:
     """Stage-1 rows of one mega-doc: the kernel's reading order over its
-    page pieces (``kernel.page_pieces``: the same expat acceptance as
-    the narrow path, then a regex split with no tree parse of the whole
-    doc).  Page i goes to salt ``i // per_group``, so a doc has at most
-    SALT_MAX_GROUPS shards, and carries its position i + 1, which
-    numbers it in stage 2 when its element has no number; a media span
-    takes the salt of the page before it (0 in the prologue).  A
+    page pieces (``kernel.page_pieces``: the narrow path's expat
+    acceptance and page cut, ``fastparse.page_cuts``, with no tree parse
+    of the whole doc).  Page i goes to salt ``i // per_group``, so a doc
+    has at most SALT_MAX_GROUPS shards, and carries its position i + 1,
+    which numbers it in stage 2 when its element has no number; a media
+    span takes the salt of the page before it (0 in the prologue).  A
     quarantined doc is one ``error`` row."""
     err = kernel.null_field_error(spans)
     if err is None:
@@ -325,13 +325,14 @@ def extract(df: DataFrame, salt_threshold: int = spec.SALT_SPAN_THRESHOLD) -> Da
       the kernel joins them) holds a comment, CDATA, DTD or processing
       instruction (any ``<!``, or ``<?`` beyond a position-0 XML
       declaration) take the UNSALTED path regardless of size: the
-      salted path's regex page split cannot see markup context, so a
-      ``<Page`` inside a comment would create phantom piece boundaries
-      there — whole-document parsing defines the semantics, so risky
-      docs go where the whole document is parsed.  Where the chunks are
-      cut does not matter.  The check is one JVM-side scan of the
-      joined text (``_risky_markup``), narrow, and ``n > τ`` comes first
-      so that only docs above τ build the text;
+      salted path's page cut (``fastparse.page_cuts``, a lexical scan)
+      cannot see markup context, so a ``<Page`` inside a comment would
+      create phantom piece boundaries there — whole-document parsing
+      defines the semantics, so risky docs go where the whole document
+      is parsed.  Where the chunks are cut does not matter.  The check
+      is one JVM-side scan of the joined text (``_risky_markup``),
+      narrow, and ``n > τ`` comes first so that only docs above τ build
+      the text;
     - docs carrying any ``kind='html'`` span (the HtmlSpec
       main-content dialect) always take the unsalted path: boilerplate
       classification is a whole-document DOM property and HTML has no

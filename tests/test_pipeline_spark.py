@@ -619,7 +619,7 @@ def test_layout_records_concatenate_across_any_split():
         want, err = kernel.extract_document_rows(doc["doc_id"], doc["spans"])
         assert err is None
         spans = sorted(doc["spans"], key=lambda x: x["offset"])
-        _, items, err = kernel.reading_order(spans, kernel._pages)
+        _, items, err = kernel.reading_order(spans, kernel._parse)
         assert err is None and len(items) > 1
         for k in range(len(items) + 1):
             records = kernel.layout_records(items[:k]) + kernel.layout_records(items[k:])
@@ -649,6 +649,138 @@ def test_stage3_assembles_shuffled_shards_in_doc_order():
     want, err = kernel.extract_document_rows(doc["doc_id"], doc["spans"])
     assert err is None and out["error"].tolist() == [None]
     assert out["spans"].tolist() == [want]
+
+
+def _salted_in_python(doc):
+    """S7's three stages run in Python, without Spark: (spans, error)."""
+    import pandas as pd
+
+    from freki_spark.pipeline import _stage1_split, _stage2_layout, _stage3_assemble
+
+    st1 = pd.concat(list(_stage1_split(iter([pd.DataFrame([doc])]))))
+    st2 = pd.concat([_stage2_layout(shard) for _, shard in st1.groupby(["doc_id", "salt"])])
+    out = _stage3_assemble(st2)
+    return out["spans"].iloc[0], out["error"].iloc[0]
+
+
+def _rows(spans_err):
+    spans, err = spans_err
+    return [[s["kind"], s["text"], s["media_ref"], s["offset"]] for s in spans], err
+
+
+# a page element's name, number attribute and size attributes
+_PAGE_TAG = {
+    spec.KIND_TETML: ("Page", "number", 'width="612" height="792"'),
+    spec.KIND_PDFMINER: ("page", "id", 'bbox="0,0,612,792"'),
+}
+_ROOT = {spec.KIND_TETML: ("<TET>", "</TET>"), spec.KIND_PDFMINER: ("<pages>", "</pages>")}
+
+
+def _page(dialect, i, extra, body):
+    """Page ``i`` with its size and ``extra`` attributes; self-closing
+    when ``body`` is None."""
+    tag, num, size = _PAGE_TAG[dialect]
+    head = f'<{tag} {num}="{i}" {size}{extra}'
+    return head + "/>" if body is None else f"{head}>{body}</{tag}>"
+
+
+def _words(dialect, text, nl=""):
+    """One word per word of ``text``, on one line; ``nl`` goes between
+    the elements."""
+    out = []
+    for k, w in enumerate(text.split()):
+        x = 72 + 40 * k
+        if dialect == spec.KIND_TETML:
+            box = f'<Box llx="{x}" lly="700" urx="{x + 30}" ury="712"/>'
+            out.append(f'<Word><Text>{w}</Text>{nl}{box}<Glyph font="F0" size="12.0">{w[0]}</Glyph></Word>')
+        else:
+            glyphs = "".join(
+                f'<text font="F0" bbox="{x + 5 * i},700,{x + 5 * i + 5},712" size="12.0">{c}</text>'
+                for i, c in enumerate(w)
+            )
+            out.append(f'<textline bbox="{x},700,{x + 30},712">{glyphs}{nl}<text>{nl or " "}</text></textline>')
+    return nl.join(out)
+
+
+def _doc_with_media_between(doc_id, dialect, pages, between="\n"):
+    """One chunk per page, the root tags riding on the first and the
+    last; ``between`` opens every chunk but the first, and a media span
+    sits between each two chunks, so that it follows the page before."""
+    head, tail = _ROOT[dialect]
+    chunks = [head + pages[0], *(between + p for p in pages[1:])]
+    chunks[-1] += tail
+    spans = []
+    for k, c in enumerate(chunks):
+        spans.append({"kind": dialect, "text": c, "media_ref": "", "offset": len(spans)})
+        if k < len(chunks) - 1:
+            media_ref = f"img://{doc_id}/{k}"
+            spans.append({"kind": "media", "text": "", "media_ref": media_ref, "offset": len(spans)})
+    return {"doc_id": doc_id, "spans": spans}
+
+
+def _pages_and_media(rows):
+    """The output order of the doc's blocks (``p<page>``) and media
+    (``m``)."""
+    out = []
+    for kind, text, _, _ in rows:
+        if kind == "media":
+            out.append("m")
+        elif text.startswith("doc_id="):
+            out.append("p" + re.search(r" page=(\d+) ", text).group(1))
+    return out
+
+
+@pytest.mark.parametrize("selfclosing", [True, False], ids=["self-closing", "open"])
+@pytest.mark.parametrize("dialect", [spec.KIND_TETML, spec.KIND_PDFMINER])
+def test_page_attribute_holding_gt_on_every_path(dialect, selfclosing):
+    """A page whose quoted attribute value holds '/>' extracts alike on
+    S7, the narrow path and the oracle.  S7 once ended a self-closing
+    page's piece at that '>' and quarantined the doc."""
+    from freki_spark import kernel, oracle
+
+    pages = [
+        _page(dialect, 1, " q='>'", _words(dialect, "first page")),
+        _page(dialect, 2, ' note="a/>b"', None if selfclosing else _words(dialect, "mid page")),
+        _page(dialect, 3, "", _words(dialect, "last page")),
+    ]
+    doc = _doc_with_media_between("gt", dialect, pages)
+    want = _rows(oracle.extract_document(doc["doc_id"], doc["spans"]))
+    assert want[1] is None and _pages_and_media(want[0]) == (
+        ["p1", "m", "m", "p3"] if selfclosing else ["p1", "m", "p2", "m", "p3"]
+    )
+    assert _rows(kernel.extract_document_rows(doc["doc_id"], doc["spans"])) == want
+    assert _rows(_salted_in_python(doc)) == want
+
+
+@pytest.mark.parametrize("dialect", [spec.KIND_TETML, spec.KIND_PDFMINER])
+def test_cr_and_crlf_line_endings_on_every_path(dialect):
+    """CRLF and bare CR in page attribute values, in text and between
+    pages, with media between pages: the fast parser reads the doc as
+    the ET walk does, and narrow == oracle == S7.  The page cut is made
+    in the raw text, where the media anchor reads its starts."""
+    from freki_spark import fastparse, kernel, oracle
+
+    tag, num, size = _PAGE_TAG[dialect]
+    pages = [
+        f'<{tag} {num}="{i}" {size} note="a{nl}b">{nl}{_words(dialect, words, nl)}{nl}</{tag}{nl}>'
+        for i, (nl, words) in enumerate([("\r\n", "one two"), ("\r", "three four"), ("\r\n", "five six")], 1)
+    ]
+    doc = _doc_with_media_between("cr", dialect, pages, between="\r\n\r")
+    xml = "".join(s["text"] for s in doc["spans"] if s["kind"] == dialect)
+    cuts = fastparse.page_cuts(dialect, xml)
+    if dialect == spec.KIND_TETML:
+        fast, et = fastparse.parse_tetml_fast(xml, cuts, kernel.PageTokens), kernel._parse_tetml_et(xml)
+    else:
+        fast, et = fastparse.parse_pdfminer_fast(xml, cuts, kernel.PageTokens), kernel._parse_pdfminer_et(xml)
+
+    def tokens(pages):
+        return [(p.number, p.width, p.height, p.texts, p.fkeys, p.box.tolist()) for p in pages]
+
+    assert fast is not None and tokens(fast) == tokens(et) and len(et) == 3
+    want = _rows(oracle.extract_document(doc["doc_id"], doc["spans"]))
+    assert want[1] is None and _pages_and_media(want[0]) == ["p1", "m", "p2", "m", "p3"]
+    assert _rows(kernel.extract_document_rows(doc["doc_id"], doc["spans"])) == want
+    assert _rows(_salted_in_python(doc)) == want
 
 
 def test_selfclosing_final_page_salted_parity(spark):
